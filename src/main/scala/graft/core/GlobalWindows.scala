@@ -74,7 +74,8 @@ private[graft] object GlobalWindows {
     * sources estimate from file bytes, and un-estimable plans default
     * to Long.MaxValue — i.e. the tier only fires when Spark can PROVE
     * the input small, a big frame can never be mis-routed into one
-    * task by a missing estimate, and the threshold is deliberately a
+    * task by a missing estimate (and plans holding a Generate or a
+    * Join never take the tier, see [[materialize]]), and the threshold is deliberately a
     * couple orders of magnitude under an executor's memory. Same
     * adaptive-tier design as Dedup.connectedComponents' local
     * union-find crossover. 0 disables (the spec seam). */
@@ -212,8 +213,18 @@ private[graft] object GlobalWindows {
                   calls: Seq[Call]): (DataFrame, Seq[String]) = {
     val smallBytes = df.sparkSession.conf
       .get(SmallFrameBytesKey, DefaultSmallFrameBytes.toString).toLong
-    if (smallBytes > 0 &&
-        df.queryExecution.optimizedPlan.stats.sizeInBytes <= smallBytes)
+    // A present-but-wrong estimate can still mis-route: the size-only
+    // stats visitor passes Generate through at about the child's bytes
+    // and models joins from multiplied child sizes, so a small scan that
+    // explodes upstream would read as provably small. The tier also
+    // requires the optimized plan to hold no row-multiplying operator.
+    val plan = df.queryExecution.optimizedPlan
+    val mayMultiplyRows = plan.exists {
+      case _: org.apache.spark.sql.catalyst.plans.logical.Generate => true
+      case _: org.apache.spark.sql.catalyst.plans.logical.Join => true
+      case _ => false
+    }
+    if (smallBytes > 0 && !mayMultiplyRows && plan.stats.sizeInBytes <= smallBytes)
       return materializeSmall(df, ordCols, calls)
     val needsOrd = calls.exists {
       case _: Rank | _: OrderIdx => false

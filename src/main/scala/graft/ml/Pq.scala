@@ -10,27 +10,18 @@ import graft.functions.PqKernels
   * floats = 256 B → 8 B, 32×), and query scoring becomes `m` table
   * lookups per candidate instead of D multiplies (asymmetric
   * distance: the query side stays exact, only the corpus is
-  * quantized). Composed with the existing IVF pruning
-  * ([[Similarity]]) this is IVF-PQ — the architecture a 100-TB
-  * embedding corpus actually ships: inverted lists bound the
+  * quantized). Composed with IVF pruning (the shared [[Ivf]]
+  * lifecycle, an ADC scorer) this is IVF-PQ: inverted lists bound the
   * candidates, PQ codes bound the bytes per candidate, an optional
   * exact re-rank of the short list restores precision.
   *
-  * Spark-first shape:
-  *  - [[train]]: deterministic hash-ordered seed sample, then Lloyd
-  *    rounds where assignment is the row-local [[PqKernels.pqCodes]]
-  *    kernel (the codebook broadcasts inside the expression) and the
-  *    update is ONE per-(subspace, code, dim) mean aggregation —
-  *    each round moves N×D values through one exchange, the same IO
-  *    as any corpus pass. Train on a sample at real scale; the
-  *    model is data, not plan.
-  *  - [[encode]]: map-only projection (codes + true norm). The norm
-  *    is kept EXACT so the only cosine error is the quantized
-  *    direction, and gain-scaled duplicates still rank identically.
+  *  - [[train]]: hash-ordered seed sample, then Lloyd rounds whose
+  *    assignment is the row-local [[PqKernels.pqCodes]] kernel and
+  *    whose update is ONE per-(subspace, code, dim) mean aggregation.
+  *  - [[encode]]: map-only codes + EXACT norm, so the only cosine
+  *    error is the quantized direction.
   *  - [[adcTopK]] / [[ivfPqTopK]]: per-query m×k table once, then
-  *    lookups; candidates fold into the bounded [[TopK]] partial
-  *    aggregate — queries × tasks × k rows to the shuffle, never the
-  *    corpus.
+  *    lookups folded into the bounded [[TopK]] partial aggregate.
   *
   * Cosine scores are approximate by construction (recall/precision
   * spec-pinned, like IVF); exactness-critical paths should re-rank
@@ -47,15 +38,11 @@ object Pq {
     def dim: Int = m * subDim
   }
 
-  /** Train per-subspace codebooks. `k ≤ 256` (byte codes); `dim`
-    * must divide evenly into `m` subspaces. The corpus must hold at
-    * least `k` non-null vectors (seed sample = first k in
-    * deterministic xxhash64(id) order — content-stable on any
-    * partitioning). `iters` Lloyd rounds refine; empty cells keep
-    * their previous centroid (standard practice). Only the iters=0
-    * codebook is BIT-reproducible: Lloyd means come from a
-    * distributed double avg whose value depends on accumulation
-    * order (deterministic up to float round-off). */
+  /** Train per-subspace codebooks. `k ≤ 256` (byte codes); `dim` must
+    * divide into `m` subspaces; the corpus needs ≥ `k` non-null vectors
+    * (seed sample = first k in xxhash64(id) order). `iters` Lloyd rounds
+    * refine; empty cells keep their centroid. Only iters=0 is
+    * BIT-reproducible (Lloyd means are a distributed double avg). */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
             m: Int = 8, k: Int = 256, iters: Int = 2,
             seed: Long = 42L): PqModel =
@@ -63,16 +50,12 @@ object Pq {
       .filter(col("__v").isNotNull), m, k, iters, seed, residual = false)
 
   /** Train an IVFADC codebook (Jégou et al. 2011 §IV) on per-list
-    * RESIDUALS `x − centroid(assignedList(x))` instead of raw vectors.
-    * Residual energy is a fraction of vector energy (the list centroid
-    * carries the bulk of the signal exactly), so the same m bytes buy
-    * far more directional resolution — the r13 ×64 stress measured
-    * raw-codebook default recall at 0.354 where the IVF candidate set
-    * alone supports 0.408; residual coding is the structural fix.
-    * `cents` is the (list_id, cvec) table the index will probe with —
-    * codes trained here are only meaningful under THESE centroids
-    * (build and probe share them by the frozen-geometry contract).
-    * One extra assignment pass vs [[train]]; same determinism notes. */
+    * RESIDUALS `x − centroid(assignedList(x))` instead of raw vectors:
+    * the list centroid carries the bulk of the signal exactly, so the
+    * same m bytes buy far more directional resolution (the r13 ×64
+    * stress: raw-codebook recall 0.354 where the IVF candidate set
+    * supports 0.408). Codes are only meaningful under THESE `cents`
+    * (list_id, cvec) — the table the index will probe with. */
   def trainResidual(corpus: DataFrame, idCol: String, vecCol: String,
                     cents: DataFrame, m: Int = 8, k: Int = 256,
                     iters: Int = 2, seed: Long = 42L): PqModel =
@@ -80,20 +63,13 @@ object Pq {
       corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
       idCol, vecCol, cents, m, k, iters, seed)
 
-  /** [[trainResidual]] over a frame that ALREADY carries `list_id` —
-    * the shared-assignment entry (r14 optimization): every residual
-    * caller (ivfPqTopK / ivfPqTopKCalibrated / buildIvfPqIndex) also
-    * needs the assignment for the ENCODE step, so assigning inside
-    * trainResidual ran the bestCosine kernel over the corpus twice per
-    * call. Callers now assign once (persisted) and hand the frame to
-    * both training and encode. Values are bit-identical: same kernel,
-    * same centroid rows, per-row deterministic argmax. */
+  /** [[trainResidual]] over a frame that ALREADY carries `list_id`, so
+    * the IVF lifecycle's one assignment serves training AND encode. */
   private[ml] def trainResidualAssigned(assigned: DataFrame, idCol: String,
                                         vecCol: String, cents: DataFrame,
                                         m: Int, k: Int, iters: Int,
                                         seed: Long): PqModel = {
-    // materialized residual array (zip_with is per-row O(dim) — fine;
-    // the Lloyd mean update below needs the VALUES, not just codes)
+    // materialized residuals: the Lloyd update needs the VALUES
     val vecs = assigned
       .join(broadcast(cents.select(col("list_id"), col("cvec"))), Seq("list_id"))
       .select(col(idCol).as("__id"),
@@ -110,69 +86,53 @@ object Pq {
     require(m >= 1, s"m must be >= 1, got $m")
     require(k >= 1 && k <= 256, s"k must be in [1, 256] (byte codes), got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    // Determinism note: the SEED SAMPLE is bit-reproducible on any
-    // partitioning (hash-ordered limit), so iters=0 codebooks are
-    // bit-identical across runs. Lloyd rounds aggregate centroid means
-    // with a distributed avg over doubles, whose result depends on
-    // partition-level accumulation order — refined codebooks are
-    // deterministic up to float round-off, not bit-identical.
-    if (iters > 0) vecs.persist() // read once per Lloyd round + the seed scan
-    // deterministic seed sample: first k vectors in hash order
-    val sample = vecs
-      .orderBy(xxhash64(col("__id"), lit(seed)), col("__id"))
-      .limit(k)
-      .select(col("__v").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(sample.length == k,
-      s"Pq.train: corpus holds only ${sample.length} non-null vectors — " +
-        s"k=$k needs at least k; lower k or widen the corpus")
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    require(sample.forall(_.length == dim),
-      "Pq.train: seed sample contains ragged vector lengths")
-    val subDim = dim / m
-    var codebook = new Array[Double](m * k * subDim)
-    var mi = 0
-    while (mi < m) {
-      var j = 0
-      while (j < k) {
-        System.arraycopy(sample(j), mi * subDim, codebook,
-          (mi * k + j) * subDim, subDim)
-        j += 1
+    // the persist is released on every exit, the requires' included
+    Ivf.holding { hold =>
+      if (iters > 0) hold(vecs) // read once per Lloyd round + the seed scan
+      // deterministic seed sample: first k vectors in hash order
+      val sample = vecs
+        .orderBy(xxhash64(col("__id"), lit(seed)), col("__id"))
+        .limit(k)
+        .select(col("__v").cast("array<double>"))
+        .collect().map(_.getSeq[Double](0).toArray)
+      require(sample.length == k,
+        s"Pq.train: corpus holds only ${sample.length} non-null vectors — " +
+          s"k=$k needs at least k; lower k or widen the corpus")
+      val dim = sample.head.length
+      require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
+      require(sample.forall(_.length == dim),
+        "Pq.train: seed sample contains ragged vector lengths")
+      val subDim = dim / m
+      // laid out [sub][centroid][dim], seeded from the sample's slices
+      var codebook = (0 until m).flatMap(mi => (0 until k).flatMap(j =>
+        sample(j).slice(mi * subDim, (mi + 1) * subDim))).toArray
+      for (_ <- 0 until iters) {
+        // assign (row-local kernel) → per-(sub, code, dim) means
+        val assigned = vecs.select(
+          posexplode(PqKernels.pqCodes(col("__v"), codebook, m, k, subDim,
+            asInts = true)).as(Seq("__mi", "__code")),
+          col("__v"))
+          .select(col("__mi"), col("__code"),
+            posexplode(slice(col("__v"), col("__mi") * subDim + 1,
+              lit(subDim))).as(Seq("__d", "__x")))
+        val means = assigned
+          .groupBy(col("__mi"), col("__code"), col("__d"))
+          .agg(avg(col("__x").cast("double")).as("__mean"))
+          .collect()
+        val next = codebook.clone() // empty cells keep previous centroids
+        means.foreach { r =>
+          val mi2 = r.getInt(0); val c = r.getInt(1); val d = r.getInt(2)
+          next((mi2 * k + c) * subDim + d) = r.getDouble(3)
+        }
+        codebook = next
       }
-      mi += 1
+      PqModel(m, k, subDim, codebook, residual)
     }
-    var it = 0
-    while (it < iters) {
-      // assign (row-local kernel) → per-(sub, code, dim) means
-      val assigned = vecs.select(
-        posexplode(PqKernels.pqCodes(col("__v"), codebook, m, k, subDim,
-          asInts = true)).as(Seq("__mi", "__code")),
-        col("__v"))
-        .select(col("__mi"), col("__code"),
-          posexplode(slice(col("__v"), col("__mi") * subDim + 1,
-            lit(subDim))).as(Seq("__d", "__x")))
-      val means = assigned
-        .groupBy(col("__mi"), col("__code"), col("__d"))
-        .agg(avg(col("__x").cast("double")).as("__mean"))
-        .collect()
-      val next = codebook.clone() // empty cells keep previous centroids
-      means.foreach { r =>
-        val mi2 = r.getInt(0); val c = r.getInt(1); val d = r.getInt(2)
-        next((mi2 * k + c) * subDim + d) = r.getDouble(3)
-      }
-      codebook = next
-      it += 1
-    }
-    if (iters > 0) vecs.unpersist()
-    PqModel(m, k, subDim, codebook, residual)
   }
 
-  /** Append `codesCol` (m bytes) and `normCol` (exact ‖v‖) — the
-    * compressed index rows. Map-only; null/ragged vectors yield null
-    * codes (auditable, never dropped silently). Raw-codebook models
-    * only; a residual model refuses (its codes are meaningless without
-    * the per-row list anchor — use [[encodeResidual]]). */
+  /** Append `codesCol` (m bytes) and `normCol` (exact ‖v‖). Map-only;
+    * null/ragged vectors yield null codes, never dropped silently.
+    * Raw-codebook models only ([[encodeResidual]] for residual ones). */
   def encode(corpus: DataFrame, vecCol: String, model: PqModel,
              codesCol: String = "pq_codes", normCol: String = "pq_norm"): DataFrame = {
     require(!model.residual,
@@ -187,12 +147,10 @@ object Pq {
 
   /** Residual-mode (IVFADC) encode over a list-ASSIGNED frame: codes of
     * `x − centroid(list_id)` under a [[trainResidual]] codebook, plus
-    * the EXACT raw-vector norm (the list offset and the norm stay
-    * exact; only the within-list displacement is quantized). Left-joins
-    * the (broadcast-tiny) centroid table so a null list_id (null
-    * vector) yields null codes — same never-drop contract as
-    * [[encode]]. Map-only: one broadcast hash join + one fused kernel,
-    * no residual array materialized. */
+    * the EXACT raw-vector norm. Left-joins the broadcast centroid table
+    * so a null list_id (null vector) yields null codes — the
+    * never-drop contract of [[encode]]; one fused kernel, no residual
+    * array materialized. */
   def encodeResidual(assigned: DataFrame, vecCol: String, model: PqModel,
                      cents: DataFrame, codesCol: String = "pq_codes",
                      normCol: String = "pq_norm"): DataFrame = {
@@ -210,104 +168,29 @@ object Pq {
 
   /** [[encode]] or [[encodeResidual]] by the model's own flag — the
     * one switch every IVF-PQ build/probe path routes through. */
-  private def encodeFor(assigned: DataFrame, vecCol: String, model: PqModel,
-                        cents: DataFrame): DataFrame =
+  private[ml] def encodeFor(assigned: DataFrame, vecCol: String, model: PqModel,
+                            cents: DataFrame): DataFrame =
     if (model.residual) encodeResidual(assigned, vecCol, model, cents)
     else encode(assigned, vecCol, model)
 
-  // -------------------------------------------------------------------
-  // shared ADC plumbing (one code path for adcTopK / ivfPqTopK /
-  // ivfPqTopKIndexed — the next ADC change lands once)
-  // -------------------------------------------------------------------
-
-  /** Collect a tiny frame into a driver-local relation. Small frames
-    * referenced more than once (centroid tables, probe sets) become
-    * LocalRelations instead of persisted plans — every consumer reads
-    * them for free and nothing accumulates in the session cache
-    * across repeated calls in a long-lived session. */
-  private def localize(df: DataFrame): (DataFrame, Array[org.apache.spark.sql.Row]) = {
-    val rows = df.collect()
-    (df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
-      rows)
-  }
-
-  /** Query side of an ADC probe: per-query m×k lookup table + EXACT
-    * query norm (the only approximation stays in the corpus codes). */
-  private def adcQuerySide(queries: DataFrame, qidCol: String, qvecCol: String,
-                           model: PqModel): DataFrame =
-    queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__q"))
-      .withColumn("__table", PqKernels.pqTable(col("__q"), model.codebook,
+  /** Query side of an ADC probe over a (query_id, __q) frame: per-query
+    * m×k lookup table + EXACT query norm (the only approximation stays
+    * in the corpus codes). */
+  private[ml] def adcQuerySide(q: DataFrame, model: PqModel): DataFrame =
+    q.withColumn("__table", PqKernels.pqTable(col("__q"), model.codebook,
         model.m, model.k, model.subDim))
       .withColumn("__qn", sqrt(Similarity.dot(col("__q"), col("__q"))))
 
   /** ADC cosine for a candidate row carrying codes `__c`, norm `__n`
-    * and the query side's `__table`/`__qn`. Residual mode (IVFADC)
-    * adds the exact per-(query, list) offset `__qc` = ⟨q, c_list⟩
-    * riding the probe row: ⟨q, x⟩ = ⟨q, c⟩ + ⟨q, x−c⟩ ≈ __qc + Σ
-    * lookups — the SAME per-query table serves every list because the
-    * decomposition is in inner-product space (no per-list tables, the
-    * property that keeps residual coding free at probe time). */
-  private def adcCos(pqK: Int, residual: Boolean): org.apache.spark.sql.Column = {
+    * and the query side's `__table`/`__qn`. Residual mode adds the
+    * exact offset `__qc` = ⟨q, c_list⟩ riding the probe row:
+    * ⟨q, x⟩ = ⟨q, c⟩ + ⟨q, x−c⟩, so ONE per-query table serves every
+    * list. */
+  private[ml] def adcCos(pqK: Int, residual: Boolean): org.apache.spark.sql.Column = {
     val adc = PqKernels.pqAdcScore(col("__c"), col("__table"), pqK)
     val ip = if (residual) col("__qc") + adc else adc
     when(col("__n") > 0 && col("__qn") > 0, ip / (col("__n") * col("__qn")))
       .otherwise(lit(0.0)).as("cos_sim")
-  }
-
-  /** Rank IVF lists per query against the (tiny) centroid table, keep
-    * the top `nProbe` — the probe set. Carries `__qc` = ⟨q, c_list⟩
-    * (recovered from the ranking cosine × the two norms — zero extra
-    * kernel passes) for residual-mode ADC. Returned as a driver-local
-    * relation (queries × nProbe rows; the query side is
-    * broadcast-small by contract) because it is consumed two ways —
-    * partition-pruning literal and broadcast candidate join — and a
-    * LocalRelation serves both without a persist leaking into the
-    * session cache. Also returns the distinct probed list ids. */
-  private def probeSet(q: DataFrame, cents: DataFrame, nProbe: Int)
-      : (DataFrame, Seq[Long]) = {
-    val centsN = cents.withColumn("__cn", Similarity.norm(col("cvec")))
-    val qLists = q.crossJoin(broadcast(centsN))
-      .withColumn("__sim", Similarity.cosine(col("__q"), col("cvec")))
-      .withColumn("__qc", col("__sim") * col("__qn") * col("__cn"))
-      .withColumn("__r", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id")).orderBy(col("__sim").desc, col("list_id"))))
-      .filter(col("__r") <= nProbe)
-      .select(col("query_id"), col("__table"), col("__qn"), col("__qc"),
-        col("list_id"))
-    val (local, rows) = localize(qLists)
-    (local, rows.map(_.getAs[Long]("list_id")).distinct.toSeq)
-  }
-
-  /** Shared candidate scoring + bounded top-k + optional exact
-    * re-rank. `cands` carries (nn_id, __c, __n, list_id); the probe
-    * side joins in by list id via broadcast. `rerank > 0` re-scores
-    * the top-max(rerank, k) ADC survivors with exact cosine against
-    * `vecSource` (`srcIdCol`, `srcVecCol`) — a queries×rerank-row
-    * join back, negligible next to the scan it replaces. */
-  private def adcScoreTopK(cands: DataFrame, qProbe: DataFrame, pqK: Int,
-                           k: Int, rerank: Int,
-                           vecSource: DataFrame, srcIdCol: String, srcVecCol: String,
-                           queries: DataFrame, qidCol: String, qvecCol: String,
-                           residual: Boolean = false): DataFrame = {
-    val cand = cands
-      .filter(col("__c").isNotNull)
-      .join(broadcast(qProbe), Seq("list_id"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"), adcCos(pqK, residual))
-    if (rerank <= 0) TopK.perQuery(cand, k)
-    else {
-      val shortList = TopK.perQuery(cand, math.max(rerank, k))
-        .select(col("query_id"), col("nn_id"))
-      val withVecs = shortList
-        .join(vecSource.select(col(srcIdCol).as("nn_id"),
-          col(srcVecCol).as("__v")), Seq("nn_id"))
-        .join(queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__q")),
-          Seq("query_id"))
-        .select(col("query_id"), col("nn_id"),
-          Similarity.cosine(col("__v"), col("__q")).as("cos_sim"))
-      TopK.perQuery(withVecs, k)
-    }
   }
 
   /** Full-scan ADC top-k over an [[encode]]d corpus: approximate
@@ -323,7 +206,8 @@ object Pq {
         "flat ADC scans take a raw-codebook model; use ivfPqTopK for " +
         "residual mode")
     Similarity.guardQueryBroadcast(queries, qvecCol, queryBudget, "adcTopK")
-    val q = adcQuerySide(queries, qidCol, qvecCol, model)
+    val q = adcQuerySide(queries.select(col(qidCol).as("query_id"),
+      col(qvecCol).as("__q")), model)
     val paired = encoded
       .select(col(idCol).as("nn_id"), col(codesCol).as("__c"), col(normCol).as("__n"))
       .filter(col("__c").isNotNull)
@@ -334,79 +218,6 @@ object Pq {
     TopK.perQuery(scored, k)
   }
 
-  /** Persist an IVF-PQ index: codebook + geometry (one model row —
-    * the parameters live IN the index and are read back at probe
-    * time, so build and probe cannot desync; the NearDupIndex
-    * contract), IVF centroids, and the encoded corpus partitioned by
-    * list id (16-byte codes + norm per row — the 100-TB layout: a
-    * probe opens only the probed list partitions, and each holds
-    * bytes, not vectors). Vectors are NOT stored — that is the point
-    * of PQ; exact re-rank at probe time joins back to whatever
-    * source-of-truth table holds them. `residual = true` (default)
-    * stores IVFADC codes ([[trainResidual]]); the flag is versioned
-    * into the model row, so probes serve raw and residual indexes
-    * alike and a pre-r14 index (no column) reads as raw. */
-  def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                      path: String, m: Int = 16, pqK: Int = 256,
-                      nLists: Int = 0, iters: Int = 2,
-                      seed: Long = 42L, residual: Boolean = true): Unit = {
-    val spark = corpus.sparkSession
-    val lists = if (nLists > 0) nLists
-      else Similarity.autoNLists(corpus.count()) // nLists <= 0: √N self-sizing
-    // centroids FIRST: residual training quantizes x − centroid(list),
-    // so the codebook is a function of the centroid table
-    val (cents, _) = localize(Similarity.centroids(corpus, idCol, vecCol,
-      lists, refineIters = 1, seed = seed))
-    // ONE assignment pass serves residual training AND the encode/write
-    // (r14 — trainResidual used to assign internally, a second full
-    // bestCosine corpus pass per build). Persisted for the duration of
-    // the build, released before returning. The `observe` metrics fire
-    // on whichever action materializes the frame first (training's
-    // seed-sample job in residual mode, the write otherwise) — either
-    // way they see every row exactly once, so the drift baseline is
-    // unchanged.
-    val (assigned, obs) = IndexStats.observed(Similarity.assignListsWithSim(
-      corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
-      "graft_ivfpq_build")
-    if (residual)
-      assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val model = if (residual)
-      trainResidualAssigned(assigned, idCol, vecCol, cents, m, pqK, iters, seed)
-    else train(corpus, idCol, vecCol, m, pqK, iters, seed)
-    import spark.implicits._
-    // `residual` is VERSIONED into the stored model row: a probe reads
-    // the flag back, so raw and residual indexes coexist and a pre-r14
-    // index (no column) reads as raw — ivfPqTopKIndexed serves both
-    Seq((model.m, model.k, model.subDim, model.codebook.toSeq, model.residual))
-      .toDF("m", "k", "sub_dim", "codebook", "residual")
-      .write.mode("overwrite").parquet(s"$path/model")
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    encodeFor(assigned, vecCol, model, cents)
-      .select(col(idCol), col("pq_codes"), col("pq_norm"), col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
-    if (residual) assigned.unpersist()
-    // drift baseline (generation 0) for appendToIvfPqIndex — observed
-    // on the first materializing job, no extra corpus pass
-    IndexStats.write(spark, path, generation = 0L,
-      IndexStats.fromObs(obs), overwrite = true)
-  }
-
-  /** Append a batch to a persisted [[buildIvfPqIndex]] index without
-    * retraining: the batch is encoded under the FROZEN stored codebook
-    * and assigned under the FROZEN stored centroids (both read back
-    * from the index — build and probe cannot desync, and neither can
-    * an append), then written as delta partitions into the same
-    * `list_id=` layout. Partition pruning and every probe path work
-    * unchanged over the union of build + append files.
-    *
-    * Drift accounting is the IVF contract ([[Similarity
-    * .appendToIvfIndex]]): per-batch mean angular D² to the assigned
-    * centroid vs the build baseline stored in `path/stats`;
-    * drift > 1.5 logs the rebuild recommendation and
-    * `rebuildRecommended` flags it to callers. Note the CODEBOOK ages
-    * too — centroid drift is its leading indicator (both are trained
-    * on the same distribution), which is why the one statistic covers
-    * the rebuild decision for the whole index. */
   /** Read a stored model row back into a [[PqModel]]. Pre-r14 indexes
     * have no `residual` column — they were built raw, so absence reads
     * false (the versioning contract that lets one probe path serve
@@ -421,52 +232,63 @@ object Pq {
         mrow.getAs[Boolean]("residual"))
   }
 
-  def appendToIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
-                         path: String): graft.ml.IndexAppendStats = {
-    val spark = batch.sparkSession
-    val model = readModel(spark, path)
-    // fail-fast frozen-geometry contract (r12 ADVICE): the stored
-    // codebook fixes the vector dim (m × subDim); a mismatched batch
-    // would encode garbage codes that surface only as silently wrong
-    // neighbors. Element type is unconstrained here — PQ stores codes,
-    // not vectors, and pqCodes casts per element.
-    IndexStats.validateBatch(batch, vecCol, expectedDim = Some(model.dim),
-      expectedElem = None, caller = "appendToIvfPqIndex")
-    val cents = spark.read.parquet(s"$path/centroids")
-    val (assigned, obs) = IndexStats.observed(Similarity.assignListsWithSim(
-      batch.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
-      "graft_ivfpq_append")
-    encodeFor(assigned, vecCol, model, cents)
-      .select(col(idCol), col("pq_codes"), col("pq_norm"), col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/lists")
-    IndexStats.appendAndReport(spark, path, IndexStats.fromObs(obs),
-      caller = "appendToIvfPqIndex")
+  /** One model row; `residual` is VERSIONED into it, so raw and residual
+    * indexes coexist and one probe path serves both. */
+  private[ml] def writeModel(spark: org.apache.spark.sql.SparkSession, model: PqModel,
+                             path: String): Unit = {
+    import spark.implicits._
+    Seq((model.m, model.k, model.subDim, model.codebook.toSeq, model.residual))
+      .toDF("m", "k", "sub_dim", "codebook", "residual")
+      .write.mode("overwrite").parquet(path)
   }
+
+  /** The IVF lifecycle's ADC scorer trainer: a residual codebook trains
+    * on the shared assignment (one bestCosine pass serves training AND
+    * the encode), a raw one on the corpus itself. */
+  private def adcFit(corpus: DataFrame, idCol: String, vecCol: String, m: Int,
+                     pqK: Int, iters: Int, seed: Long, residual: Boolean): Ivf.Fit =
+    Ivf.Fit(residual, (assigned, cents) => Ivf.Adc(
+      if (residual) trainResidualAssigned(assigned, idCol, vecCol, cents, m, pqK, iters, seed)
+      else train(corpus, idCol, vecCol, m, pqK, iters, seed)))
+
+  /** Persist an IVF-PQ index: the model row (codebook + geometry, read
+    * back at probe time so build and probe cannot desync), IVF
+    * centroids, and the encoded corpus partitioned by list id — m-byte
+    * codes + norm per row, never vectors (exact re-rank joins back to
+    * the source-of-truth table). `residual = true` (default) stores
+    * IVFADC codes ([[trainResidual]]). */
+  def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
+                      path: String, m: Int = 16, pqK: Int = 256,
+                      nLists: Int = 0, iters: Int = 2,
+                      seed: Long = 42L, residual: Boolean = true): Unit =
+    Ivf.build(corpus, idCol, vecCol, path, nLists, refineIters = 1, seed, "kmeans++",
+      adcFit(corpus, idCol, vecCol, m, pqK, iters, seed, residual), "graft_ivfpq_build")
+
+  /** Append a batch to a persisted [[buildIvfPqIndex]] index without
+    * retraining: encoded under the FROZEN stored codebook and assigned
+    * under the FROZEN stored centroids, written as delta partitions
+    * into the same layout. Drift accounting is the IVF contract
+    * ([[Similarity.appendToIvfIndex]]). The CODEBOOK ages too —
+    * centroid drift is its leading indicator (both train on the same
+    * distribution), so the one statistic covers the whole index. */
+  def appendToIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
+                         path: String): graft.ml.IndexAppendStats =
+    Ivf.append(batch, idCol, vecCol, path, Ivf.Adc(readModel(batch.sparkSession, path)),
+      "graft_ivfpq_append", "appendToIvfPqIndex")
 
   /** Rebuild a persisted [[buildIvfPqIndex]] index — the action its
     * drift signal ([[graft.ml.IndexAppendStats.rebuildRecommended]])
-    * points at. UNLIKE the IVF rebuild, this one needs the vector
-    * SOURCE OF TRUTH handed back in: the PQ index stores m-byte codes
-    * and norms, never vectors (that is the point of PQ), so retraining
-    * the codebook and centroids must re-read the real embeddings —
-    * the same `(corpus, idCol, vecCol)` a probe-time re-rank joins.
-    * Geometry (m, pqK) is read from the STORED model so a rebuild
-    * cannot silently change the compression contract; `nLists <= 0`
-    * re-derives √N from the rebuild corpus. The new index is built in
-    * a sibling directory and swapped in (delete + rename per subdir;
-    * single-writer contract), and the drift series resets to a fresh
-    * generation-0 baseline. */
+    * points at. UNLIKE the IVF rebuild it needs the vector SOURCE OF
+    * TRUTH handed back in (the index stores codes, never vectors).
+    * Geometry (m, pqK, residual) is read from the STORED model, so a
+    * rebuild cannot silently change the compression contract;
+    * `nLists <= 0` re-derives √N from the rebuild corpus. */
   def rebuildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                         path: String, nLists: Int = 0, iters: Int = 2,
                         seed: Long = 42L): Unit = {
-    val spark = corpus.sparkSession
-    val stored = readModel(spark, path) // geometry + residual are frozen
-    val tmp = s"$path/.rebuild"
-    buildIvfPqIndex(corpus, idCol, vecCol, tmp,
-      m = stored.m, pqK = stored.k,
-      nLists = nLists, iters = iters, seed = seed, residual = stored.residual)
-    IndexStats.swapIn(spark, path, tmp,
-      Seq("model", "centroids", "lists", "stats"))
+    val stored = readModel(corpus.sparkSession, path)
+    Ivf.rebuild(corpus.sparkSession, path)(tmp => buildIvfPqIndex(corpus, idCol,
+      vecCol, tmp, stored.m, stored.k, nLists, iters, seed, stored.residual))
   }
 
   /** Probe a persisted IVF-PQ index: rank lists against the tiny
@@ -485,120 +307,43 @@ object Pq {
         (rerankFrom != null && rerankIdCol != null && rerankVecCol != null),
       "ivfPqTopKIndexed: rerank > 0 needs rerankFrom + rerankIdCol + " +
         "rerankVecCol (the index stores codes, not vectors)")
-    Similarity.guardQueryBroadcast(queries, qvecCol, queryBudget,
-      "ivfPqTopKIndexed")
-    val model = readModel(spark, path)
-    val cents = spark.read.parquet(s"$path/centroids")
-    // nProbe <= 0: co-scale with the index's list count (autoNProbe)
-    val probes =
-      if (nProbe > 0) nProbe else Similarity.autoNProbe(cents.count().toInt)
-    val q = adcQuerySide(queries, qidCol, qvecCol, model)
-    val (qProbe, probed) = probeSet(q, cents, probes)
-    val lists = spark.read.parquet(s"$path/lists")
-      .filter(col("list_id").isin(probed: _*))
-    val idCol = lists.columns
-      .filterNot(c => c == "list_id" || c == "pq_codes" || c == "pq_norm").head
-    val cands = lists.select(col(idCol).as("nn_id"), col("pq_codes").as("__c"),
-      col("pq_norm").as("__n"), col("list_id"))
-    adcScoreTopK(cands, qProbe, model.k, k, rerank,
-      rerankFrom, rerankIdCol, rerankVecCol, queries, qidCol, qvecCol,
-      residual = model.residual)
+    Ivf.indexed(spark, path, queries, qidCol, qvecCol, k, nProbe, rerank,
+      rerankFrom.select(col(rerankIdCol).as("nn_id"), col(rerankVecCol).as("__v")),
+      Ivf.Adc(readModel(spark, path)), queryBudget, "ivfPqTopKIndexed")
   }
 
   /** IVF-PQ with optional exact re-rank: IVF centroids bound WHICH
     * candidates are touched (nProbe/nLists of the corpus), PQ codes
     * bound the BYTES per candidate, and `rerank > 0` re-scores the
     * top-`rerank` ADC survivors with exact cosine against the true
-    * vectors (a queries×rerank-row join back — negligible next to
-    * the scan it replaces). rerank ≥ k restores bruteForce ordering
-    * whenever ADC's top-rerank contains the true top-k.
-    *
-    * `residual = true` (the r14 default) is IVFADC proper: the
-    * codebook quantizes `x − centroid(list)` ([[trainResidual]]), so
-    * the same m bytes describe only the within-list displacement —
-    * measured on the ×64 rotation fixture this closes most of the gap
-    * between raw-codebook ADC recall and the IVF candidate-set ceiling
-    * at the same nProbe. Probe cost is unchanged: the per-query table
-    * serves every list, plus one scalar ⟨q, c⟩ offset riding each
-    * probe row. `residual = false` keeps the r13 raw-codebook path. */
+    * vectors (a queries×rerank-row join back). rerank ≥ k restores
+    * bruteForce ordering whenever ADC's top-rerank holds the true top-k.
+    * `residual = true` (default) is IVFADC proper ([[trainResidual]]):
+    * same probe cost — one per-query table serves every list, plus one
+    * ⟨q, c⟩ offset per probe row. The residual assignment persist is
+    * LRU-released ([[Ivf.topK]]). */
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
                 queries: DataFrame, qidCol: String, qvecCol: String,
                 k: Int = 10, m: Int = 8, pqK: Int = 256,
                 nLists: Int = 0, nProbe: Int = 0,
                 iters: Int = 2, seed: Long = 42L,
                 rerank: Int = 0, residual: Boolean = true,
-                queryBudget: Long = Similarity.DefaultQueryBudget): DataFrame = {
-    Similarity.guardQueryBroadcast(queries, qvecCol, queryBudget, "ivfPqTopK")
-    val lists = if (nLists > 0) nLists
-      else Similarity.autoNLists(corpus.count()) // nLists <= 0: √N self-sizing
-    val probes = // nProbe <= 0: co-scale with the list space (autoNProbe)
-      if (nProbe > 0) nProbe else Similarity.autoNProbe(lists)
-    // nLists rows: a driver-local relation lets every consumer (residual
-    // training, list assignment, probe ranking) read the heavy centroid
-    // aggregation once, with nothing persisted into the session cache
-    val (cents, _) = localize(Similarity.centroids(corpus, idCol, vecCol,
-      lists, refineIters = 1, seed = seed))
-    // ONE assignment pass serves residual training AND encode (r14:
-    // trainResidual used to assign internally — a second full
-    // bestCosine corpus pass). Persisted because training's driver
-    // actions materialize it before encode re-reads it; released by
-    // LRU like the sigFrame convention (the returned frame is lazy, so
-    // there is no in-library action to pair an unpersist with).
-    val assigned = {
-      val a = Similarity.assignLists(corpus, idCol, vecCol, cents)
-      if (residual)
-        a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else a
-    }
-    val model = if (residual)
-      trainResidualAssigned(assigned, idCol, vecCol, cents, m, pqK, iters, seed)
-    else train(corpus, idCol, vecCol, m, pqK, iters, seed)
-    val encoded = encodeFor(assigned, vecCol, model, cents)
-    val q = adcQuerySide(queries, qidCol, qvecCol, model)
-    val (qProbe, _) = probeSet(q, cents, probes)
-    val cands = encoded.select(col(idCol).as("nn_id"), col("pq_codes").as("__c"),
-      col("pq_norm").as("__n"), col("list_id"))
-    adcScoreTopK(cands, qProbe, model.k, k, rerank,
-      corpus, idCol, vecCol, queries, qidCol, qvecCol,
-      residual = model.residual)
-  }
+                queryBudget: Long = Similarity.DefaultQueryBudget): DataFrame =
+    Ivf.topK(corpus, idCol, vecCol, queries, qidCol, qvecCol, k, nLists, nProbe,
+      rerank, refineIters = 1, seed, "kmeans++",
+      adcFit(corpus, idCol, vecCol, m, pqK, iters, seed, residual), queryBudget, "ivfPqTopK")
 
   /** IVF-PQ with RUNTIME recall calibration — the two-knob counterpart
-    * of [[Similarity.ivfTopKCalibrated]]. The r12 ×64 stress measured
-    * all-defaults IVF-PQ recall@10 = 0.354 on the rotation-amplified
-    * fixture (sweeps/r12_stress_x64_vectors.json, ivf_pq_auto) — worse
-    * than even the uncalibrated IVF's 0.41, because PQ stacks TWO
-    * independent recall losses: probed lists that miss true neighbors
-    * (the IVF loss — more probes buy it back) and ADC quantization
-    * error misranking candidates the probes DID reach (the PQ loss —
-    * more probes buy nothing; only a deeper exact re-rank does).
-    *
-    * Mechanism: train the codebook + centroids and encode/assign the
-    * corpus ONCE (the compact codes frame is persisted — every
-    * escalation step re-probes it), take a bounded deterministic query
-    * sample, build its brute-force ground truth in ONE corpus scan,
-    * then escalate from (autoNProbe, 4·k rerank) toward
-    * (`maxProbeFactor`×, `maxRerankFactor`×) caps. KNOB POLICY: keep
-    * doubling the knob whose last doubling moved sampled recall by
-    * ≥ 0.02, starting with nProbe; a plateau (or cap) hands control to
-    * the other knob, which then KEEPS it while its gain holds — on an
-    * ADC-bound corpus rerank stays in control instead of alternating
-    * back to ever-pricier probes (r13 ADVICE). The full query set then
-    * runs
-    * once at the calibrated pair, with `measured_recall`,
-    * `calibrated_nprobe` and `calibrated_rerank` riding every row — the
-    * same proceed-with-evidence contract as the IVF op: if both caps
-    * land below target the shortfall is visible in-band (stderr warns),
-    * and a pipeline that must not ship under-target neighbors asserts
-    * on the column (the q_ann_pq_cal driver query does exactly that).
-    *
-    * Cost model: train + encode + assign once (the dominant IVF-PQ
-    * cost), one bounded brute-force truth pass, one sample-sized ADC
-    * probe per escalation step (≤ log2(maxProbeFactor) +
-    * log2(maxRerankFactor) steps), one calibrated full-set probe.
-    * Re-rank depth is a per-query SHORT-LIST bound (queries × rerank
-    * rows join back to true vectors), so even the rerank cap stays
-    * negligible next to the corpus scan it replaces. */
+    * of [[Similarity.ivfTopKCalibrated]]. PQ stacks TWO recall losses:
+    * probed lists that miss true neighbors (more probes buy it back)
+    * and ADC error misranking candidates the probes DID reach (only a
+    * deeper exact re-rank does) — the r12 ×64 stress measured
+    * all-defaults recall@10 = 0.354. The knobs escalate from
+    * (autoNProbe, 4·k rerank) toward (`maxProbeFactor`×,
+    * `maxRerankFactor`×) caps under the plateau policy of
+    * [[Ivf.calibrated]]; `measured_recall`, `calibrated_nprobe` and
+    * `calibrated_rerank` ride every output row (the q_ann_pq_cal
+    * driver query asserts on the column). */
   def ivfPqTopKCalibrated(corpus: DataFrame, idCol: String, vecCol: String,
                           queries: DataFrame, qidCol: String, qvecCol: String,
                           k: Int = 10, targetRecall: Double = 0.7,
@@ -609,106 +354,13 @@ object Pq {
                           iters: Int = 2, seed: Long = 42L,
                           residual: Boolean = true,
                           queryBudget: Long = Similarity.DefaultQueryBudget): DataFrame = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall must be in (0,1]: $targetRecall")
-    require(sampleQueries >= 1, s"sampleQueries must be >= 1: $sampleQueries")
-    require(maxProbeFactor >= 1, s"maxProbeFactor must be >= 1: $maxProbeFactor")
     require(maxRerankFactor >= 1, s"maxRerankFactor must be >= 1: $maxRerankFactor")
-    Similarity.guardQueryBroadcast(queries, qvecCol, queryBudget,
-      "ivfPqTopKCalibrated")
-    val lists = if (nLists > 0) nLists
-      else Similarity.autoNLists(corpus.count())
-    val startProbe = if (nProbe > 0) nProbe else Similarity.autoNProbe(lists)
     val startRerank = if (rerank > 0) rerank else 4 * k
-    val probeCap = math.min(lists.toLong,
-      startProbe.toLong * maxProbeFactor).toInt
-    val rerankCap = (startRerank.toLong * maxRerankFactor)
-      .min(Int.MaxValue.toLong).toInt
-    val (cents, _) = localize(Similarity.centroids(corpus, idCol, vecCol,
-      lists, refineIters = 1, seed = seed))
-    // ONE assignment pass serves residual training AND encode (r14 —
-    // see ivfPqTopK); released explicitly after the calibrated output
-    // materializes below, with the codes and truth persists.
-    val assigned = {
-      val a = Similarity.assignLists(corpus, idCol, vecCol, cents)
-      if (residual)
-        a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else a
-    }
-    val model = if (residual)
-      trainResidualAssigned(assigned, idCol, vecCol, cents, m, pqK, iters, seed)
-    else train(corpus, idCol, vecCol, m, pqK, iters, seed)
-    // compact probe target (m bytes + norm + list id per row), read by
-    // every escalation step and the final probe — persist THIS, never
-    // the vectors
-    val cands = encodeFor(assigned, vecCol, model, cents)
-      .select(col(idCol).as("nn_id"), col("pq_codes").as("__c"),
-        col("pq_norm").as("__n"), col("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // deterministic content-stable sample, localized (≤ sampleQueries
-    // rows feed each escalation eval twice — probe side + rerank join)
-    val (sampleDf, _) = localize(queries
-      .select(col(qidCol).as("query_id"), col(qvecCol).as("__q"))
-      .orderBy(xxhash64(col("query_id"), lit(seed)), col("query_id"))
-      .limit(sampleQueries))
-    val truth = Similarity.bruteForceTopK(corpus, idCol, vecCol,
-        sampleDf, "query_id", "__q", k, queryBudget = 0)
-      .select(col("query_id"), col("nn_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val truthPairs = truth.count()
-    def sampledRecall(probe: Int, rr: Int): Double = {
-      val (qProbe, _) = probeSet(
-        adcQuerySide(sampleDf, "query_id", "__q", model), cents, probe)
-      val hits = adcScoreTopK(cands, qProbe, model.k, k, rr,
-          corpus, idCol, vecCol, sampleDf, "query_id", "__q",
-          residual = model.residual)
-        .select(col("query_id"), col("nn_id"))
-        .join(truth, Seq("query_id", "nn_id"), "left_semi").count()
-      hits.toDouble / truthPairs
-    }
-    var probe = math.min(startProbe, probeCap)
-    var rr = math.min(startRerank, rerankCap)
-    // empty truth (no sample / empty corpus): vacuous
-    var recall = if (truthPairs == 0L) 1.0 else sampledRecall(probe, rr)
-    // KNOB POLICY (r13 ADVICE): keep doubling the knob that is paying —
-    // switch only when its last doubling moved sampled recall by less
-    // than plateauEps, or when it caps. Starting knob is nProbe (probe
-    // loss binds first on clusterable data); on an ADC-bound corpus the
-    // first plateau hands control to rerank and it KEEPS it while the
-    // gain holds, instead of alternating back to ever-pricier probes.
-    val plateauEps = 0.02
-    var probeKnob = true
-    while (truthPairs != 0L && recall < targetRecall &&
-        (probe < probeCap || rr < rerankCap)) {
-      if (probeKnob && probe >= probeCap) probeKnob = false
-      else if (!probeKnob && rr >= rerankCap) probeKnob = true
-      if (probeKnob) probe = math.min(probe.toLong * 2, probeCap.toLong).toInt
-      else rr = math.min(rr.toLong * 2, rerankCap.toLong).toInt
-      val prevRecall = recall
-      recall = sampledRecall(probe, rr)
-      if (recall - prevRecall < plateauEps) probeKnob = !probeKnob
-    }
-    if (recall < targetRecall)
-      System.err.println(
-        f"[graft] ivfPqTopKCalibrated: caps reached (nProbe $probe/$lists " +
-          f"lists, rerank $rr) at sampled recall $recall%.3f < target " +
-          f"$targetRecall%.3f — this corpus needs larger caps or the exact " +
-          "kernels; the shortfall rides the measured_recall column")
-    val q = adcQuerySide(queries, qidCol, qvecCol, model)
-    val (qProbe, _) = probeSet(q, cents, probe)
-    // queries × k rows: materialize eagerly so the corpus-scale codes
-    // persist and the truth sample release HERE (the ivfTopKCalibrated
-    // unpersist contract)
-    val out = adcScoreTopK(cands, qProbe, model.k, k, rr,
-        corpus, idCol, vecCol, queries, qidCol, qvecCol,
-        residual = model.residual)
-      .withColumn("measured_recall", lit(recall))
-      .withColumn("calibrated_nprobe", lit(probe))
-      .withColumn("calibrated_rerank", lit(rr))
-      .localCheckpoint()
-    cands.unpersist()
-    truth.unpersist()
-    if (residual) assigned.unpersist()
-    out
+    Ivf.calibrated(corpus, idCol, vecCol, queries, qidCol, qvecCol, k,
+      targetRecall, sampleQueries, nLists, nProbe, maxProbeFactor,
+      Some((startRerank, (startRerank.toLong * maxRerankFactor).min(Int.MaxValue).toInt)),
+      refineIters = 1, seed, "kmeans++",
+      adcFit(corpus, idCol, vecCol, m, pqK, iters, seed, residual), queryBudget,
+      "ivfPqTopKCalibrated")
   }
 }

@@ -1,23 +1,18 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions._
 
-/** Similarity search over an embedding column (`array<float>`).
-  * (Extension beyond the reference surface — SURVEY §7.2 step 8.)
-  *
-  * Kernels are expression-only (`zip_with` + `aggregate`), computed in
-  * double precision. Two search paths:
+/** Similarity search over an embedding column (`array<float>`),
+  * computed in double precision. (Extension beyond the reference
+  * surface — SURVEY §7.2 step 8.) Two search paths:
   *   - brute force: broadcast the (small) query set against the corpus —
-  *     the exact baseline, one map-side pass over the corpus, top-k via
-  *     per-query window;
-  *   - IVF: deterministic centroid sample → assign corpus rows to the
-  *     nearest centroid (map-only vs broadcast centroids) → probe only
-  *     `nProbe` inverted lists per query. Search cost drops by
-  *     ~nLists/nProbe; same plan shape a 1000-executor cluster wants.
-  */
+  *     the exact baseline, one map-side pass, bounded per-query top-k;
+  *   - IVF: k-means‖ centroids → assign corpus rows to the nearest one
+  *     (map-only vs broadcast centroids) → probe only `nProbe` inverted
+  *     lists per query, cost ~nProbe/nLists of a scan. The index
+  *     lifecycle is shared with [[Pq]]'s IVF-PQ ([[Ivf]]). */
 object Similarity {
 
   /** Σ a_i b_i in double precision. */
@@ -34,30 +29,19 @@ object Similarity {
     graft.functions.Kernels.cosineSim(a, b)
 
   /** Element budget (rows × dim) for the broadcast QUERY side of the
-    * ANN entry points. Every top-k path here rides the query frame —
-    * vectors included — through `broadcast(...)`; that is the right
-    * plan for the bounded query sets these ops target (thousands of
-    * probes against a huge corpus), but a caller passing
-    * corpus-as-queries at 100 TB would OOM the driver hours in. 16M
-    * elements ≈ 128 MB of raw doubles (≈250k queries at dim 64) — the
-    * upper edge of a comfortable broadcast; past it the honest plan is
-    * chunking the query set or [[lshNeighborPairs]] (the all-pairs
-    * formulation that never broadcasts vectors). Same plan-time-refusal
-    * economics as [[graft.operators.Skew.saltedJoin]]'s replication
-    * guard; `queryBudget = 0` skips the check (the guard-skip
-    * convention shared with saltedJoin/embeddingDedup). */
+    * ANN entry points: every top-k path broadcasts the query vectors,
+    * right for bounded query sets but a driver OOM hours into a 100-TB
+    * corpus-as-queries run. 16M elements ≈ 128 MB of doubles (≈250k
+    * queries at dim 64); past it, chunk the queries or use
+    * [[lshNeighborPairs]]. `queryBudget = 0` skips the check (the
+    * guard-skip convention shared with saltedJoin/embeddingDedup). */
   val DefaultQueryBudget: Long = 16L * 1000 * 1000
 
-  /** Refuse a query frame too large to broadcast BEFORE the plan runs.
-    * The guard's own scan is BOUNDED (r13 ADVICE — the old full
-    * `count()` executed the query frame's entire upstream lineage, and
-    * for the common `queries = corpus.filter(...)` pattern that meant
-    * extra corpus passes per ANN call): one `head(1)` for the dim
-    * (LIMIT-pushdown short-circuits at the first non-null row) and one
-    * `limit(maxRows + 1).count()` probe that stops producing rows at
-    * the budget line — over budget iff the limit is reached, and an
-    * in-budget query side only ever pays a ≤(budget/dim + 1)-row scan.
-    * Shared by every ANN entry point here and in [[Pq]]. */
+  /** Refuse a query frame too large to broadcast BEFORE the plan runs,
+    * with a BOUNDED scan (a full `count()` would re-run the query
+    * frame's lineage — extra corpus passes for `corpus.filter(...)`
+    * queries): one `head(1)` for the dim and one
+    * `limit(maxRows + 1).count()`, over budget iff the limit is hit. */
   private[ml] def guardQueryBroadcast(queries: DataFrame, vecCol: String,
                                       budget: Long, caller: String): Unit = {
     if (budget <= 0) return
@@ -81,12 +65,10 @@ object Similarity {
           "knowingly.")
   }
 
-  /** Exact brute-force cosine top-k.
-    * `queries(qid, qvec)` is broadcast (must be driver-manageable —
-    * typically thousands of rows); the corpus is scored in one map-side
-    * pass and folded into per-(query, task) top-k buffers by a partial
-    * aggregate (graft.ml.TopKAgg) — only `queries × tasks × k` rows
-    * reach the shuffle, never the corpus. */
+  /** Exact brute-force cosine top-k: `queries(qid, qvec)` is broadcast;
+    * the corpus is scored in one map-side pass folded into per-(query,
+    * task) top-k buffers (graft.ml.TopKAgg) — only `queries × tasks × k`
+    * rows reach the shuffle. */
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
                      queries: DataFrame, qidCol: String, qvecCol: String,
                      k: Int = 10, excludeSelf: Boolean = true,
@@ -118,30 +100,20 @@ object Similarity {
     * adversarial spec pins the difference). The "random" draw is a
     * per-(round, id) hash, so the sample is deterministic and
     * content-stable — same corpus, same seeds, any partitioning.
-    * Each round costs one map pass over the corpus (broadcast
-    * candidates) + two tiny driver actions; the candidate set
-    * (≤ 1 + rounds·2·nLists rows) is then weighted by cluster
-    * population and reduced to nLists seeds with a seeded
-    * driver-local weighted kmeans++ — the standard || recluster step,
-    * on data that fits in one task by construction.
+    * Each round is map-only D² scoring vs broadcast candidates read by
+    * two actions — a scalar D² total and a ≤~2·nLists-row draw — which
+    * under AQE run as 7 Spark jobs (4 for the total, 3 for the draw);
+    * no hash shuffle of the corpus anywhere in seeding. The candidate
+    * set (≤ 1 + rounds·2·nLists rows) is then weighted by cluster
+    * population and reduced to nLists seeds with a seeded driver-local
+    * weighted kmeans++ — the standard || recluster step.
     *
     * `initMethod`: "kmeans++" (default) or "firstN" (the legacy
     * lowest-id seed — kept for comparison and for corpora known to be
-    * pre-shuffled, where it saves the seeding passes).
-    *
-    * Scale shape per round: map-only D² scoring vs broadcast
-    * candidates, one scalar agg, one ≤~2·nLists-row collect — no
-    * hash shuffle of the corpus anywhere in seeding (a corpus arriving
-    * in fewer splits than half the cluster's parallelism gets ONE
-    * bounded round-robin spread before the persisted seeding
-    * projection, so the O(rows × candidates) D² compute can't
-    * serialize on a single input split; results are content-stable
-    * under any partitioning, spec-pinned); Lloyd refine unchanged
-    * (nLists × dim aggregation rows). */
+    * pre-shuffled, where it saves the seeding passes). */
   def centroids(corpus: DataFrame, idCol: String, vecCol: String,
                 nLists: Int = 16, refineIters: Int = 1,
                 seed: Long = 42L, initMethod: String = "kmeans++"): DataFrame = {
-    val spark = corpus.sparkSession
     var cents = initMethod match {
       case "firstN" =>
         corpus.orderBy(col(idCol)).limit(nLists)
@@ -151,8 +123,7 @@ object Similarity {
       case other => throw new IllegalArgumentException(
         s"initMethod must be kmeans++ or firstN, got $other")
     }
-    var it = 0
-    while (it < refineIters) {
+    for (_ <- 0 until refineIters) {
       val assigned = assignLists(
         corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
       cents = assigned
@@ -163,7 +134,6 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("pos"), col("__mean")))).as("__ps"))
         .select(col("list_id"),
           transform(col("__ps"), p => p.getField("__mean")).as("cvec"))
-      it += 1
     }
     cents
   }
@@ -177,46 +147,30 @@ object Similarity {
     val over = 2 * nLists // per-round expected oversample (the || "l")
     val vBase = corpus.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__cid"), col(vecCol).cast("array<double>").as("__cv"))
-    // Seeding cost is O(rows × candidates) COMPUTE, so a corpus that
-    // arrives in one or two splits (a single small parquet file — the
-    // r11 ×64 stress fixture) would serialize the D² rounds on one
-    // task. Spread the library-owned projection before persisting: the
-    // one-off shuffle is bounded by the (id, vector) projection size,
-    // and every seeding step is content-stable under repartitioning by
-    // construction (hash draws keyed on (round, id), pool sorted by id
-    // — spec-pinned), so results cannot move. A real at-scale corpus
-    // arrives in many splits and skips this entirely.
+    // Seeding is O(rows × candidates) COMPUTE: a corpus arriving in
+    // fewer splits than half the parallelism (a single small parquet
+    // file) gets one bounded round-robin spread so the D² rounds cannot
+    // serialize on one task. Every seeding step is content-stable under
+    // repartitioning (hash draws keyed on (round, id), pool sorted by
+    // id — spec-pinned), so results cannot move.
     val spread = corpus.sparkSession.sparkContext.defaultParallelism
     val vPar = vBase.rdd.getNumPartitions
     val v = (if (vPar * 2 < spread) vBase.repartition(spread) else vBase)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val first = v.orderBy(col("__cid")).limit(1).collect()
-      if (first.isEmpty) return emptyCents(corpus, vecCol)
-      // candidate pool, keyed by a STRING of the id for determinism
-      // across id types (collected order is not deterministic — every
-      // driver-side step below sorts by this key first)
-      val pool = scala.collection.mutable.LinkedHashMap[String, Array[Double]](
-        first(0).get(0).toString -> first(0).getSeq[Double](1).toArray)
-      def candDf() = {
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(pool.toSeq.sortBy(_._1).map { case (_, c) =>
-            org.apache.spark.sql.Row(c.toSeq) }: _*)
-        corpus.sparkSession.createDataFrame(rows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cvec",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType), nullable = false))))
-      }
-      // squared angular distance to the nearest candidate: for unit
-      // vectors ||x-c||² = 2(1-cos); unnormalized vectors use the same
-      // direction-only metric the index itself ranks by
+      if (first.isEmpty) return corpus.limit(0).select(lit(0L).as("list_id"),
+        col(vecCol).cast("array<double>").as("cvec"))
+      // candidate pool keyed by the id's STRING; collected order is not
+      // deterministic, so every driver-side step sorts by this key
+      val pool = scala.collection.mutable.LinkedHashMap[String, Array[Double]]()
+      def add(rows: Array[org.apache.spark.sql.Row]): Unit = rows.foreach(row =>
+        pool.getOrElseUpdate(row.get(0).toString, row.getSeq[Double](1).toArray))
+      add(first)
+      // squared angular distance 2(1-cos) to the nearest candidate, by
+      // assignLists' kernel (only the max sim is read)
       def withD2(cand: DataFrame) = {
-        // same kernel as assignLists (ids are dummies — only the max
-        // sim is read); the interpreted HOF max was the r11 ×64
-        // stress's 10-minute wall at ~700 candidates × 128k rows
-        val cs = cand.agg(collect_list(
-          struct(lit(0L).as("list_id"), col("cvec"))).as("cs"))
+        val cs = cand.agg(collect_list(struct(col("list_id"), col("cvec"))).as("cs"))
         v.crossJoin(broadcast(cs))
           .withColumn("__d2", lit(2.0) * (lit(1.0) -
             graft.functions.Kernels.bestCosine(col("__cv"), col("cs"))
@@ -225,7 +179,7 @@ object Similarity {
       }
       var r = 0
       while (r < rounds && pool.size < 1 + rounds * over) {
-        val scored = withD2(candDf())
+        val scored = withD2(centsOf(corpus, pool.toSeq.sortBy(_._1).map(_._2)))
           .withColumn("__u", shiftrightunsigned(
             xxhash64(lit(seed), lit(r), col("__cid").cast("string")), 11)
             .cast("double") / lit(9007199254740992.0)) // 2^53
@@ -236,67 +190,40 @@ object Similarity {
           val tot = total.getDouble(0)
           // deterministic D²-proportional draw; the limit is a guard
           // against degenerate D² concentrations, not a sampler
-          val picked = scored
+          add(scored
             .filter(col("__u") * lit(tot) < lit(over.toDouble) * col("__d2"))
             .orderBy(col("__d2").desc, col("__cid"))
             .limit(4 * over)
-            .select(col("__cid"), col("__cv")).collect()
-          picked.foreach(row =>
-            pool.getOrElseUpdate(row.get(0).toString, row.getSeq[Double](1).toArray))
+            .select(col("__cid"), col("__cv")).collect())
           r += 1
         }
       }
       // pad a too-small pool (tiny corpus / zero distances) with the
       // lowest-id rows so list count matches the legacy contract
-      if (pool.size < nLists) {
-        v.orderBy(col("__cid")).limit(nLists + pool.size).collect()
-          .foreach(row =>
-            pool.getOrElseUpdate(row.get(0).toString, row.getSeq[Double](1).toArray))
-      }
+      if (pool.size < nLists) add(v.orderBy(col("__cid")).limit(nLists + pool.size).collect())
       // population weights for the || recluster step
       val keyed = pool.toSeq.sortBy(_._1)
       val weights: Map[Int, Long] =
         if (keyed.size <= nLists) Map.empty
         else {
-          val byList = assignLists(v, "__cid", "__cv", candDfIndexed(corpus, keyed))
+          val byList = assignLists(v, "__cid", "__cv", centsOf(corpus, keyed.map(_._2)))
             .groupBy(col("list_id")).agg(F.count(lit(1)).as("__n")).collect()
           byList.map(rw => rw.getLong(0).toInt -> rw.getLong(1)).toMap
         }
-      val seeds = weightedKmeansPlusPlus(
+      centsOf(corpus, weightedKmeansPlusPlus(
         keyed.map(_._2).toArray,
         keyed.indices.map(i => weights.getOrElse(i, 1L).toDouble).toArray,
-        math.min(nLists, keyed.size), seed)
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(seeds.zipWithIndex.map { case (c, i) =>
-          org.apache.spark.sql.Row(i.toLong, c.toSeq) }: _*)
-      corpus.sparkSession.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("list_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cvec",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType), nullable = false))))
+        math.min(nLists, keyed.size), seed))
     } finally v.unpersist()
   }
 
-  private def emptyCents(corpus: DataFrame, vecCol: String): DataFrame =
-    corpus.limit(0).select(lit(0L).as("list_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-
-  /** Candidate pool as an indexed (list_id, cvec) frame for the weight
-    * pass. */
-  private def candDfIndexed(corpus: DataFrame,
-                            keyed: Seq[(String, Array[Double])]): DataFrame = {
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(keyed.zipWithIndex.map { case ((_, c), i) =>
-        org.apache.spark.sql.Row(i.toLong, c.toSeq) }: _*)
-    corpus.sparkSession.createDataFrame(rows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("list_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType), nullable = false))))
+  /** Driver-local vectors as a (list_id, cvec) frame, ids by position. */
+  private def centsOf(corpus: DataFrame, vs: Seq[Array[Double]]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val rows = vs.zipWithIndex.map { case (c, i) => org.apache.spark.sql.Row(i.toLong, c.toSeq) }
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("list_id", LongType, nullable = false),
+      StructField("cvec", ArrayType(DoubleType), nullable = false))))
   }
 
   /** Seeded weighted kmeans++ over the (tiny, driver-local) candidate
@@ -357,44 +284,29 @@ object Similarity {
   }
 
   /** Assign each row to its nearest centroid list (map-only: centroids
-    * broadcast, argmax computed with a max_by over the centroid array). */
+    * broadcast, argmax by the best_cosine kernel — NOT
+    * array_max∘transform, whose interpreted HOF pair the r11 ×64 stress
+    * measured as a wall at auto-sized nLists; see BestCosineExpr). Null
+    * vectors assign a null list_id, dropped by every downstream
+    * equi-join. */
   def assignLists(corpus: DataFrame, idCol: String, vecCol: String,
-                  cents: DataFrame): DataFrame = {
-    val centArr = cents.agg(collect_list(struct(col("list_id"), col("cvec"))).as("cs"))
-    // best_cosine kernel, NOT array_max∘transform: the HOF pair is
-    // interpreted per candidate per dimension, which the r11 ×64
-    // stress measured as a wall at auto-sized nLists (see the
-    // BestCosineExpr scaladoc); identical argmax semantics, one tight
-    // loop per row. Null vectors assign a null list_id (dropped by
-    // every downstream equi-join) instead of the HOF's struct-ordering
-    // artifact.
-    corpus.crossJoin(broadcast(centArr))
-      .withColumn("list_id",
-        graft.functions.Kernels.bestCosine(col(vecCol), col("cs"))
-          .getField("list_id"))
-      .drop("cs")
-  }
+                  cents: DataFrame): DataFrame =
+    assignListsWithSim(corpus, idCol, vecCol, cents).drop("__sim")
 
   /** Self-sized IVF list count for a corpus of `n` vectors: ~√n,
-    * clamped to [16, 2^16]. √n balances the two per-query costs —
-    * centroid ranking (∝ nLists) against probed-list scanning
-    * (∝ nProbe·n/nLists) — and the cap keeps the centroid table
-    * broadcastable. The DEFAULT on every IVF entry point as of r11
-    * (`nLists <= 0`); the recall certificates pin exact list geometry
-    * explicitly, so flipping the default cannot move them. */
+    * clamped to [16, 2^16]. √n balances centroid ranking (∝ nLists)
+    * against probed-list scanning (∝ nProbe·n/nLists); the cap keeps
+    * the centroid table broadcastable. The default (`nLists <= 0`) on
+    * every IVF entry point. */
   def autoNLists(n: Long): Int =
     math.min(1 << 16, math.max(16L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
 
-  /** Probe count co-scaled with the list count: ~√nLists, floored at
-    * the legacy default 4 (16 lists → 4 probes, exactly the old
-    * fixed geometry; 256 → 16; 2^16 → 256). A FIXED nProbe over a
-    * growing auto-sized list space would silently sag recall — the
-    * scanned corpus fraction nProbe/nLists shrinks as 1/√nLists here
-    * (cost still falls with scale) while the probed neighborhood
-    * grows with the space, holding measured recall roughly flat
-    * (pinned at ×16 amplification by SelfSizingDefaultsSpec). The
-    * DEFAULT when callers pass `nProbe <= 0`; explicit values are
-    * honored unchanged. */
+  /** Probe count co-scaled with the list count: ~√nLists, floored at 4
+    * (16 lists → 4, 256 → 16, 2^16 → 256). A FIXED nProbe over a
+    * growing list space would silently sag recall; this holds measured
+    * recall roughly flat (pinned at ×16 by SelfSizingDefaultsSpec)
+    * while the scanned fraction still shrinks. The default when callers
+    * pass `nProbe <= 0`. */
   def autoNProbe(nLists: Int): Int =
     math.max(4, math.ceil(math.sqrt(nLists.toDouble)).toInt)
 
@@ -410,77 +322,21 @@ object Similarity {
               k: Int = 10, nLists: Int = 0, nProbe: Int = 0,
               refineIters: Int = 1, seed: Long = 42L,
               initMethod: String = "kmeans++",
-              queryBudget: Long = DefaultQueryBudget): DataFrame = {
-    guardQueryBroadcast(queries, qvecCol, queryBudget, "ivfTopK")
-    val lists = if (nLists > 0) nLists else autoNLists(corpus.count())
-    val probes = if (nProbe > 0) nProbe else autoNProbe(lists)
-    val cents = centroids(corpus, idCol, vecCol, lists, refineIters,
-      seed, initMethod).cache()
-    val assigned = assignLists(corpus, idCol, vecCol, cents)
-    probeLists(assigned, idCol, vecCol, cents, queries, qidCol, qvecCol,
-      k, probes)
-  }
+              queryBudget: Long = DefaultQueryBudget): DataFrame =
+    Ivf.topK(corpus, idCol, vecCol, queries, qidCol, qvecCol, k, nLists, nProbe,
+      rerank = 0, refineIters, seed, initMethod, Ivf.ExactFit, queryBudget, "ivfTopK")
 
-  /** The probe half of [[ivfTopK]]: rank lists per query against the
-    * (broadcast) centroid table, equi-join the pre-assigned corpus on
-    * the probed list ids, exact-cosine score, bounded top-k. Factored
-    * out so [[ivfTopKCalibrated]] re-probes the SAME assignment at
-    * escalating nProbe without re-running centroid training or list
-    * assignment. */
-  private def probeLists(assigned: DataFrame, idCol: String, vecCol: String,
-                         cents: DataFrame,
-                         queries: DataFrame, qidCol: String, qvecCol: String,
-                         k: Int, probes: Int): DataFrame = {
-    val qLists = queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__q"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__sim", cosine(col("__q"), col("cvec")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc)))
-      .filter(col("__r") <= probes)
-      .select(col("query_id"), col("__q"), col("list_id"))
-    val cand = assigned.select(col(idCol).as("nn_id"), col(vecCol).as("__v"), col("list_id"))
-      .join(broadcast(qLists), Seq("list_id"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"), cosine(col("__v"), col("__q")).as("cos_sim"))
-    TopK.perQuery(cand, k)
-  }
-
-  /** IVF top-k with RUNTIME recall calibration — the answer to "what
-    * nProbe does THIS corpus need?" that the √nLists heuristic cannot
-    * give on hostile neighbor structures (the r11 ×64 stress measured
-    * all-defaults recall@10 = 0.41 on a rotation-amplified fixture
-    * where clusterable data reads ~1.0: when neighbors scatter across
-    * lists, recall tracks the scanned fraction and ONLY more probes
-    * buy it back).
-    *
-    * Mechanism: train centroids and assign lists ONCE (the assignment
-    * is persisted — every escalation step re-probes it, never
-    * recomputes it), take a bounded deterministic query sample
-    * (`sampleQueries` rows in xxhash64 order — content-stable), build
-    * its brute-force ground truth in ONE corpus scan, then escalate
-    * nProbe in ×2 steps from the [[autoNProbe]] default until the
-    * sampled recall@k meets `targetRecall` or the probe count hits the
-    * cap (`maxProbeFactor` × the starting probes, and never more than
-    * nLists). The full query set then runs once at the calibrated
-    * probe count, with the MEASURED sample recall and the chosen
-    * nProbe riding every output row (`measured_recall`,
-    * `calibrated_nprobe`) — defaults calibrate instead of guess, and
-    * the number a caller acts on is a measurement, not a formula.
-    *
-    * If the cap is reached below target (legitimately possible: an
-    * unclusterable corpus at high target needs probe ≈ target×nLists,
-    * i.e. most of a brute-force scan) the op PROCEEDS at the cap and
-    * the shortfall is visible in `measured_recall` on every row — the
-    * caller holds the evidence in-band; stderr carries a warning. A
-    * pipeline that must not ship under-target neighbors asserts on
-    * the column (the q_ann_ivf_cal driver query does exactly that).
-    *
-    * Cost model: centroids + assignment once (the dominant IVF cost),
-    * one brute-force pass over `sampleQueries` queries (bounded:
-    * sample × corpus map-side, top-k folded — the same shape as the
-    * existing recall certificates), plus one sample-probe per
-    * escalation step (≤ log2(maxProbeFactor) steps, each bounded by
-    * the sampled query count, not the full set). */
+  /** IVF top-k with RUNTIME recall calibration — the nProbe THIS corpus
+    * needs, which the √nLists heuristic cannot give on hostile neighbor
+    * structures (the r11 ×64 stress: all-defaults recall@10 = 0.41).
+    * nProbe doubles from the [[autoNProbe]] default until the recall@k
+    * of a `sampleQueries`-row sample against its brute-force truth meets
+    * `targetRecall` or hits the cap (`maxProbeFactor` × the start, at
+    * most nLists); the full query set then runs once, with
+    * `measured_recall` and `calibrated_nprobe` on every row. A cap
+    * reached below target PROCEEDS with the shortfall in-band (stderr
+    * warns; the q_ann_ivf_cal driver query asserts on the column).
+    * Mechanism and release contract: [[Ivf.calibrated]]. */
   def ivfTopKCalibrated(corpus: DataFrame, idCol: String, vecCol: String,
                         queries: DataFrame, qidCol: String, qvecCol: String,
                         k: Int = 10, targetRecall: Double = 0.7,
@@ -489,69 +345,10 @@ object Similarity {
                         maxProbeFactor: Int = 16,
                         refineIters: Int = 1, seed: Long = 42L,
                         initMethod: String = "kmeans++",
-                        queryBudget: Long = DefaultQueryBudget): DataFrame = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall must be in (0,1]: $targetRecall")
-    require(sampleQueries >= 1, s"sampleQueries must be >= 1: $sampleQueries")
-    require(maxProbeFactor >= 1, s"maxProbeFactor must be >= 1: $maxProbeFactor")
-    guardQueryBroadcast(queries, qvecCol, queryBudget, "ivfTopKCalibrated")
-    val lists = if (nLists > 0) nLists else autoNLists(corpus.count())
-    val startProbe = if (nProbe > 0) nProbe else autoNProbe(lists)
-    val probeCap = math.min(lists.toLong,
-      startProbe.toLong * maxProbeFactor).toInt
-    val cents = centroids(corpus, idCol, vecCol, lists, refineIters,
-      seed, initMethod).cache()
-    // every escalation step AND the final full-set probe read this —
-    // persist (LRU-evicted under pressure, the sigFrame convention)
-    val assigned = assignLists(corpus, idCol, vecCol, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // deterministic content-stable sample, small enough to broadcast
-    val sample = queries
-      .select(col(qidCol).as("query_id"), col(qvecCol).as("__q"))
-      .orderBy(xxhash64(col("query_id"), lit(seed)), col("query_id"))
-      .limit(sampleQueries)
-    // the ≤sampleQueries-row sample was guarded transitively above —
-    // skip the inner guard's count/head jobs
-    val truth = bruteForceTopK(corpus, idCol, vecCol,
-        sample, "query_id", "__q", k, queryBudget = 0)
-      .select(col("query_id"), col("nn_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val truthPairs = truth.count()
-    var probe = math.min(startProbe, probeCap)
-    var recall = 1.0 // empty truth (no sample / empty corpus): vacuous
-    var done = truthPairs == 0L
-    while (!done) {
-      val hits = probeLists(assigned, idCol, vecCol, cents,
-          sample, "query_id", "__q", k, probe)
-        .select(col("query_id"), col("nn_id"))
-        .join(truth, Seq("query_id", "nn_id"), "left_semi").count()
-      recall = hits.toDouble / truthPairs
-      if (recall >= targetRecall || probe >= probeCap) done = true
-      else probe = math.min(probe.toLong * 2, probeCap.toLong).toInt
-    }
-    truth.unpersist()
-    if (recall < targetRecall)
-      System.err.println(
-        f"[graft] ivfTopKCalibrated: probe cap $probeCap/$lists lists " +
-          f"reached at sampled recall $recall%.3f < target $targetRecall%.3f " +
-          "— this corpus's neighbor structure needs a larger cap (or a " +
-          "brute-force pass); the shortfall rides the measured_recall column")
-    // the final full-set probe output is queries × k rows — small by
-    // the broadcast contract. Materialize it eagerly (localCheckpoint
-    // cuts the lineage back to the checkpointed blocks) so the
-    // corpus-scale `assigned` persist and the cached centroids can be
-    // RELEASED here instead of leaking into the session cache for its
-    // lifetime (one leaked corpus-scale persist per invocation was the
-    // r12 ADVICE finding — the bench alone invokes this 4× per sweep).
-    val out = probeLists(assigned, idCol, vecCol, cents, queries, qidCol,
-        qvecCol, k, probe)
-      .withColumn("measured_recall", lit(recall))
-      .withColumn("calibrated_nprobe", lit(probe))
-      .localCheckpoint()
-    assigned.unpersist()
-    cents.unpersist()
-    out
-  }
+                        queryBudget: Long = DefaultQueryBudget): DataFrame =
+    Ivf.calibrated(corpus, idCol, vecCol, queries, qidCol, qvecCol, k,
+      targetRecall, sampleQueries, nLists, nProbe, maxProbeFactor, rerank = None,
+      refineIters, seed, initMethod, Ivf.ExactFit, queryBudget, "ivfTopKCalibrated")
 
   /** Random-hyperplane LSH bucket key for cosine similarity: `nBits`
     * sign bits of projections onto deterministic pseudo-random
@@ -573,111 +370,40 @@ object Similarity {
 
   /** Persist an IVF index: the assigned corpus written as parquet
     * PARTITIONED BY list_id (one directory per inverted list) plus the
-    * centroid table. Build once, query many: a probe of nProbe lists
-    * becomes a partition-pruned scan that READS only nProbe/nLists of
-    * the corpus bytes — the property that makes IVF pay at 100 TB
-    * (pruning is visible in the scan's PartitionFilters; asserted in
-    * PlanQualitySpec). */
+    * centroid table and the drift baseline. Build once, query many: a
+    * probe of nProbe lists becomes a partition-pruned scan that READS
+    * only nProbe/nLists of the corpus bytes (pruning is visible in the
+    * scan's PartitionFilters; asserted in PlanQualitySpec). */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     path: String, nLists: Int = 0,
                     refineIters: Int = 1, seed: Long = 42L,
-                    initMethod: String = "kmeans++"): Unit = {
-    val lists = if (nLists > 0) nLists else autoNLists(corpus.count())
-    val cents = centroids(corpus, idCol, vecCol, lists, refineIters,
-      seed, initMethod)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    val (assigned, obs) = IndexStats.observed(assignListsWithSim(
-      corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
-      "graft_ivf_build")
-    assigned.drop("__sim")
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
-    // build-time assignment quality (generation 0) — the baseline every
-    // appendToIvfIndex drift reading compares against; observed on the
-    // write job, so the stats cost no extra corpus pass
-    IndexStats.write(corpus.sparkSession, path, generation = 0L,
-      IndexStats.fromObs(obs), overwrite = true)
-  }
+                    initMethod: String = "kmeans++"): Unit =
+    Ivf.build(corpus, idCol, vecCol, path, nLists, refineIters, seed, initMethod,
+      Ivf.ExactFit, "graft_ivf_build")
 
   /** Append a batch to a persisted [[buildIvfIndex]] index WITHOUT
-    * retraining — the recurring-ingest form. The batch is assigned
-    * under the FROZEN stored centroids (so probe routing and batch
-    * placement can never disagree: a probe scans exactly the lists the
-    * batch rows landed in) and written as delta partitions into the
-    * same list layout — parquet `append` adds files inside each
-    * `list_id=` directory, so partition pruning keeps working
-    * unchanged and nothing existing is rewritten.
-    *
-    * Frozen geometry is also the honesty limit: centroids trained on
-    * the original corpus stop describing the data as the distribution
-    * drifts, lists go unbalanced, and recall at fixed nProbe sags.
-    * The returned [[IndexAppendStats]] makes that measurable per
-    * batch: `batchMeanD2` (mean angular D² of the batch to its
-    * assigned centroid — one extra column on the same kernel pass)
-    * against the build-time `baseMeanD2` stored in the index.
-    * REBUILD THRESHOLD: drift = batch/base > 1.5 means the new data
-    * sits half again farther from the frozen centroids than the
-    * training data did — retrain (rebuild) before recall pays for it;
-    * the threshold is logged when crossed, and every generation's
-    * reading is appended to `path/stats` so drift is auditable as a
-    * time series. A pre-r12 index without `stats` still appends
-    * (drift reads NaN; rebuild once to start the series). */
+    * retraining ([[Ivf.append]]): rows land under the FROZEN centroids.
+    * As the distribution drifts, fixed-nProbe recall sags; the returned
+    * [[IndexAppendStats]] measures it per batch (drift > 1.5 is the
+    * REBUILD THRESHOLD) and every reading is appended to `path/stats`. */
   def appendToIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
-                       path: String): IndexAppendStats = {
-    val spark = batch.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
-    // fail-fast frozen-geometry contract (r12 ADVICE): a batch with the
-    // wrong dim or array<double> where the index stores array<float>
-    // would append mixed-schema delta files that only surface at probe
-    // time (parquet schema-merge failure / silently degraded
-    // assignments). One head row from each of three tiny reads.
-    IndexStats.validateBatch(batch, vecCol,
-      expectedDim = cents.select(size(col("cvec"))).head(1)
-        .headOption.map(_.getInt(0)),
-      expectedElem = spark.read.parquet(s"$path/lists").schema
-        .collectFirst { case f if f.dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-          f.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
-            .elementType },
-      caller = "appendToIvfIndex")
-    val (assigned, obs) = IndexStats.observed(assignListsWithSim(
-      batch.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
-      "graft_ivf_append")
-    assigned.drop("__sim")
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/lists")
-    IndexStats.appendAndReport(spark, path, IndexStats.fromObs(obs),
-      caller = "appendToIvfIndex")
-  }
+                       path: String): IndexAppendStats =
+    Ivf.append(batch, idCol, vecCol, path, Ivf.Exact, "graft_ivf_append",
+      "appendToIvfIndex")
 
   /** Rebuild a persisted [[buildIvfIndex]] index from its OWN stored
     * rows — the action [[IndexAppendStats.rebuildRecommended]] points
-    * at (the r12 gap: drift tracking stopped at a stderr
-    * recommendation). The IVF index stores the actual vectors inside
-    * `lists/`, so no external corpus handle is needed: the union of
-    * build + every append generation IS the corpus of record. Retrains
-    * centroids (fresh k-means‖ over the accumulated distribution),
-    * re-assigns every row, and resets the drift series to a NEW
-    * generation-0 baseline — a subsequent same-distribution append
-    * reads drift ≈ 1 again (spec-pinned).
-    *
-    * Write discipline: the new index is built COMPLETELY in a sibling
-    * directory while reads still resolve against the old files (Spark
-    * captures the file listing at read time), then swaps in via
-    * delete + rename per subdirectory — a probe never sees a
-    * half-rebuilt index. Single-writer contract as with appends.
-    * `nLists <= 0` re-derives √N from the CURRENT row count — an index
-    * that grew 4× through appends gets 2× the lists, which is exactly
-    * why rebuilds exist. */
+    * at. The index stores the vectors, so build + every append IS the
+    * corpus of record: centroids retrain, every row re-assigns, the
+    * drift series restarts ([[Ivf.rebuild]]). `nLists <= 0` re-derives
+    * √N from the CURRENT row count — an index that grew 4× gets 2×. */
   def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       nLists: Int = 0, refineIters: Int = 1, seed: Long = 42L,
                       initMethod: String = "kmeans++"): Unit = {
     val lists = spark.read.parquet(s"$path/lists")
-    val idCol = lists.columns.filterNot(c => c == "list_id" || lists.schema(c)
-      .dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]).head
-    val vecCol = lists.columns.filterNot(c => c == "list_id" || c == idCol).head
-    val tmp = s"$path/.rebuild"
-    buildIvfIndex(lists.select(col(idCol), col(vecCol)), idCol, vecCol,
-      tmp, nLists, refineIters, seed, initMethod)
-    IndexStats.swapIn(spark, path, tmp, Seq("centroids", "lists", "stats"))
+    val (idCol, vecCol) = Ivf.storedCols(Ivf.Exact, lists)
+    Ivf.rebuild(spark, path)(tmp => buildIvfIndex(lists.select(col(idCol), col(vecCol)),
+      idCol, vecCol, tmp, nLists, refineIters, seed, initMethod))
   }
 
   /** Query a persisted IVF index: rank lists per query against the
@@ -687,61 +413,24 @@ object Similarity {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, qidCol: String, qvecCol: String,
                      k: Int = 10, nProbe: Int = 0,
-                     queryBudget: Long = DefaultQueryBudget): DataFrame = {
-    guardQueryBroadcast(queries, qvecCol, queryBudget, "ivfTopKIndexed")
-    val cents = spark.read.parquet(s"$path/centroids")
-    // nProbe <= 0: co-scale with the index's list count (autoNProbe) —
-    // the centroid table is nLists rows, so the count is one tiny scan
-    val probes = if (nProbe > 0) nProbe else autoNProbe(cents.count().toInt)
-    val qLists = queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__q"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__sim", cosine(col("__q"), col("cvec")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc)))
-      .filter(col("__r") <= probes)
-      .select(col("query_id"), col("__q"), col("list_id"))
-      // referenced twice (pruning literal + candidate join): cache so
-      // the centroid cross-ranking computes once
-      .cache()
-    // probed list ids are tiny (queries × nProbe): collect for a
-    // partition-pruning literal filter, then bucket-join candidates
-    val probed = qLists.select(col("list_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val lists = spark.read.parquet(s"$path/lists")
-      .filter(col("list_id").isin(probed: _*))
-    val idCol = lists.columns.filterNot(c => c == "list_id" || lists.schema(c).dataType
-      .isInstanceOf[org.apache.spark.sql.types.ArrayType]).head
-    val vecCol = lists.columns.filterNot(c => c == "list_id" || c == idCol).head
-    val cand = lists.select(col(idCol).as("nn_id"), col(vecCol).as("__v"), col("list_id"))
-      .join(broadcast(qLists), Seq("list_id"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"), cosine(col("__v"), col("__q")).as("cos_sim"))
-    TopK.perQuery(cand, k)
-  }
+                     queryBudget: Long = DefaultQueryBudget): DataFrame =
+    Ivf.indexed(spark, path, queries, qidCol, qvecCol, k, nProbe, rerank = 0,
+      vecs = null, Ivf.Exact, queryBudget, "ivfTopKIndexed")
 
-  /** Banded LSH approximate neighbor pairs within the corpus — the
-    * embedding-space counterpart of MinHash banding: `bands` independent
-    * hyperplane sketches of `nBits` each (graft.functions
-    * CosineLshBandsExpr, one JVM loop per row), candidates from the
-    * (band, key) bucket join, exact-cosine verify. A pair at cosine c
-    * misses all bands with prob (1-p^nBits)^bands, p = 1-acos(c)/π —
-    * e.g. c=0.95, 16×6-bit bands → miss ≈ 6e-6. Shuffle discipline as
-    * in MinHash: bare (id, band, key) through the explode; vectors join
-    * back on the deduplicated candidate pairs only.
+  /** Banded LSH approximate neighbor pairs within the corpus — MinHash
+    * banding in embedding space: `bands` hyperplane sketches of `nBits`
+    * each (CosineLshBandsExpr), candidates from the (band, key) bucket
+    * join, exact-cosine verify. A pair at cosine c misses all bands
+    * with prob (1-p^nBits)^bands, p = 1-acos(c)/π (c=0.95, 16×6-bit
+    * bands → ≈ 6e-6). Vectors join back on the candidate pairs only.
     *
-    * Bucket sizing: hyperplane buckets partition SPACE, so expected
-    * bucket size is n/2^nBits and the per-band self-join is quadratic
-    * in it — size nBits with the corpus (2^nBits ≈ n/1000 keeps
-    * buckets ~1000 rows) and spend recall budget on more bands.
-    * r11 defaults do BOTH automatically: `nBits <= 0` derives the
-    * bucket space from one corpus count ([[graft.ml.Dedup.autoNBits]],
-    * target 1000 rows — wider than embeddingDedup's 125 because this
-    * op's cost is the bucket self-JOIN, not an in-bucket kernel), and
-    * `bands <= 0` co-scales via [[graft.ml.Dedup.autoBands]] to hold
-    * per-pair miss ≤ `missBound` AT the threshold — raising past the
-    * band cap instead of silently dropping recall (a t=0.8 pair list
-    * over ~100M+ vectors needs explicit geometry or a looser bound;
-    * the raise says so at plan time). Explicit values honored. */
+    * Bucket sizing: expected bucket size is n/2^nBits and the per-band
+    * self-join is quadratic in it, so `nBits <= 0` derives the bucket
+    * space from one corpus count ([[graft.ml.Dedup.autoNBits]], target
+    * `targetBucketRows`) and `bands <= 0` co-scales via
+    * [[graft.ml.Dedup.autoBands]] to hold per-pair miss ≤ `missBound`
+    * AT the threshold — raising past the band cap at plan time instead
+    * of silently dropping recall. Explicit values honored. */
   def lshNeighborPairs(corpus: DataFrame, idCol: String, vecCol: String,
                        nBits: Int = 0, bands: Int = 0,
                        threshold: Double = 0.8, seed: Long = 42L,
@@ -751,10 +440,8 @@ object Similarity {
       else graft.ml.Dedup.autoNBits(corpus.count(), targetBucketRows)
     val useBands = if (bands > 0) bands
       else graft.ml.Dedup.autoBands(threshold, useBits, missBound)
-    // persisted like Dedup.sigFrame: the banding explode feeds BOTH
-    // sides of the candidate self-join — without the persist the LSH
-    // kernel would run twice per row — and both verify joins re-read
-    // the vectors (LRU-evicted under pressure)
+    // persisted like Dedup.sigFrame (LRU): the band keys feed BOTH sides
+    // of the self-join and both verify joins re-read the vectors
     val keyed = corpus.select(col(idCol).as("__id"),
       graft.functions.Kernels.cosineLshBands(col(vecCol), useBands, useBits, seed).as("__keys"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -772,188 +459,5 @@ object Similarity {
       .join(vecs.select(col("__id").as("id_b"), col("__v").as("vb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), cosine(col("va"), col("vb")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-  }
-}
-
-/** One append cycle's drift evidence ([[Similarity.appendToIvfIndex]],
-  * [[Pq.appendToIvfPqIndex]]): how far the new batch sits from the
-  * index's FROZEN centroids, relative to what the training data
-  * measured at build time. `drift > 1.5` is the documented rebuild
-  * threshold; NaN means the index predates drift tracking (no `stats`
-  * table — rebuild once to start the series). */
-case class IndexAppendStats(appendedRows: Long, batchMeanD2: Double,
-                            baseMeanD2: Double, drift: Double,
-                            generation: Long) {
-  def rebuildRecommended: Boolean = drift > IndexStats.RebuildDriftThreshold
-}
-
-object IndexAppendStats {
-  /** Public mirror of the documented rebuild line (see
-    * [[IndexStats.RebuildDriftThreshold]]) for callers outside the ml
-    * package — the audit surface reads it. */
-  val RebuildDriftThreshold: Double = 1.5
-}
-
-/** Assignment-quality bookkeeping stored INSIDE IVF-family indexes
-  * (`path/stats`: one row per generation — 0 at build, +1 per append).
-  * Mean angular D² = mean over assigned rows of 2·(1−cos) to the
-  * winning centroid: the k-means objective itself, so "the batch reads
-  * 1.5× the build's D²" literally means the frozen clustering explains
-  * the new data 1.5× worse than its training set. */
-private[ml] object IndexStats {
-  import org.apache.spark.sql.SparkSession
-
-  /** Documented rebuild line for [[IndexAppendStats.drift]]: past
-    * 1.5× the frozen centroids are materially stale — lists unbalance
-    * and fixed-probe recall sags (the same failure mode the r11 ×64
-    * rotation fixture demonstrates in the extreme). */
-  val RebuildDriftThreshold: Double = IndexAppendStats.RebuildDriftThreshold
-
-  /** Swap a rebuilt index's subdirectories into place with TWO RENAMES
-    * per subdirectory, never a delete-then-rename (r13 verdict #3: the
-    * old delete → rename left a window — O(index files) long on a big
-    * lists/ tree — where a concurrent probe listing the path saw NO
-    * table at all). Order per subdir: clear any stale `<sub>.old`
-    * aside, rename the live `<sub>` to `<sub>.old`, rename `tmp/<sub>`
-    * in, delete the aside. The no-table window is now the gap between
-    * two metadata-only renames (atomic each on HDFS/local; object
-    * stores emulate). The single-writer contract still holds for
-    * WRITERS — two concurrent rebuilds corrupt each other — and a
-    * concurrent reader can still straddle the per-subdirectory swaps
-    * (e.g. new centroids with old lists), so probes during a rebuild
-    * are best-effort, not serializable.
-    *
-    * CRASH RECOVERY: a crash between the two renames leaves
-    * `<sub>.old` (the pre-rebuild data) plus `tmp/<sub>` (the complete
-    * rebuild) and no live `<sub>` — rename either back into place
-    * (`<sub>.old` to roll back, `tmp/<sub>` to roll forward) and
-    * delete the other; a leftover `.rebuild`/`.old` with a HEALTHY
-    * live table is residue from a crash after the swap point and is
-    * safe to delete. The tmp root is removed afterwards. */
-  def swapIn(spark: SparkSession, path: String, tmp: String,
-             subdirs: Seq[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    subdirs.foreach { sub =>
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/$sub")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val old = new org.apache.hadoop.fs.Path(s"$path/$sub.old")
-      val fs = dst.getFileSystem(conf)
-      if (fs.exists(src)) {
-        fs.delete(old, true) // stale aside from a crashed prior swap
-        if (fs.exists(dst))
-          require(fs.rename(dst, old),
-            s"swapIn: rename $dst -> $old failed — the live table is " +
-              s"untouched; the rebuild stays at $src")
-        require(fs.rename(src, dst),
-          s"swapIn: rename $src -> $dst failed — recover by renaming " +
-            s"$old back to $dst (roll back) or $src in (roll forward)")
-        fs.delete(old, true)
-      }
-    }
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    tmpPath.getFileSystem(conf).delete(tmpPath, true)
-  }
-
-  /** Fail-fast append contract (r12 ADVICE): assert the batch's vector
-    * column matches the FROZEN index geometry — array type, element
-    * type (when the index stores raw vectors), and dimensionality (one
-    * non-null head row) — before any delta file lands. A mismatched
-    * batch would otherwise write mixed-schema files into `lists/` and
-    * surface only at probe time. `expectedDim`/`expectedElem` are
-    * Options so degenerate indexes (empty build — no centroid row, no
-    * stored vector column) skip the unverifiable half. */
-  def validateBatch(batch: DataFrame, vecCol: String,
-                    expectedDim: Option[Int],
-                    expectedElem: Option[org.apache.spark.sql.types.DataType],
-                    caller: String): Unit = {
-    val elem = batch.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(et, _) => et
-      case other => throw new IllegalArgumentException(
-        s"$caller: batch column '$vecCol' is $other, not an array vector " +
-          "column — appends run under the index's frozen geometry")
-    }
-    expectedElem.foreach { want =>
-      require(elem == want,
-        s"$caller: batch '$vecCol' holds array<${elem.simpleString}> but " +
-          s"the index stores array<${want.simpleString}> — appending would " +
-          "mix parquet schemas inside lists/ and fail at probe time; cast " +
-          "the batch to the index's element type (geometry is frozen at " +
-          "build)")
-    }
-    expectedDim.foreach { want =>
-      batch.select(F.col(vecCol)).filter(F.col(vecCol).isNotNull).head(1)
-        .foreach { r =>
-          val got = r.getSeq[Any](0).size
-          require(got == want,
-            s"$caller: batch vectors have dim $got but the index was built " +
-              s"at dim $want — frozen centroids/codebooks cannot assign a " +
-              "different dimensionality; rebuild the index for the new " +
-              "geometry")
-        }
-    }
-  }
-
-  /** Ride (rows, meanD2) on the index WRITE job itself via
-    * `Dataset.observe` — at 100 TB an extra full assignment scan just
-    * for statistics is real money, and the write already sees every
-    * row. Null sims (null vectors) sit out the mean but count as rows
-    * (they land in the index's null partition like every build does).
-    * Read the result with [[fromObs]] AFTER the write action returns. */
-  private val obsCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  def observed(assigned: DataFrame, name: String)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    // unique per call: a repeated-ingest session runs many appends and
-    // observation listeners match by name
-    val obs = org.apache.spark.sql.Observation(
-      s"${name}_${obsCounter.incrementAndGet()}")
-    (assigned.observe(obs, F.count(lit(1)).as("rows"),
-      avg(lit(2.0) * (lit(1.0) - col("__sim"))).as("mean_d2")), obs)
-  }
-
-  def fromObs(obs: org.apache.spark.sql.Observation): (Long, Double) = {
-    val row = obs.get
-    (row("rows").asInstanceOf[Long],
-      Option(row("mean_d2")).map(_.asInstanceOf[Double]).getOrElse(Double.NaN))
-  }
-
-  def write(spark: SparkSession, path: String, generation: Long,
-            stats: (Long, Double), overwrite: Boolean): Unit = {
-    import spark.implicits._
-    Seq((generation, stats._1, stats._2))
-      .toDF("generation", "rows", "mean_d2")
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"$path/stats")
-  }
-
-  /** Read the stored series, append this batch's generation, and
-    * report drift vs the BUILD generation (0). Missing stats table
-    * (pre-r12 index): the append still lands, drift reads NaN, and a
-    * stderr line says how to start the series. */
-  def appendAndReport(spark: SparkSession, path: String,
-                      batch: (Long, Double), caller: String): IndexAppendStats = {
-    val stored = try {
-      spark.read.parquet(s"$path/stats")
-        .select(col("generation"), col("mean_d2")).collect()
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        System.err.println(s"[graft] $caller: index at $path has no stats " +
-          "table (built pre-drift-tracking) — appending without a drift " +
-          "baseline; rebuild once to start the series")
-        Array.empty[org.apache.spark.sql.Row]
-    }
-    val base = stored.find(_.getLong(0) == 0L)
-      .map(_.getDouble(1)).getOrElse(Double.NaN)
-    val gen = if (stored.isEmpty) 1L else stored.map(_.getLong(0)).max + 1L
-    write(spark, path, gen, batch, overwrite = false) // creates stats if absent
-    val drift = batch._2 / base
-    val out = IndexAppendStats(batch._1, batch._2, base, drift, gen)
-    if (out.rebuildRecommended)
-      System.err.println(
-        f"[graft] $caller: batch mean D² ${batch._2}%.4f is ${drift}%.2f× the " +
-          f"build baseline $base%.4f (threshold $RebuildDriftThreshold) — the " +
-          "frozen centroids are stale for this data; rebuild the index " +
-          "before fixed-probe recall pays for it")
-    out
   }
 }

@@ -57,13 +57,13 @@ class PersistInventorySpec extends AnyFunSuite {
       .filter(_._2 > 0).toMap
   }
 
-  // SCALING.md §"Persist-site inventory": 12 paired + 13 documented-LRU
+  // SCALING.md §"Persist-site inventory": 8 paired + 15 documented-LRU
   private val expectedPersist = Map(
     "src/main/scala/graft/core/CrysFrame.scala" -> 2, // order capture + take draw (LRU)
     "src/main/scala/graft/core/GlobalWindows.scala" -> 2, // sorted base + rank counts (LRU)
     "src/main/scala/graft/ml/Dedup.scala" -> 7, // sig/simhash/keepBest (LRU) + CC input/labels (paired) + near-dup append anchors (paired) + semanticDedup guard assignment (r14, LRU)
-    "src/main/scala/graft/ml/Pq.scala" -> 6, // training vectors + calibrated cands/truth (paired) + r14 shared residual assignment ×3 (ivfPqTopK LRU; calibrated + build paired)
-    "src/main/scala/graft/ml/Similarity.scala" -> 5, // k-means init + calibration truth + calibrated assignment (paired, r13) + LSH keys/vecs (LRU)
+    "src/main/scala/graft/ml/Ivf.scala" -> 2, // `holding` (paired: PQ training vectors, calibrated assignment/codes/truth, build assignment) + ivfPqTopK residual assignment (LRU)
+    "src/main/scala/graft/ml/Similarity.scala" -> 3, // k-means init (paired) + LSH keys/vecs (LRU)
     "src/main/scala/graft/operators/Skew.scala" -> 1, // saltedJoin guard right side (LRU; guard count + join share one materialization)
     "src/main/scala/graft/streaming/StreamVerbs.scala" -> 1, // nearDupIngest kept batch (paired: finally unpersist)
     "src/main/scala/graft/sources/Export.scala" -> 1, // curriculum sorted RDD (LRU)
@@ -72,11 +72,10 @@ class PersistInventorySpec extends AnyFunSuite {
     "src/main/scala/graft/text/Decontaminate.scala" -> 2) // n-gram explode + span base (LRU)
 
   // .cache() is persist(MEMORY_AND_DISK) under another name — same
-  // inventory duty (SCALING.md lists these under the CC-loop and IVF
-  // rows' release mechanisms)
+  // inventory duty (SCALING.md lists these under the CC-loop row's
+  // release mechanism)
   private val expectedCache = Map(
-    "src/main/scala/graft/ml/Dedup.scala" -> 3, // CC loop frames, unpersisted per round
-    "src/main/scala/graft/ml/Similarity.scala" -> 3) // IVF cents (×2 incl. calibrated) + indexed-probe qLists
+    "src/main/scala/graft/ml/Dedup.scala" -> 3) // CC loop frames, unpersisted per round
 
   test("every .persist( in src/main is in the checked-in inventory") {
     val actual = sites(".persist(")
@@ -84,7 +83,7 @@ class PersistInventorySpec extends AnyFunSuite {
       "\npersist sites drifted from SCALING.md §Persist-site inventory — " +
         "document the new/removed site there AND update this spec.\n" +
         s"actual:   $actual\nexpected: $expectedPersist")
-    assert(actual.values.sum == 29) // the inventory's headline count
+    assert(actual.values.sum == 23) // the inventory's headline count
   }
 
   test("every .cache() in src/main is in the checked-in inventory") {
