@@ -123,11 +123,7 @@ object Micro {
           .repartition(cpus.toInt)
         val cents = graft.ml.Similarity.centroids(
           emb64, "vec_id", "embedding", nLists = 358, refineIters = 0)
-        val centRows = cents.collect().toSeq
-        val centsL = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(centRows).asJava),
-          cents.schema)
+        val (centsL, _) = graft.core.Persisted.localize(cents)
         def assign() = graft.ml.Similarity.assignLists(
           emb64, "vec_id", "embedding", centsL)
         trial("assign_codegen") {

@@ -90,159 +90,161 @@ object VectorStress {
     Bench.sentinel(); Bench.sentinelIo()
     val pre = (Bench.sentinel(), Bench.sentinelIo())
 
-    // ground truth once, cached for the recall joins (untimed: the
-    // brute-force arm is timed separately below as the baseline)
-    val truth = graft.ml.Similarity.bruteForceTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10)
-      .select(col("query_id"), col("nn_id")).persist()
-    val truthPairs = truth.count()
+    graft.core.Persisted.holding { hold =>
+      // ground truth once, cached for the recall joins (untimed: the
+      // brute-force arm is timed separately below as the baseline)
+      val truth = hold(graft.ml.Similarity.bruteForceTopK(
+          emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10)
+        .select(col("query_id"), col("nn_id")))
+      val truthPairs = truth.count()
 
-    def recallOf(res: DataFrame): Double = {
-      val hit = res.select(col("query_id"), col("nn_id"))
-        .join(truth, Seq("query_id", "nn_id"), "left_semi").count()
-      hit.toDouble / truthPairs
+      def recallOf(res: DataFrame): Double = {
+        val hit = res.select(col("query_id"), col("nn_id"))
+          .join(truth, Seq("query_id", "nn_id"), "left_semi").count()
+        hit.toDouble / truthPairs
+      }
+
+      val (tBrute, _) = timed(() => graft.ml.Similarity.bruteForceTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
+
+      drain("ann_ivf")
+      val (tIvf, _) = timed(() => graft.ml.Similarity.ivfTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
+      val rIvf = recallOf(graft.ml.Similarity.ivfTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
+      // recall-vs-probe sweep at the auto list count: distinguishes "the
+      // √nLists probe heuristic under-probes" (recall jumps superlinearly
+      // with nProbe) from "the corpus is near-unclusterable at this
+      // similarity floor" (recall ~ scanned fraction, no cheap fix)
+      val autoLists = graft.ml.Similarity.autoNLists(n)
+      val autoProbe = graft.ml.Similarity.autoNProbe(autoLists)
+      def ivfAt(p: Int) = recallOf(graft.ml.Similarity.ivfTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+        k = 10, nProbe = p))
+      val rIvf2 = ivfAt(2 * autoProbe)
+      val rIvf4 = ivfAt(4 * autoProbe)
+
+      // CALIBRATED arm (r12): the engineered answer to the 0.41 default
+      // reading — ivfTopKCalibrated measures recall on a 20-query sample
+      // in-job and escalates nProbe ×2 (capped at 16× the start) until
+      // the 0.7 target holds. One run, wall-clock recorded (the cost IS
+      // the finding: on this hostile fixture the calibration must buy
+      // most of a brute-force scan to hold 0.7 — that price should be
+      // visible, not hidden); recall below is re-measured on the FULL
+      // query truth, so the floor carries sampling slack vs the in-job
+      // sample.
+      drain("ann_ivf_cal")
+      val tCal0 = System.nanoTime()
+      val calRows = graft.ml.Similarity.ivfTopKCalibrated(
+          emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+          k = 10, targetRecall = 0.7)
+        .select(col("query_id"), col("nn_id"), col("measured_recall"),
+          col("calibrated_nprobe")).collect()
+      val tCal = (System.nanoTime() - tCal0) / 1e9
+      val truthSet = truth.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val rCal = calRows.count(r => truthSet((r.getLong(0), r.getLong(1))))
+        .toDouble / truthPairs
+      val calProbe = if (calRows.nonEmpty) calRows.head.getInt(3) else -1
+      val calSampled = if (calRows.nonEmpty) calRows.head.getDouble(2) else -1.0
+      spark.catalog.clearCache(); System.gc()
+
+      // RAW-codebook arm (r13 semantics, residual=false): the structural
+      // baseline the r14 residual default is measured against on the
+      // exact fixture that exposed it (default recall 0.354 vs the IVF
+      // candidate-set ceiling 0.408 at the same autoNProbe)
+      drain("ann_ivf_pq_raw")
+      val (tPqRaw, _) = timed(() => graft.ml.Pq.ivfPqTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+        k = 10, m = 16, pqK = 64, rerank = 50, residual = false))
+      val rPqRaw = recallOf(graft.ml.Pq.ivfPqTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+        k = 10, m = 16, pqK = 64, rerank = 50, residual = false))
+
+      // r14 DEFAULT arm: residual (IVFADC) codes. Probe loss bounds this
+      // from above at the plain-IVF reading (same candidates, same
+      // nProbe); the residual claim is that ADC misranking inside the
+      // candidate set — the raw arm's gap below the IVF ceiling —
+      // closes.
+      drain("ann_ivf_pq")
+      val (tPq, _) = timed(() => graft.ml.Pq.ivfPqTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+        k = 10, m = 16, pqK = 64, rerank = 50))
+      val rPq = recallOf(graft.ml.Pq.ivfPqTopK(
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+        k = 10, m = 16, pqK = 64, rerank = 50))
+
+      // CALIBRATED PQ arm (r13): the two-knob answer to the 0.354
+      // default reading — ivfPqTopKCalibrated escalates nProbe ×2 while
+      // probe doublings keep moving sampled recall and doubles the exact
+      // re-rank depth when they plateau (ADC error binds). One timed run
+      // including its in-job ground truth + escalation (the cost IS the
+      // operator, as with the IVF calibrated arm); recall re-measured on
+      // the FULL query truth.
+      drain("ann_ivf_pq_cal")
+      val tPqCal0 = System.nanoTime()
+      val pqCalRows = graft.ml.Pq.ivfPqTopKCalibrated(
+          emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+          k = 10, targetRecall = 0.7, m = 16, pqK = 64)
+        .select(col("query_id"), col("nn_id"), col("measured_recall"),
+          col("calibrated_nprobe"), col("calibrated_rerank")).collect()
+      val tPqCal = (System.nanoTime() - tPqCal0) / 1e9
+      val rPqCal = pqCalRows.count(r => truthSet((r.getLong(0), r.getLong(1))))
+        .toDouble / truthPairs
+      val pqCalProbe = if (pqCalRows.nonEmpty) pqCalRows.head.getInt(3) else -1
+      val pqCalRerank = if (pqCalRows.nonEmpty) pqCalRows.head.getInt(4) else -1
+      val pqCalSampled = if (pqCalRows.nonEmpty) pqCalRows.head.getDouble(2) else -1.0
+      // also drops the truth cache: the recall joins are done, and the
+      // dedup arms don't read it
+      spark.catalog.clearCache(); System.gc()
+
+      // threshold 0.7, NOT the bench suite's 0.45: at 128k vectors the
+      // auto geometry PRICED OUT 0.45 — autoBands raised ("522 bands >
+      // 256 cap": p^nBits = 0.013 is beyond cheap OR-amplification) —
+      // which is the designed behavior for LSH-hostile thresholds, and
+      // is itself a finding this stress records. 0.7 is the regime
+      // banded LSH is built for (near-dup, p = 0.75).
+      drain("embed_dedup")
+      val (tEmbDedup, keepEmb) = timed(() => graft.ml.Dedup.embeddingDedup(
+        emb, "vec_id", "embedding", threshold = 0.7))
+
+      drain("semantic_dedup")
+      val (tSem, keepSem) = timed(() => graft.ml.Dedup.semanticDedup(
+        emb, "vec_id", "embedding", threshold = 0.45))
+
+      val post = (Bench.sentinel(), Bench.sentinelIo())
+      // REGRESSION floors pinned NEAR the measured default values (r12
+      // ADVICE: floors at 0.25/0.2 let a 0.41→0.26 regression pass
+      // silently): IVF defaults measured 0.41 on this fixture, PQ
+      // (explicit m=16/pqK=64 + rerank 50 here) measured ~0.41 too — the
+      // floors sit one meaningful-regression notch under those readings,
+      // so a real default-path decay fails the run instead of only
+      // recording decay in the sweep JSON
+      require(rIvf >= 0.35, f"IVF default-path recall regressed at n=$n: $rIvf%.3f (measured 0.408)")
+      require(rPqRaw >= 0.3, f"raw-codebook IVF-PQ recall regressed at n=$n: $rPqRaw%.3f (measured 0.354)")
+      // the residual default must sit at (or within tie-noise of) the
+      // plain-IVF candidate ceiling at the same geometry — the IVFADC
+      // structural claim this fixture was built to test
+      require(rPq >= 0.35, f"residual IVF-PQ recall regressed at n=$n: $rPq%.3f (ceiling = IVF $rIvf%.3f)")
+      // the calibrated paths are QUALITY claims, not tripwires: they must
+      // actually reach the 0.7 target here (floors = sampling slack
+      // between the 20-query in-job sample and the full 50-query truth;
+      // PQ gets one extra notch for ADC-tie variance at the short-list
+      // boundary)
+      require(rCal >= 0.65,
+        f"calibrated IVF recall missed target at n=$n: $rCal%.3f (sampled $calSampled%.3f, nProbe=$calProbe)")
+      require(rPqCal >= 0.6,
+        f"calibrated IVF-PQ recall missed target at n=$n: $rPqCal%.3f " +
+          f"(sampled $pqCalSampled%.3f, nProbe=$pqCalProbe, rerank=$pqCalRerank)")
+
+      println(
+        f"""{"metric":"vector_stress","corpus":$n,"queries":$nQueries,"k":10,""" +
+          f""""arms":{"ann_brute":$tBrute%.3f,"ann_ivf":$tIvf%.3f,"ann_ivf_cal":$tCal%.3f,"ann_ivf_pq_raw":$tPqRaw%.3f,"ann_ivf_pq":$tPq%.3f,"ann_ivf_pq_cal":$tPqCal%.3f,""" +
+          f""""embed_dedup":$tEmbDedup%.3f,"semantic_dedup":$tSem%.3f},""" +
+          f""""recall":{"ivf":$rIvf%.3f,"ivf_2x_probe":$rIvf2%.3f,"ivf_4x_probe":$rIvf4%.3f,"ivf_cal":$rCal%.3f,"ivf_cal_sampled":$calSampled%.3f,"ivf_pq_raw":$rPqRaw%.3f,"ivf_pq":$rPq%.3f,"ivf_pq_cal":$rPqCal%.3f,"ivf_pq_cal_sampled":$pqCalSampled%.3f},""" +
+          f""""geometry":{"auto_nlists":$autoLists,"auto_nprobe":$autoProbe,"cal_nprobe":$calProbe,"pq_cal_nprobe":$pqCalProbe,"pq_cal_rerank":$pqCalRerank},""" +
+          f""""keeps":{"embed_dedup":$keepEmb,"semantic_dedup":$keepSem},""" +
+          f""""sentinel":{"cpu_pre":${pre._1}%.3f,"io_pre":${pre._2}%.3f,"cpu_post":${post._1}%.3f,"io_post":${post._2}%.3f}}""")
     }
-
-    val (tBrute, _) = timed(() => graft.ml.Similarity.bruteForceTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
-
-    drain("ann_ivf")
-    val (tIvf, _) = timed(() => graft.ml.Similarity.ivfTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
-    val rIvf = recallOf(graft.ml.Similarity.ivfTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
-    // recall-vs-probe sweep at the auto list count: distinguishes "the
-    // √nLists probe heuristic under-probes" (recall jumps superlinearly
-    // with nProbe) from "the corpus is near-unclusterable at this
-    // similarity floor" (recall ~ scanned fraction, no cheap fix)
-    val autoLists = graft.ml.Similarity.autoNLists(n)
-    val autoProbe = graft.ml.Similarity.autoNProbe(autoLists)
-    def ivfAt(p: Int) = recallOf(graft.ml.Similarity.ivfTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-      k = 10, nProbe = p))
-    val rIvf2 = ivfAt(2 * autoProbe)
-    val rIvf4 = ivfAt(4 * autoProbe)
-
-    // CALIBRATED arm (r12): the engineered answer to the 0.41 default
-    // reading — ivfTopKCalibrated measures recall on a 20-query sample
-    // in-job and escalates nProbe ×2 (capped at 16× the start) until
-    // the 0.7 target holds. One run, wall-clock recorded (the cost IS
-    // the finding: on this hostile fixture the calibration must buy
-    // most of a brute-force scan to hold 0.7 — that price should be
-    // visible, not hidden); recall below is re-measured on the FULL
-    // query truth, so the floor carries sampling slack vs the in-job
-    // sample.
-    drain("ann_ivf_cal")
-    val tCal0 = System.nanoTime()
-    val calRows = graft.ml.Similarity.ivfTopKCalibrated(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, targetRecall = 0.7)
-      .select(col("query_id"), col("nn_id"), col("measured_recall"),
-        col("calibrated_nprobe")).collect()
-    val tCal = (System.nanoTime() - tCal0) / 1e9
-    val truthSet = truth.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rCal = calRows.count(r => truthSet((r.getLong(0), r.getLong(1))))
-      .toDouble / truthPairs
-    val calProbe = if (calRows.nonEmpty) calRows.head.getInt(3) else -1
-    val calSampled = if (calRows.nonEmpty) calRows.head.getDouble(2) else -1.0
-    spark.catalog.clearCache(); System.gc()
-
-    // RAW-codebook arm (r13 semantics, residual=false): the structural
-    // baseline the r14 residual default is measured against on the
-    // exact fixture that exposed it (default recall 0.354 vs the IVF
-    // candidate-set ceiling 0.408 at the same autoNProbe)
-    drain("ann_ivf_pq_raw")
-    val (tPqRaw, _) = timed(() => graft.ml.Pq.ivfPqTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-      k = 10, m = 16, pqK = 64, rerank = 50, residual = false))
-    val rPqRaw = recallOf(graft.ml.Pq.ivfPqTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-      k = 10, m = 16, pqK = 64, rerank = 50, residual = false))
-
-    // r14 DEFAULT arm: residual (IVFADC) codes. Probe loss bounds this
-    // from above at the plain-IVF reading (same candidates, same
-    // nProbe); the residual claim is that ADC misranking inside the
-    // candidate set — the raw arm's gap below the IVF ceiling —
-    // closes.
-    drain("ann_ivf_pq")
-    val (tPq, _) = timed(() => graft.ml.Pq.ivfPqTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-      k = 10, m = 16, pqK = 64, rerank = 50))
-    val rPq = recallOf(graft.ml.Pq.ivfPqTopK(
-      emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-      k = 10, m = 16, pqK = 64, rerank = 50))
-
-    // CALIBRATED PQ arm (r13): the two-knob answer to the 0.354
-    // default reading — ivfPqTopKCalibrated escalates nProbe ×2 while
-    // probe doublings keep moving sampled recall and doubles the exact
-    // re-rank depth when they plateau (ADC error binds). One timed run
-    // including its in-job ground truth + escalation (the cost IS the
-    // operator, as with the IVF calibrated arm); recall re-measured on
-    // the FULL query truth.
-    drain("ann_ivf_pq_cal")
-    val tPqCal0 = System.nanoTime()
-    val pqCalRows = graft.ml.Pq.ivfPqTopKCalibrated(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, targetRecall = 0.7, m = 16, pqK = 64)
-      .select(col("query_id"), col("nn_id"), col("measured_recall"),
-        col("calibrated_nprobe"), col("calibrated_rerank")).collect()
-    val tPqCal = (System.nanoTime() - tPqCal0) / 1e9
-    val rPqCal = pqCalRows.count(r => truthSet((r.getLong(0), r.getLong(1))))
-      .toDouble / truthPairs
-    val pqCalProbe = if (pqCalRows.nonEmpty) pqCalRows.head.getInt(3) else -1
-    val pqCalRerank = if (pqCalRows.nonEmpty) pqCalRows.head.getInt(4) else -1
-    val pqCalSampled = if (pqCalRows.nonEmpty) pqCalRows.head.getDouble(2) else -1.0
-    spark.catalog.clearCache(); System.gc()
-
-    truth.unpersist() // recall joins done; dedup arms don't read it
-
-    // threshold 0.7, NOT the bench suite's 0.45: at 128k vectors the
-    // auto geometry PRICED OUT 0.45 — autoBands raised ("522 bands >
-    // 256 cap": p^nBits = 0.013 is beyond cheap OR-amplification) —
-    // which is the designed behavior for LSH-hostile thresholds, and
-    // is itself a finding this stress records. 0.7 is the regime
-    // banded LSH is built for (near-dup, p = 0.75).
-    drain("embed_dedup")
-    val (tEmbDedup, keepEmb) = timed(() => graft.ml.Dedup.embeddingDedup(
-      emb, "vec_id", "embedding", threshold = 0.7))
-
-    drain("semantic_dedup")
-    val (tSem, keepSem) = timed(() => graft.ml.Dedup.semanticDedup(
-      emb, "vec_id", "embedding", threshold = 0.45))
-
-    val post = (Bench.sentinel(), Bench.sentinelIo())
-    // REGRESSION floors pinned NEAR the measured default values (r12
-    // ADVICE: floors at 0.25/0.2 let a 0.41→0.26 regression pass
-    // silently): IVF defaults measured 0.41 on this fixture, PQ
-    // (explicit m=16/pqK=64 + rerank 50 here) measured ~0.41 too — the
-    // floors sit one meaningful-regression notch under those readings,
-    // so a real default-path decay fails the run instead of only
-    // recording decay in the sweep JSON
-    require(rIvf >= 0.35, f"IVF default-path recall regressed at n=$n: $rIvf%.3f (measured 0.408)")
-    require(rPqRaw >= 0.3, f"raw-codebook IVF-PQ recall regressed at n=$n: $rPqRaw%.3f (measured 0.354)")
-    // the residual default must sit at (or within tie-noise of) the
-    // plain-IVF candidate ceiling at the same geometry — the IVFADC
-    // structural claim this fixture was built to test
-    require(rPq >= 0.35, f"residual IVF-PQ recall regressed at n=$n: $rPq%.3f (ceiling = IVF $rIvf%.3f)")
-    // the calibrated paths are QUALITY claims, not tripwires: they must
-    // actually reach the 0.7 target here (floors = sampling slack
-    // between the 20-query in-job sample and the full 50-query truth;
-    // PQ gets one extra notch for ADC-tie variance at the short-list
-    // boundary)
-    require(rCal >= 0.65,
-      f"calibrated IVF recall missed target at n=$n: $rCal%.3f (sampled $calSampled%.3f, nProbe=$calProbe)")
-    require(rPqCal >= 0.6,
-      f"calibrated IVF-PQ recall missed target at n=$n: $rPqCal%.3f " +
-        f"(sampled $pqCalSampled%.3f, nProbe=$pqCalProbe, rerank=$pqCalRerank)")
-
-    println(
-      f"""{"metric":"vector_stress","corpus":$n,"queries":$nQueries,"k":10,""" +
-        f""""arms":{"ann_brute":$tBrute%.3f,"ann_ivf":$tIvf%.3f,"ann_ivf_cal":$tCal%.3f,"ann_ivf_pq_raw":$tPqRaw%.3f,"ann_ivf_pq":$tPq%.3f,"ann_ivf_pq_cal":$tPqCal%.3f,""" +
-        f""""embed_dedup":$tEmbDedup%.3f,"semantic_dedup":$tSem%.3f},""" +
-        f""""recall":{"ivf":$rIvf%.3f,"ivf_2x_probe":$rIvf2%.3f,"ivf_4x_probe":$rIvf4%.3f,"ivf_cal":$rCal%.3f,"ivf_cal_sampled":$calSampled%.3f,"ivf_pq_raw":$rPqRaw%.3f,"ivf_pq":$rPq%.3f,"ivf_pq_cal":$rPqCal%.3f,"ivf_pq_cal_sampled":$pqCalSampled%.3f},""" +
-        f""""geometry":{"auto_nlists":$autoLists,"auto_nprobe":$autoProbe,"cal_nprobe":$calProbe,"pq_cal_nprobe":$pqCalProbe,"pq_cal_rerank":$pqCalRerank},""" +
-        f""""keeps":{"embed_dedup":$keepEmb,"semantic_dedup":$keepSem},""" +
-        f""""sentinel":{"cpu_pre":${pre._1}%.3f,"io_pre":${pre._2}%.3f,"cpu_post":${post._1}%.3f,"io_post":${post._2}%.3f}}""")
     spark.stop()
   }
 }

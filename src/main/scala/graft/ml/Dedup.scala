@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Persisted
 import graft.text.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -267,15 +268,14 @@ object Dedup {
       longIds(batch, idCol, textCol, "appendToNearDupIndex"), idCol, textCol,
       numHashes = p.getInt(0), bands = p.getInt(1),
       shingleSize = p.getInt(2), maxPartners = p.getInt(3))
-    // three consumers (write + two statistics) — persist the bounded
-    // per-bucket fold, not the corpus
-    val newAnchors = anchors
-      .withColumn("num_hashes", lit(p.getInt(0)))
-      .withColumn("bands", lit(p.getInt(1)))
-      .withColumn("shingle_size", lit(p.getInt(2)))
-      .withColumn("max_partners", lit(p.getInt(3)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Persisted.holding { hold =>
+      // three consumers (write + two statistics) — persist the bounded
+      // per-bucket fold, not the corpus
+      val newAnchors = hold(anchors
+        .withColumn("num_hashes", lit(p.getInt(0)))
+        .withColumn("bands", lit(p.getInt(1)))
+        .withColumn("shingle_size", lit(p.getInt(2)))
+        .withColumn("max_partners", lit(p.getInt(3))))
       newAnchors.write.mode("append").parquet(s"$path/anchors")
       val batchKeys = newAnchors.select(col("__bkey")).distinct()
       val batchBuckets = batchKeys.count()
@@ -295,7 +295,7 @@ object Dedup {
             s"rows (> $CompactAnchorRowsThreshold) — probes pay ${maxRows}× " +
             "the single-set verify on it; rebuild the index to re-fold")
       out
-    } finally newAnchors.unpersist()
+    }
   }
 
   /** Compact an appended [[buildNearDupIndex]] index IN PLACE: re-fold
@@ -726,31 +726,26 @@ object Dedup {
     * [[PersistSteppedEdges]] for the crossover reasoning). */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
                           localEdgeLimit: Long = 500L * 1000,
-                          persistSteppedEdges: Long = PersistSteppedEdges): DataFrame = {
-    // persist the INPUT first: both paths read it at least twice (the
-    // count + either the collect or the sym union), and an un-cached
-    // pairs plan is often a whole LSH candidate+verify pipeline.
-    // Only install (and later release) the cache if the caller didn't
-    // already own one — unpersisting a caller's cache would silently
-    // force their later actions to recompute the whole upstream.
-    val ownCache = pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val p =
-      if (ownCache) pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pairs
-    val idType = p.schema("id_a").dataType
-    val nEdges = p.count()
-    val ord = idOrdering(idType)
-    if (nEdges <= localEdgeLimit && ord.isDefined) {
-      val labels = localUnionFind(p, idType, ord.get)
-      if (ownCache) p.unpersist()
-      lastCCStats = (0, 0)
-      labels
-    } else {
-      val labels = distributedCC(p, maxIters, nEdges >= persistSteppedEdges, nEdges)
-      if (ownCache) p.unpersist()
-      labels
+                          persistSteppedEdges: Long = PersistSteppedEdges): DataFrame =
+    Persisted.holding { hold =>
+      // hold the INPUT first: both paths read it at least twice (the
+      // count + either the collect or the sym union), and an un-cached
+      // pairs plan is often a whole LSH candidate+verify pipeline.
+      // Only hold it if the caller didn't already cache it — releasing
+      // a caller's cache would silently force their later actions to
+      // recompute the whole upstream.
+      val p =
+        if (pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) hold(pairs)
+        else pairs
+      val idType = p.schema("id_a").dataType
+      val nEdges = p.count()
+      val ord = idOrdering(idType)
+      if (nEdges <= localEdgeLimit && ord.isDefined) {
+        val labels = localUnionFind(p, idType, ord.get)
+        lastCCStats = (0, 0)
+        labels
+      } else distributedCC(p, maxIters, nEdges >= persistSteppedEdges, nEdges)
     }
-  }
 
   /** Driver-local union-find over a collected edge list (size-guarded
     * by the caller). Union by rank + path compression, then each
@@ -876,83 +871,87 @@ object Dedup {
   }
 
   private def distributedCCLoop(p: DataFrame, maxIters: Int,
-                                persistStepped: Boolean): DataFrame = {
-    val sym = p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).cache()
-    var it = 0
-    var checks = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("dst"), col("label").as("__nl")), Seq("dst"))
-        .groupBy(col("src")).agg(F.min(col("__nl")).as("__minNbr"))
-      // persisted above the size crossover (see PersistSteppedEdges):
-      // BOTH sides of the pointer-jumping self-join read this frame
-      val steppedRaw = labels
-        .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"), col("label").as("__old"),
-          least(col("label"), coalesce(col("__minNbr"), col("label"))).as("label"))
-      val stepped =
-        if (persistStepped) {
-          val s = steppedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          s.count() // materialize before the self-join races two scans
-          s
-        } else steppedRaw
-      // pointer jumping: label := label(label) — doubles the horizon
-      // each round, so convergence is logarithmic in the diameter
-      val jumped = stepped
-        .join(stepped.select(col("id").as("label"), col("label").as("__ll")),
-          Seq("label"), "left")
-        .select(col("id"), col("__old"),
-          least(col("label"), coalesce(col("__ll"), col("label"))).as("label"))
-      // the observed metric rides the SAME job that materializes the
-      // round's cache: one count = materialization + fixpoint check
-      val obs = org.apache.spark.sql.Observation(s"graft_cc_$it")
-      val observed = jumped
-        .observe(obs, coalesce(F.sum(when(col("label") < col("__old"), 1L)), lit(0L))
-          .as("changed"))
-      val next = observed.select(col("id"), col("label")).cache()
-      next.count()
-      it += 1
-      checks += 1
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      if (persistStepped) stepped.unpersist()
-      labels.unpersist()
-      // periodic lineage truncation (see CheckpointEvery). Runs AFTER
-      // the count so the observation has already fired; reads the
-      // just-materialized cache, so the extra job is one cheap
-      // (id, label) pass. eager=true: a lazy checkpoint would silently
-      // defer the truncation to a consumer's first action.
-      //
-      // The persist path truncates EVERY round, not every 4: persist
-      // does not shrink the logical plan, and each round references
-      // the previous round's frame 4x (labels twice into stepped,
-      // stepped twice into the self-join), so the DAG-expanded-to-tree
-      // plan that AQE stringifies on every stage update
-      // (onUpdatePlan -> explainString) grows ~4^rounds between
-      // truncations. With the persist path's EXTRA per-round execution
-      // (the materializing count) that stringification alone pegged a
-      // driver core for 10+ minutes on a 30-edge test graph. A
-      // per-round (id, label) checkpoint scan is noise next to the
-      // edge joins at any scale where persistStepped engages.
-      val cpInterval = if (persistStepped) 1 else CheckpointEvery
-      labels =
-        if (!converged && it % cpInterval == 0) {
-          val cp = next.localCheckpoint(eager = true)
-          next.unpersist()
-          cp
-        } else next
+                                persistStepped: Boolean): DataFrame =
+    Persisted.holding { hold =>
+      val sym = hold(p.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(p.select(col("id_b").as("src"), col("id_a").as("dst"))))
+      // round frames hand off: round i releases round i-1's labels once
+      // it has materialized. A throw releases the live ones; the final
+      // labels stay cached for the caller (LRU).
+      Persisted.keeping { round =>
+        var labels = round(sym.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id")))
+        var it = 0
+        var checks = 0
+        var converged = false
+        while (!converged && it < maxIters) {
+          val nbrMin = sym
+            .join(labels.select(col("id").as("dst"), col("label").as("__nl")), Seq("dst"))
+            .groupBy(col("src")).agg(F.min(col("__nl")).as("__minNbr"))
+          // persisted above the size crossover (see PersistSteppedEdges):
+          // BOTH sides of the pointer-jumping self-join read this frame
+          val steppedRaw = labels
+            .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
+            .select(col("id"), col("label").as("__old"),
+              least(col("label"), coalesce(col("__minNbr"), col("label"))).as("label"))
+          val stepped =
+            if (persistStepped) {
+              val s = round(steppedRaw)
+              s.count() // materialize before the self-join races two scans
+              s
+            } else steppedRaw
+          // pointer jumping: label := label(label) — doubles the horizon
+          // each round, so convergence is logarithmic in the diameter
+          val jumped = stepped
+            .join(stepped.select(col("id").as("label"), col("label").as("__ll")),
+              Seq("label"), "left")
+            .select(col("id"), col("__old"),
+              least(col("label"), coalesce(col("__ll"), col("label"))).as("label"))
+          // the observed metric rides the SAME job that materializes the
+          // round's cache: one count = materialization + fixpoint check
+          val obs = org.apache.spark.sql.Observation(s"graft_cc_$it")
+          val observed = jumped
+            .observe(obs, coalesce(F.sum(when(col("label") < col("__old"), 1L)), lit(0L))
+              .as("changed"))
+          val next = round(observed.select(col("id"), col("label")))
+          next.count()
+          it += 1
+          checks += 1
+          converged = obs.get("changed").asInstanceOf[Long] == 0L
+          if (persistStepped) round.release(stepped)
+          round.release(labels)
+          // periodic lineage truncation (see CheckpointEvery). Runs AFTER
+          // the count so the observation has already fired; reads the
+          // just-materialized cache, so the extra job is one cheap
+          // (id, label) pass. eager=true: a lazy checkpoint would silently
+          // defer the truncation to a consumer's first action.
+          //
+          // The persist path truncates EVERY round, not every 4: persist
+          // does not shrink the logical plan, and each round references
+          // the previous round's frame 4x (labels twice into stepped,
+          // stepped twice into the self-join), so the DAG-expanded-to-tree
+          // plan that AQE stringifies on every stage update
+          // (onUpdatePlan -> explainString) grows ~4^rounds between
+          // truncations. With the persist path's EXTRA per-round execution
+          // (the materializing count) that stringification alone pegged a
+          // driver core for 10+ minutes on a 30-edge test graph. A
+          // per-round (id, label) checkpoint scan is noise next to the
+          // edge joins at any scale where persistStepped engages.
+          val cpInterval = if (persistStepped) 1 else CheckpointEvery
+          labels =
+            if (!converged && it % cpInterval == 0) {
+              val cp = next.localCheckpoint(eager = true)
+              round.release(next)
+              cp
+            } else next
+        }
+        if (!converged)
+          System.err.println(s"[graft] connectedComponents hit maxIters=$maxIters " +
+            "before fixpoint — labels may split components")
+        lastCCStats = (it, checks)
+        labels
+      }
     }
-    if (!converged)
-      System.err.println(s"[graft] connectedComponents hit maxIters=$maxIters " +
-        "before fixpoint — labels may split components")
-    sym.unpersist()
-    lastCCStats = (it, checks)
-    labels
-  }
 
   /** Duplicate-CLUSTER dedup: connected components over the verified
     * MinHash candidate graph, keeping each component's minimum id.
@@ -1269,18 +1268,13 @@ object Dedup {
         val c = nonNull.count()
         math.min(1 << 16, math.max(16L, (c + 999L) / 1000L)).toInt
       }
-    // centroids are nLists rows — collect them once and rebuild a
-    // local frame, instead of cache(): a cached plan would either leak
-    // (no handle to unpersist after the lazy result materializes) or
+    // centroids are nLists rows — collect them once into a local
+    // frame, instead of cache(): a cached plan would either leak (no
+    // handle to unpersist after the lazy result materializes) or
     // recompute per action; the guard's count pass and the dedup plan
     // both read the literal rows
-    val centRows = Similarity.centroids(nonNull, idCol, vecCol, lists,
-      refineIters, seed)
-    val collected = centRows.collect().toSeq
-    df.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(collected).asJava),
-      centRows.schema)
+    Persisted.localize(Similarity.centroids(nonNull, idCol, vecCol, lists,
+      refineIters, seed))._1
   }
 
   /** [[semanticDedup]] against pre-collected centroid rows (from
@@ -1304,29 +1298,27 @@ object Dedup {
     // ONE assignment kernel pass serves the budget guard AND the dedup
     // plan (r14: the guard's max-cluster count used to re-derive the
     // full bestCosine assignment — a second corpus pass per call).
-    // Persisted only while the guard needs it; without the guard the
-    // plan reads the assignment lazily exactly once, as before.
+    // Persisted only while the guard needs it (released if the guard
+    // refuses or fails, LRU after the lazy result); without the guard
+    // the plan reads the assignment lazily exactly once, as before.
     val assignedRaw = Similarity.assignLists(nonNull, idCol, vecCol, cents)
     val assigned =
-      if (clusterBudget > 0)
-        assignedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else assignedRaw
-    if (clusterBudget > 0) {
-      val maxRow = assigned.groupBy(col("list_id"))
-        .agg(F.count(lit(1)).as("__n"))
-        .agg(F.coalesce(F.max(col("__n")), lit(0L)).as("__m"))
-        .head()
-      val maxSz = maxRow.getLong(0)
-      if (maxSz > clusterBudget) {
-        assigned.unpersist()
-        throw new IllegalArgumentException(
-          s"semanticDedup: the largest cluster holds $maxSz rows — over " +
-            s"clusterBudget=$clusterBudget and headed for a task OOM in the " +
-            s"in-cluster verify. Raise nLists (now $lists) or refineIters " +
-            s"to split it, raise clusterBudget if tasks have the memory, " +
-            s"or clusterBudget=0 to skip this guard.")
+      if (clusterBudget <= 0) assignedRaw
+      else Persisted.keeping { hold =>
+        val a = hold(assignedRaw)
+        val maxSz = a.groupBy(col("list_id"))
+          .agg(F.count(lit(1)).as("__n"))
+          .agg(F.coalesce(F.max(col("__n")), lit(0L)).as("__m"))
+          .head().getLong(0)
+        if (maxSz > clusterBudget)
+          throw new IllegalArgumentException(
+            s"semanticDedup: the largest cluster holds $maxSz rows — over " +
+              s"clusterBudget=$clusterBudget and headed for a task OOM in the " +
+              s"in-cluster verify. Raise nLists (now $lists) or refineIters " +
+              s"to split it, raise clusterBudget if tasks have the memory, " +
+              s"or clusterBudget=0 to skip this guard.")
+        a
       }
-    }
     val dups = assigned
       .select(col("list_id"),
         col(idCol).cast("long").as("__id"), col(vecCol).as("__v"))

@@ -1,10 +1,10 @@
 package graft.ml
 
+import graft.core.Persisted.{holding, keeping, localize}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField}
-import org.apache.spark.storage.StorageLevel
 
 /** The one IVF index lifecycle behind [[Similarity]]'s exact-cosine
   * entry points and [[Pq]]'s IVF-PQ ones — centroids, assignment, probe
@@ -83,21 +83,6 @@ private[ml] object Ivf {
 
   val ExactFit: Fit = Fit(readsAssignment = false, (_, _) => Exact)
 
-  /** Collect a tiny frame (centroids, probe sets) into a LocalRelation:
-    * every reader gets it free, and nothing stays in the session cache. */
-  def localize(df: DataFrame): (DataFrame, Array[Row]) = {
-    val rows = df.collect()
-    (df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), rows)
-  }
-
-  /** Run `body` with a `hold` that persists a frame until `body` exits,
-    * on success and on every exception path alike. */
-  def holding[T](body: (DataFrame => DataFrame) => T): T = {
-    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try body { df => held += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-    finally held.foreach(_.unpersist())
-  }
-
   /** (list count, localized centroid table); `nLists <= 0` self-sizes
     * via [[Similarity.autoNLists]] (one count). */
   def centroids(corpus: DataFrame, idCol: String, vecCol: String, nLists: Int,
@@ -152,7 +137,8 @@ private[ml] object Ivf {
 
   /** In-memory IVF top-k: train, assign, probe `nProbe` lists per query.
     * The assignment persist a training scorer needs is left to LRU: the
-    * returned frame is lazy, so no in-library action can pair with it. */
+    * returned frame is lazy, so no in-library action can pair with it.
+    * A training failure releases it ([[graft.core.Persisted.keeping]]). */
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
            queries: DataFrame, qidCol: String, qvecCol: String,
            k: Int, nLists: Int, nProbe: Int, rerank: Int,
@@ -163,9 +149,9 @@ private[ml] object Ivf {
       initMethod)
     val probes = if (nProbe > 0) nProbe else Similarity.autoNProbe(lists)
     val assigned = Similarity.assignLists(corpus, idCol, vecCol, cents)
-    if (fit.readsAssignment) assigned.persist(StorageLevel.MEMORY_AND_DISK)
-    val scorer = try fit.train(assigned, cents)
-      catch { case t: Throwable => assigned.unpersist(); throw t }
+    val scorer =
+      if (fit.readsAssignment) keeping(hold => fit.train(hold(assigned), cents))
+      else fit.train(assigned, cents)
     val q = queryFrame(queries, qidCol, qvecCol)
     scoreTopK(scorer, scorer.cands(scorer.layout(assigned, idCol, vecCol, cents),
         idCol, vecCol), rank(scorer, q, cents, probes)._1, k, rerank,
@@ -181,8 +167,8 @@ private[ml] object Ivf {
     * re-rank depth as a second knob: the one whose last doubling moved
     * recall by ≥ 0.02 keeps control (nProbe first), a plateau or cap
     * hands over. The full query set runs once, materialized
-    * (localCheckpoint, queries × k rows), so one `finally` releases
-    * every corpus-scale persist on success and exception alike. */
+    * (localCheckpoint, queries × k rows), so one `holding` scope
+    * releases every corpus-scale persist on success and exception alike. */
   def calibrated(corpus: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, qidCol: String, qvecCol: String,
                  k: Int, targetRecall: Double, sampleQueries: Int,

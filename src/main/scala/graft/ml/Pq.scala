@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Persisted
 import graft.functions.PqKernels
 
 /** Product quantization for similarity search at memory-bound scale
@@ -87,7 +88,7 @@ object Pq {
     require(k >= 1 && k <= 256, s"k must be in [1, 256] (byte codes), got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
     // the persist is released on every exit, the requires' included
-    Ivf.holding { hold =>
+    Persisted.holding { hold =>
       if (iters > 0) hold(vecs) // read once per Lloyd round + the seed scan
       // deterministic seed sample: first k vectors in hash order
       val sample = vecs

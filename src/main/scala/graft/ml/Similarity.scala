@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Persisted
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions._
@@ -155,66 +156,67 @@ object Similarity {
     // id — spec-pinned), so results cannot move.
     val spread = corpus.sparkSession.sparkContext.defaultParallelism
     val vPar = vBase.rdd.getNumPartitions
-    val v = (if (vPar * 2 < spread) vBase.repartition(spread) else vBase)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Persisted.holding { hold =>
+      val v = hold(if (vPar * 2 < spread) vBase.repartition(spread) else vBase)
       val first = v.orderBy(col("__cid")).limit(1).collect()
-      if (first.isEmpty) return corpus.limit(0).select(lit(0L).as("list_id"),
+      if (first.isEmpty) corpus.limit(0).select(lit(0L).as("list_id"),
         col(vecCol).cast("array<double>").as("cvec"))
-      // candidate pool keyed by the id's STRING; collected order is not
-      // deterministic, so every driver-side step sorts by this key
-      val pool = scala.collection.mutable.LinkedHashMap[String, Array[Double]]()
-      def add(rows: Array[org.apache.spark.sql.Row]): Unit = rows.foreach(row =>
-        pool.getOrElseUpdate(row.get(0).toString, row.getSeq[Double](1).toArray))
-      add(first)
-      // squared angular distance 2(1-cos) to the nearest candidate, by
-      // assignLists' kernel (only the max sim is read)
-      def withD2(cand: DataFrame) = {
-        val cs = cand.agg(collect_list(struct(col("list_id"), col("cvec"))).as("cs"))
-        v.crossJoin(broadcast(cs))
-          .withColumn("__d2", lit(2.0) * (lit(1.0) -
-            graft.functions.Kernels.bestCosine(col("__cv"), col("cs"))
-              .getField("sim")))
-          .drop("cs")
-      }
-      var r = 0
-      while (r < rounds && pool.size < 1 + rounds * over) {
-        val scored = withD2(centsOf(corpus, pool.toSeq.sortBy(_._1).map(_._2)))
-          .withColumn("__u", shiftrightunsigned(
-            xxhash64(lit(seed), lit(r), col("__cid").cast("string")), 11)
-            .cast("double") / lit(9007199254740992.0)) // 2^53
-        val total = scored.agg(F.sum(col("__d2"))).collect()(0)
-        if (total.isNullAt(0) || total.getDouble(0) <= 0) {
-          r = rounds // every point sits on a candidate — done seeding
-        } else {
-          val tot = total.getDouble(0)
-          // deterministic D²-proportional draw; the limit is a guard
-          // against degenerate D² concentrations, not a sampler
-          add(scored
-            .filter(col("__u") * lit(tot) < lit(over.toDouble) * col("__d2"))
-            .orderBy(col("__d2").desc, col("__cid"))
-            .limit(4 * over)
-            .select(col("__cid"), col("__cv")).collect())
-          r += 1
+      else {
+        // candidate pool keyed by the id's STRING; collected order is not
+        // deterministic, so every driver-side step sorts by this key
+        val pool = scala.collection.mutable.LinkedHashMap[String, Array[Double]]()
+        def add(rows: Array[org.apache.spark.sql.Row]): Unit = rows.foreach(row =>
+          pool.getOrElseUpdate(row.get(0).toString, row.getSeq[Double](1).toArray))
+        add(first)
+        // squared angular distance 2(1-cos) to the nearest candidate, by
+        // assignLists' kernel (only the max sim is read)
+        def withD2(cand: DataFrame) = {
+          val cs = cand.agg(collect_list(struct(col("list_id"), col("cvec"))).as("cs"))
+          v.crossJoin(broadcast(cs))
+            .withColumn("__d2", lit(2.0) * (lit(1.0) -
+              graft.functions.Kernels.bestCosine(col("__cv"), col("cs"))
+                .getField("sim")))
+            .drop("cs")
         }
-      }
-      // pad a too-small pool (tiny corpus / zero distances) with the
-      // lowest-id rows so list count matches the legacy contract
-      if (pool.size < nLists) add(v.orderBy(col("__cid")).limit(nLists + pool.size).collect())
-      // population weights for the || recluster step
-      val keyed = pool.toSeq.sortBy(_._1)
-      val weights: Map[Int, Long] =
-        if (keyed.size <= nLists) Map.empty
-        else {
-          val byList = assignLists(v, "__cid", "__cv", centsOf(corpus, keyed.map(_._2)))
-            .groupBy(col("list_id")).agg(F.count(lit(1)).as("__n")).collect()
-          byList.map(rw => rw.getLong(0).toInt -> rw.getLong(1)).toMap
+        var r = 0
+        while (r < rounds && pool.size < 1 + rounds * over) {
+          val scored = withD2(centsOf(corpus, pool.toSeq.sortBy(_._1).map(_._2)))
+            .withColumn("__u", shiftrightunsigned(
+              xxhash64(lit(seed), lit(r), col("__cid").cast("string")), 11)
+              .cast("double") / lit(9007199254740992.0)) // 2^53
+          val total = scored.agg(F.sum(col("__d2"))).collect()(0)
+          if (total.isNullAt(0) || total.getDouble(0) <= 0) {
+            r = rounds // every point sits on a candidate — done seeding
+          } else {
+            val tot = total.getDouble(0)
+            // deterministic D²-proportional draw; the limit is a guard
+            // against degenerate D² concentrations, not a sampler
+            add(scored
+              .filter(col("__u") * lit(tot) < lit(over.toDouble) * col("__d2"))
+              .orderBy(col("__d2").desc, col("__cid"))
+              .limit(4 * over)
+              .select(col("__cid"), col("__cv")).collect())
+            r += 1
+          }
         }
-      centsOf(corpus, weightedKmeansPlusPlus(
-        keyed.map(_._2).toArray,
-        keyed.indices.map(i => weights.getOrElse(i, 1L).toDouble).toArray,
-        math.min(nLists, keyed.size), seed))
-    } finally v.unpersist()
+        // pad a too-small pool (tiny corpus / zero distances) with the
+        // lowest-id rows so list count matches the legacy contract
+        if (pool.size < nLists) add(v.orderBy(col("__cid")).limit(nLists + pool.size).collect())
+        // population weights for the || recluster step
+        val keyed = pool.toSeq.sortBy(_._1)
+        val weights: Map[Int, Long] =
+          if (keyed.size <= nLists) Map.empty
+          else {
+            val byList = assignLists(v, "__cid", "__cv", centsOf(corpus, keyed.map(_._2)))
+              .groupBy(col("list_id")).agg(F.count(lit(1)).as("__n")).collect()
+            byList.map(rw => rw.getLong(0).toInt -> rw.getLong(1)).toMap
+          }
+        centsOf(corpus, weightedKmeansPlusPlus(
+          keyed.map(_._2).toArray,
+          keyed.indices.map(i => weights.getOrElse(i, 1L).toDouble).toArray,
+          math.min(nLists, keyed.size), seed))
+      }
+    }
   }
 
   /** Driver-local vectors as a (list_id, cvec) frame, ids by position. */

@@ -95,7 +95,7 @@ object Skew {
     // OUTLIVES this call on the success path — it ages out by LRU like
     // every library persist, but a caller that owns the frame and
     // wants it released sooner unpersists after the join's action. A
-    // refused join unpersists before raising.
+    // refused join releases it before raising.
     val guardedRight =
       if (replicationBudget <= 0) right
       else right.queryExecution.optimizedPlan match {
@@ -103,12 +103,11 @@ object Skew {
           checkReplication(lr.data.length.toLong, saltBuckets,
             replicationBudget)
           right
-        case _ =>
-          val p = right.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try checkReplication(p.count(), saltBuckets, replicationBudget)
-          catch { case e: Throwable => p.unpersist(); throw e }
+        case _ => graft.core.Persisted.keeping { hold =>
+          val p = hold(right)
+          checkReplication(p.count(), saltBuckets, replicationBudget)
           p
+        }
       }
     val l = left.withColumn("__salt",
       pmod(spark_partition_id() + monotonically_increasing_id(), lit(saltBuckets)).cast("int"))

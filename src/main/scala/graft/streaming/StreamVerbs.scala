@@ -240,18 +240,15 @@ object StreamVerbs {
   def nearDupIngest(indexPath: String, idCol: String, textCol: String,
                     threshold: Double = 0.8, appendKept: Boolean = true)
                    (sink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
+    (batch: DataFrame, batchId: Long) => graft.core.Persisted.holding { hold =>
       // read by the sink AND the append: one probe computation
-      val kept = graft.ml.Dedup
-        .dedupAgainstNearIndexed(batch, indexPath, idCol, textCol, threshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        sink(kept, batchId)
-        if (appendKept && !kept.isEmpty) {
-          graft.ml.Dedup.appendToNearDupIndex(kept, idCol, textCol, indexPath)
-          ()
-        }
-      } finally { kept.unpersist(); () }
+      val kept = hold(graft.ml.Dedup
+        .dedupAgainstNearIndexed(batch, indexPath, idCol, textCol, threshold))
+      sink(kept, batchId)
+      if (appendKept && !kept.isEmpty) {
+        graft.ml.Dedup.appendToNearDupIndex(kept, idCol, textCol, indexPath)
+        ()
+      }
     }
 
   /** Semantic blocklist at ingest — the EMBEDDING twin of n-gram

@@ -137,9 +137,9 @@ object Classifier {
     // persisted across the two actions below (totals head + llr
     // collect) — without it the whole tokenize/explode/count
     // aggregation over the training corpus runs twice
-    val model = nbModel(train, trainTextCol, label).persist()
-    try compileFrom(model, train, label, maxVocab)
-    finally model.unpersist()
+    graft.core.Persisted.holding { hold =>
+      compileFrom(hold(nbModel(train, trainTextCol, label)), train, label, maxVocab)
+    }
   }
 
   private def compileFrom(model: DataFrame, train: DataFrame, label: Column,
