@@ -91,9 +91,7 @@ object Amplify {
       else Set("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings")
     def wanted(t: String): Boolean = tables.contains(t)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    GraftSession.setLogLevel(spark, "WARN")
+    val spark = Harness.session()
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

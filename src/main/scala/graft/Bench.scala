@@ -277,100 +277,8 @@ object Bench {
       ()
     }))
 
-  // --- contention sentinel -------------------------------------------
-  // Three straight rounds of driver-host perf records needed
-  // out-of-band rescue (r6 noise, r7 unparseable, r8 fully contended):
-  // min-of-3 silently launders a contended window into an
-  // authoritative number, and nothing IN the record let a reader
-  // detect it. Fix: immediately before each query's trial set, time a
-  // fixed SINGLE-THREADED CPU loop (FNV-1a over a fixed 64 MiB
-  // pseudorandom buffer — pure ALU + L1-stream work, no allocation, no
-  // syscalls). On an idle host the reading is stable (clean value
-  // committed in SCALING.md §sentinel); under host contention the OS
-  // steals time from this thread like any other and the reading
-  // inflates proportionally. Any bench number can then be mechanically
-  // classified: sentinel ≈ clean → trust the trial; sentinel ≫ clean →
-  // the window was contended and the trial is a ceiling, not a
-  // measurement.
-  private val sentinelBuf: Array[Byte] = {
-    val b = new Array[Byte](64 << 20)
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < b.length) {
-      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-      b(i) = x.toByte
-      i += 1
-    }
-    b
-  }
-  @volatile private var sentinelSink: Long = 0L // defeats DCE of the loop
-
-  private[graft] def sentinel(): Double = {
-    val t0 = System.nanoTime()
-    var h = 0xCBF29CE484222325L
-    var i = 0
-    while (i < sentinelBuf.length) {
-      h ^= sentinelBuf(i); h *= 0x100000001B3L
-      i += 1
-    }
-    sentinelSink = h
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  // The CPU sentinel alone proved insufficient on its FIRST outing:
-  // an r9 3-SF sweep showed the suite's tail degrading 2-5x (write-
-  // heavy entries worst, early entries untouched, isolated reruns
-  // clean) while every CPU sentinel read 0.086-0.090 s — the
-  // signature of virtual-disk write throttling (burst-credit
-  // exhaustion under sustained benchmark writes), an axis a pure
-  // ALU loop cannot see. This probe times writing 8 MiB + fsync to
-  // the same /tmp the export entries write; clean value committed
-  // next to the CPU sentinel's in SCALING.md.
-  private[graft] def sentinelIo(): Double = {
-    val f = java.io.File.createTempFile("graft_bench_iosentinel", ".bin")
-    try {
-      val chunk = java.util.Arrays.copyOf(sentinelBuf, 1 << 20) // 1 MiB
-      val t0 = System.nanoTime()
-      val out = new java.io.FileOutputStream(f)
-      try {
-        var i = 0
-        while (i < 8) { out.write(chunk); i += 1 }
-        out.getFD.sync()
-      } finally out.close()
-      (System.nanoTime() - t0) / 1e9
-    } finally { f.delete(); () }
-  }
-
-  /** r13: a fixed-size SHUFFLE probe — the normalizer axis the CPU/IO
-    * pair cannot see. The r12 sf0.1 common-set drifted +9% in queries
-    * no diff touched while every CPU sentinel read clean: a day-long
-    * throttle that taxes scheduling/shuffle uniformly sits INSIDE the
-    * pure-ALU and 8-MiB-fsync bands. This probe times a fixed
-    * 4M-row × 32-partition hash-aggregate through the same noop sink
-    * the bench entries use — scheduler latency, shuffle write+read,
-    * codegen'd agg, all on a constant workload. Min-of-3 (same
-    * rationale as the trial protocol); clean band committed in
-    * SCALING.md §sentinel. A drifted RECORD under a clean shuffle
-    * probe implicates code; a drifted probe adjudicates the tax as
-    * host-side and scales the reading. */
-  private[graft] def sentinelShuffle(spark: SparkSession): Double =
-    (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0L, 4L * 1000 * 1000, 1L, 32)
-        .selectExpr("id % 1000 AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-
   def main(args: Array[String]): Unit = {
-    // All numeric JSON below is built with f"" interpolators, which are
-    // locale-sensitive: a comma-decimal default locale would emit
-    // invalid JSON ("value":1,234). Pin the JVM default to ROOT first —
-    // this is a standalone bench main, nothing else owns the locale.
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional args: bench only the named queries (suite order kept) —
     // fast single-query iteration, same protocol as the full run
     val all = headline ++ exportHeadline
@@ -384,46 +292,24 @@ object Bench {
           all.mkString("\n  "))
       sys.exit(2)
     }
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    GraftSession.setLogLevel(spark, "WARN")
+    val spark = Harness.session()
+    import Harness.{sentinel, sentinelIo, sentinelShuffle}
 
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
+    def run(name: String): Double =
+      try Harness.timed {
         exportBench.get(name) match {
           case Some(action) => action(spark, sfDir)
           case None =>
             benchVariant.getOrElse(name, SparkEntry.queries(name))(spark, sfDir).write
               .format("noop").mode("overwrite").save()
         }
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      }._1
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         // a failed run must never win the min-of-3 with its short
         // elapsed time — poison it instead so failures stay visible
         Double.MaxValue
       }
-    }
-    // warmup pass: JIT, codegen cache, parquet footers — then take the
-    // MIN of 3 measured runs per query: a one-off JIT/GC pause in a
-    // single run cannot fabricate a 10x reading (round-1 postmortem).
-    // The cache is cleared between queries (and after warmup): library
-    // persists (minhash signatures, LSH keys) would otherwise pile up
-    // across the whole suite AND let one query's cached plan silently
-    // subsidize a later query that builds the identical sub-plan —
-    // each triple stays self-contained (run 1 pays its own persists,
-    // runs 2-3 measure steady state).
-    // clearCache alone leaves dead shuffle state behind — Spark's
-    // ContextCleaner only reaps it when the owning objects are GC'd,
-    // and a 24g heap may not GC for minutes, so earlier queries' debris
-    // (cleaner thread churn, shuffle-file pressure) bleeds into later
-    // measurements (observed: q_dedup_cc min-of-3 swinging 1.3→3.9 s
-    // run to run). Force a GC at each reset so every query starts from
-    // the same reclaimed state.
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
-    }
     // The CC pair gets extra trials: their iterative loops spawn dozens
     // of short stages, so they are the queries most sensitive to
     // transient host contention — r5 recorded q_dedup_cc at 5.97 s
@@ -452,8 +338,13 @@ object Bench {
     // then means what it says even at 0.3-s entries. Cost: 8 MiB+fsync
     // per gap, only on the 6 export entries.
     val writeEntry = exportHeadline.toSet
+    // Harness.trial's protocol, with the warm-up hoisted to one pass over
+    // the whole suite: warm up every query, reset, then per query the
+    // measured trials and a reset, so each trial set stays
+    // self-contained (the first trial pays its own persists, the rest
+    // measure steady state)
     selected.foreach(run)
-    reset()
+    Harness.reset(spark)
     // --- self-remediating measurement loop (r10) ----------------------
     // r9 made contamination DETECTABLE (per-query sentinel pair before
     // the trials); the driver record still shipped dirty because
@@ -514,14 +405,14 @@ object Bench {
     // probes on write entries; returns (pre, post, trials, clean)
     def attemptWindow(n: String): ((Double, Double), (Double, Double), Seq[Double], Boolean) = {
       val pre = lastProbe
-      if (loopEntry(n)) { run(n); reset() } // discarded pre-trial warmup
+      if (loopEntry(n)) { run(n); Harness.reset(spark) } // discarded pre-trial warmup
       val midIo = scala.collection.mutable.ArrayBuffer.empty[Double]
       val ts = (1 to trials(n)).map { i =>
         val t = run(n)
         if (writeEntry(n) && !noSentinel && i < trials(n)) midIo += sentinelIo()
         t
       }
-      reset()
+      Harness.reset(spark)
       val post = probe()
       lastProbe = post
       val clean = windowClean(pre, post) &&
@@ -568,13 +459,10 @@ object Bench {
       // same budget pool, but the successor's first window starts
       // clean and no trials are discarded.
       if (writeEntry(n) && !noSentinel) {
-        var io = result._2._2 // the window's own post-probe IO reading
-        var spent = 0
-        while (io >= 1.5 * cleanIo && drainSpentSec < drainBudgetSec &&
-            spent < 180) {
-          Thread.sleep(15000L); drainSpentSec += 15; spent += 15
-          io = sentinelIo()
-        }
+        // starts from the window's own post-probe IO reading
+        val (spent, io) = Harness.drainIo(1.5 * cleanIo,
+          math.min(180, drainBudgetSec - drainSpentSec), result._2._2)
+        drainSpentSec += spent
         if (spent > 0) {
           System.err.println(
             f"[bench] $n post-write drain ${spent}s (io now $io%.3f)")

@@ -36,10 +36,4 @@ object GraftSession {
       // cosine_sim, ...) — see GraftExtensions
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
-
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    setLogLevel(s, "WARN")
-    s
-  }
 }

@@ -3,27 +3,29 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Scratch micro-measurement main for the optimization rounds: times
-  * named phases of an operator in isolation (min-of-3 after warmup,
-  * cache-clear + GC between trials — the bench protocol). Not part of
+  * named phases of an operator in isolation (`Harness.trial`: warm-up,
+  * cache reset + GC, min of 3, reset — the bench protocol). Not part of
   * the driver contract; numbers land in OPTIMIZATION_r14.md. */
 object Micro {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    GraftSession.setLogLevel(spark, "ERROR")
-    def t(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    val spark = Harness.session("ERROR")
+    def trial(name: String)(f: => Unit): Unit =
+      println(f"[micro] $name%-28s ${Harness.trial(spark)(f)._1}%.3f s")
+    // one probe under whole-stage codegen, then fully interpreted
+    // (factoryMode NO_CODEGEN — the closest runtime stand-in for the old
+    // CodegenFallback cost)
+    def codegenAB(name: String)(f: => Unit): Unit = {
+      trial(s"${name}_codegen")(f)
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      try trial(s"${name}_interpreted")(f) finally {
+        spark.conf.set("spark.sql.codegen.wholeStage", "true")
+        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      }
     }
-    def trial(name: String)(f: => Unit): Unit = {
-      f // warmup
-      val best = (1 to 3).map { _ =>
-        spark.catalog.clearCache(); System.gc()
-        t(f)
-      }.min
-      println(f"[micro] $name%-28s $best%.3f s")
-    }
+    def emb64() = spark.read.parquet("/tmp/graft_stress64v/embeddings.parquet")
+      .repartition(Harness.cpus)
     args.headOption.getOrElse("zorder") match {
       case "zorder" =>
         val df = SparkEntry.t(spark, d, "lineitem")
@@ -58,37 +60,25 @@ object Micro {
         // ×64 banding-kernel A/B: the embed_dedup arm's dominant cost.
         // Times the LSH banding projection alone (noop sink) under
         // whole-stage codegen (the r14 UnaryKernelCodegen path) and
-        // fully interpreted (factoryMode NO_CODEGEN — the closest
-        // runtime stand-in for the old CodegenFallback cost), then the
-        // full operator.
-        val emb64 = spark.read.parquet("/tmp/graft_stress64v/embeddings.parquet")
-          .repartition(cpus.toInt)
-        val n = emb64.count()
+        // fully interpreted, then the full operator.
+        val emb = emb64()
+        val n = emb.count()
         val bits = graft.ml.Dedup.autoNBits(n, 125L)
         val bands = graft.ml.Dedup.autoBands(0.7, bits, 1e-3)
         System.err.println(s"[micro] lsh64 n=$n bits=$bits bands=$bands")
-        def banding() = emb64.select(
-          graft.functions.Kernels.cosineLshBands(
-            col("embedding"), bands, bits, 42L).as("__keys"))
-        trial("banding_codegen") {
-          banding().write.format("noop").mode("overwrite").save()
-        }
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-        try trial("banding_interpreted") {
-          banding().write.format("noop").mode("overwrite").save()
-        } finally {
-          spark.conf.set("spark.sql.codegen.wholeStage", "true")
-          spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+        codegenAB("banding") {
+          emb.select(graft.functions.Kernels.cosineLshBands(
+              col("embedding"), bands, bits, 42L).as("__keys"))
+            .write.format("noop").mode("overwrite").save()
         }
         trial("embed_dedup_full") {
-          graft.ml.Dedup.embeddingDedup(emb64, "vec_id", "embedding",
+          graft.ml.Dedup.embeddingDedup(emb, "vec_id", "embedding",
             threshold = 0.7).count()
           ()
         }
         // stage isolation: banding projection + posexplode (the
         // Generate interaction), no groupBy/shuffle
-        val keyed64 = emb64.select(col("vec_id").cast("long").as("__id"),
+        val keyed64 = emb.select(col("vec_id").cast("long").as("__id"),
           col("embedding").as("__v"),
           graft.functions.Kernels.cosineLshBands(
             col("embedding"), bands, bits, 42L).as("__keys"))
@@ -107,9 +97,7 @@ object Micro {
       case "lshplan" =>
         // plan shape only (no trials): how the banding kernel sits
         // relative to Generate under the current trait
-        val emb64 = spark.read.parquet("/tmp/graft_stress64v/embeddings.parquet")
-          .repartition(cpus.toInt)
-        val keyed64 = emb64.select(col("vec_id").cast("long").as("__id"),
+        val keyed64 = emb64().select(col("vec_id").cast("long").as("__id"),
           col("embedding").as("__v"),
           graft.functions.Kernels.cosineLshBands(
             col("embedding"), 125, 10, 42L).as("__keys"))
@@ -119,23 +107,13 @@ object Micro {
       case "bestcos64" =>
         // ×64 assignment-kernel A/B (bestCosine, the IVF/semantic
         // assign cost): codegen trait vs fully interpreted.
-        val emb64 = spark.read.parquet("/tmp/graft_stress64v/embeddings.parquet")
-          .repartition(cpus.toInt)
+        val emb = emb64()
         val cents = graft.ml.Similarity.centroids(
-          emb64, "vec_id", "embedding", nLists = 358, refineIters = 0)
+          emb, "vec_id", "embedding", nLists = 358, refineIters = 0)
         val (centsL, _) = graft.core.Persisted.localize(cents)
-        def assign() = graft.ml.Similarity.assignLists(
-          emb64, "vec_id", "embedding", centsL)
-        trial("assign_codegen") {
-          assign().write.format("noop").mode("overwrite").save()
-        }
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-        try trial("assign_interpreted") {
-          assign().write.format("noop").mode("overwrite").save()
-        } finally {
-          spark.conf.set("spark.sql.codegen.wholeStage", "true")
-          spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+        codegenAB("assign") {
+          graft.ml.Similarity.assignLists(emb, "vec_id", "embedding", centsL)
+            .write.format("noop").mode("overwrite").save()
         }
       case other =>
         System.err.println(s"[micro] unknown probe $other")

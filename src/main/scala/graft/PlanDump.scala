@@ -8,7 +8,7 @@ package graft
   * plan is the one whose seconds the bench records.
   *
   * `sbt "runMain graft.PlanDump <outDir> <suffix> [query...]"` —
-  * env `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench.
+  * env `SPARK_GRAFT_SF_DIR` as in Bench, the session from `Harness`.
   * Export entries (Unit actions) have no single plan; x_zorder_write's
   * layout frame is captured via its zOrderBy stage explicitly. */
 object PlanDump {
@@ -18,9 +18,7 @@ object PlanDump {
     outDir.mkdirs()
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    GraftSession.setLogLevel(spark, "ERROR")
+    val spark = Harness.session("ERROR")
     val planOnly: Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = Map(
       // the write's input plan: quantile pass excluded (its plan is a

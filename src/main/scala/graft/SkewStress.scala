@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Skew
@@ -74,16 +74,13 @@ object SkewStress {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val src = if (args.length > 0) args(0) else "/tmp/graft_skew_src"
     val dst = if (args.length > 1) args(1) else "/tmp/graft_skew"
     val hotPct = if (args.length > 2) args(2).toInt else 30
     require(hotPct > 0 && hotPct < 100, s"hotPct in (0,100): $hotPct")
     val ampFactor = if (args.length > 3) args(3).toInt else 16
     require(ampFactor >= 1, s"amplification factor must be >= 1: $ampFactor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    GraftSession.setLogLevel(spark, "WARN")
+    val spark = Harness.session()
     val tally = new SpillTally
     spark.sparkContext.addSparkListener(tally)
 
@@ -200,7 +197,7 @@ object SkewStress {
     require(joinEqual, s"saltedJoin diverged from the plain join at stress scale: $jp vs $js")
     require(aggEqual, "saltedAgg diverged from the plain groupBy at stress scale")
 
-    // ---- timed arms (Bench protocol: warmup, min-of-3, probe pair) -----
+    // ---- timed arms (Harness.trial, inside one probe pair) ------------
     val arms: Seq[(String, () => DataFrame)] = Seq(
       "join_big_aqe" -> (() => joinBigAqe()),
       "join_plain" -> (() => joinPlain()),
@@ -208,41 +205,27 @@ object SkewStress {
       "agg_plain" -> (() => aggPlain()),
       "agg_salted" -> (() => aggSalted()),
       "sessionize_hot" -> (() => sessionizeHot()))
-    Bench.sentinel(); Bench.sentinelIo() // warm the probes
-    val pre = (Bench.sentinel(), Bench.sentinelIo())
-    val spill = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-    val times = arms.map { case (name, mk) =>
-      noop(mk()) // warmup: JIT + codegen + footers
-      spark.catalog.clearCache(); System.gc()
-      // grace BEFORE the reset, mirroring the post-measurement sleep:
-      // task-end events from the warmup (or the previous arm's
-      // stragglers) post asynchronously and would otherwise leak into
-      // this arm's spill attribution
+    // spill is counted over the measured trials only. listenerBus is
+    // private[spark]; task-end events post within milliseconds of the
+    // job returning — a short grace beats reflection into Spark
+    // internals for a diagnostic counter. The grace before the tally
+    // reset keeps the warm-up's (or the previous arm's) straggling
+    // events out of this arm; the one after lets this arm's land.
+    val (measured, sentinelJson) = Harness.bracketed(arms.map { case (name, mk) =>
+      val (t, _) = Harness.trial(spark,
+        measuring = () => { Thread.sleep(1000); tally.reset() })(noop(mk()))
       Thread.sleep(1000)
-      tally.reset()
-      val t = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        noop(mk())
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      // listenerBus is private[spark]; task-end events post within
-      // milliseconds of the job returning — a short grace beats
-      // reflection into Spark internals for a diagnostic counter
-      Thread.sleep(1000)
-      spill(name) = (tally.mem, tally.disk)
-      name -> t
-    }
-    val post = (Bench.sentinel(), Bench.sentinelIo())
+      (name, t, tally.mem, tally.disk)
+    })
 
-    val armsJson = times.map { case (n, t) => f""""$n":$t%.3f""" }.mkString(",")
-    val spillJson = spill.map { case (n, (m, dk)) =>
+    val armsJson = measured.map { case (n, t, _, _) => f""""$n":$t%.3f""" }.mkString(",")
+    val spillJson = measured.map { case (n, _, m, dk) =>
       s""""$n":{"mem":$m,"disk":$dk}""" }.mkString(",")
     println(
       f"""{"metric":"skew_stress","hot_pct":$hotPct,"src":"$src","heap":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",""" +
         f""""lineitem_rows":$liRows,"hot_join_rows":$hotLiRows,"events_rows":$evRows,"hot_user_rows":$hotEvRows,""" +
         f""""arms":{$armsJson},"spill_bytes":{$spillJson},""" +
-        f""""join_equal":$joinEqual,"agg_equal":$aggEqual,""" +
-        f""""sentinel":{"cpu_pre":${pre._1}%.3f,"io_pre":${pre._2}%.3f,"cpu_post":${post._1}%.3f,"io_post":${post._2}%.3f}}""")
+        f""""join_equal":$joinEqual,"agg_equal":$aggEqual,$sentinelJson}""")
     spark.stop()
   }
 }

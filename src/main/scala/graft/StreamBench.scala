@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Streaming throughput harness — the perf artifact for the streaming
   * twins (their correctness is spec-pinned in StreamingSpec; this
@@ -24,34 +25,37 @@ import org.apache.spark.sql.functions._
   */
 object StreamBench {
 
-  private def runQuery(spark: SparkSession, name: String,
-                       build: DataFrame => DataFrame,
-                       feed: (Int, Int) => Seq[org.apache.spark.sql.Row],
-                       schema: org.apache.spark.sql.types.StructType,
-                       rows: Int, batches: Int): Unit = {
+  private val Batches = 10
+
+  /** One MemoryStream input: its schema and its rows for (batch index,
+    * rows per batch). */
+  private final case class Feed(schema: StructType, rows: (Int, Int) => Seq[Row])
+
+  /** Runs `build` over one MemoryStream per feed. Each micro-batch adds
+    * to EVERY feed, then drains — for the stream-stream verbs the
+    * dual-watermark advancement is in the measurement, as a real
+    * dual-source trigger pays it. `rows` is per feed; the record counts
+    * the rows of all feeds. Checkpoints go under `ckpt`. */
+  private def run(spark: SparkSession, ckpt: java.io.File, name: String,
+                  rows: Int, feeds: Seq[Feed])
+                 (build: Seq[DataFrame] => DataFrame): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 
     def once(nRows: Int, nBatches: Int, tag: String): (Double, Long, Long) = {
-      implicit val sqlCtx = spark.sqlContext
-      implicit val enc: ExpressionEncoder[org.apache.spark.sql.Row] =
-        ExpressionEncoder(RowEncoder.encoderFor(schema))
-      val ms = MemoryStream[org.apache.spark.sql.Row]
-      val out = build(ms.toDF())
+      val streams = feeds.map(f =>
+        MemoryStream[Row](ExpressionEncoder(RowEncoder.encoderFor(f.schema)), spark.sqlContext))
       val sink = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = out.writeStream
+      val q = build(streams.map(_.toDF())).writeStream
         .outputMode(if (name == "hopping_counts") "update" else "append")
-        .option("checkpointLocation",
-          s"/tmp/graft_streambench_${name}_${tag}_${System.nanoTime()}")
+        .option("checkpointLocation", new java.io.File(ckpt, s"${name}_$tag").getPath)
         .foreachBatch { (b: DataFrame, _: Long) => sink.addAndGet(b.count()); () }
         .start()
       val per = nRows / nBatches
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach { bi =>
-        ms.addData(feed(bi, per))
+      val (wall, _) = Harness.timed((0 until nBatches).foreach { bi =>
+        streams.zip(feeds).foreach { case (ms, f) => ms.addData(f.rows(bi, per)) }
         q.processAllAvailable()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
+      })
       val prog = q.lastProgress
       val (srows, sbytes) =
         if (prog != null && prog.stateOperators.nonEmpty)
@@ -62,72 +66,15 @@ object StreamBench {
       (wall, srows, sbytes)
     }
 
-    once(math.max(rows / 10, batches), math.max(batches / 4, 1), "warm")
-    val (wall, srows, sbytes) = once(rows, batches, "run")
-    println(f"""{"stream":"$name","rows":$rows,"batches":$batches,"wall_sec":$wall%.3f,"rows_per_sec":${rows / wall}%.0f,"state_rows":$srows,"state_bytes":$sbytes}""")
-  }
-
-  /** Two-feed variant for the stream-stream verbs: both sides are
-    * MemoryStreams fed in lockstep per micro-batch (each batch adds to
-    * BOTH feeds, then drains — dual-watermark advancement included in
-    * the measurement, as a real dual-source trigger pays it). */
-  private def runQuery2(spark: SparkSession, name: String,
-                        build: (DataFrame, DataFrame) => DataFrame,
-                        feedL: (Int, Int) => Seq[org.apache.spark.sql.Row],
-                        feedR: (Int, Int) => Seq[org.apache.spark.sql.Row],
-                        schemaL: org.apache.spark.sql.types.StructType,
-                        schemaR: org.apache.spark.sql.types.StructType,
-                        rows: Int, batches: Int): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-
-    def once(nRows: Int, nBatches: Int, tag: String): (Double, Long, Long) = {
-      implicit val sqlCtx = spark.sqlContext
-      val encL: ExpressionEncoder[org.apache.spark.sql.Row] =
-        ExpressionEncoder(RowEncoder.encoderFor(schemaL))
-      val encR: ExpressionEncoder[org.apache.spark.sql.Row] =
-        ExpressionEncoder(RowEncoder.encoderFor(schemaR))
-      val msL = MemoryStream[org.apache.spark.sql.Row](encL, sqlCtx)
-      val msR = MemoryStream[org.apache.spark.sql.Row](encR, sqlCtx)
-      val out = build(msL.toDF(), msR.toDF())
-      val sink = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = out.writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          s"/tmp/graft_streambench_${name}_${tag}_${System.nanoTime()}")
-        .foreachBatch { (b: DataFrame, _: Long) => sink.addAndGet(b.count()); () }
-        .start()
-      val per = nRows / nBatches
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach { bi =>
-        msL.addData(feedL(bi, per))
-        msR.addData(feedR(bi, per))
-        q.processAllAvailable()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val prog = q.lastProgress
-      val (srows, sbytes) =
-        if (prog != null && prog.stateOperators.nonEmpty)
-          (prog.stateOperators.map(_.numRowsTotal).sum,
-            prog.stateOperators.map(_.memoryUsedBytes).sum)
-        else (0L, 0L)
-      q.stop()
-      (wall, srows, sbytes)
-    }
-    once(rows / 10, math.max(1, batches / 2), "warmup")
-    val (wall, srows, sbytes) = once(rows, batches, "measured")
-    // rows/s counts BOTH feeds: the verb ingests 2×rows total
-    println(f"""{"stream":"$name","rows":${2L * rows},"batches":$batches,""" +
-      f""""wall_sec":$wall%.3f,"rows_per_sec":${(2L * rows / wall).toLong},""" +
-      f""""state_rows":$srows,"state_bytes":$sbytes}""")
+    once(math.max(rows / 10, Batches), math.max(Batches / 4, 1), "warm")
+    val (wall, srows, sbytes) = once(rows, Batches, "run")
+    val total = feeds.size.toLong * rows
+    println(f"""{"stream":"$name","rows":$total,"batches":$Batches,"wall_sec":$wall%.3f,"rows_per_sec":${total / wall}%.0f,"state_rows":$srows,"state_bytes":$sbytes}""")
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    GraftSession.setLogLevel(spark, "WARN")
+    val spark = Harness.session()
     // state-partition sizing: every stateful micro-batch pays one
     // state-store commit (delta file + sync) PER shuffle partition —
     // at 32 partitions the per-batch floor drowns the per-row cost on
@@ -135,9 +82,15 @@ object StreamBench {
     // (state parallelism ~ cores doing real work per batch); a
     // cluster sizes this to executors, not to 200.
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_streambench").toFile
+    try verbs(spark, sfDir, ckpt)
+    finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
+      spark.stop()
+    }
+  }
 
+  private def verbs(spark: SparkSession, sfDir: String, ckpt: java.io.File): Unit = {
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
 
     // 1) signature dedup: 1M rows, 25% duplicate signatures, event
@@ -146,13 +99,12 @@ object StreamBench {
     val sigSchema = StructType(Seq(
       StructField("id", LongType), StructField("sig", LongType),
       StructField("ts", TimestampType)))
-    runQuery(spark, "signature_dedup",
-      df => graft.streaming.StreamVerbs.streamingSignatureDedup(df, "sig", "ts"),
+    run(spark, ckpt, "signature_dedup", 1000000, Seq(Feed(sigSchema,
       (bi, per) => (0 until per).map { i =>
         val gid = bi.toLong * per + i
         Row(gid, gid % (per * 3L / 4 + 1) + bi.toLong * per, // 25% intra-batch dups
           new java.sql.Timestamp(base.getTime + gid * 10))
-      }, sigSchema, rows = 1000000, batches = 10)
+      })))(dfs => graft.streaming.StreamVerbs.streamingSignatureDedup(dfs.head, "sig", "ts"))
 
     // 2) hopping counts: 1M events over ~28 simulated hours, 1h
     //    window / 15m slide / 2h lateness, 5 event types (each row
@@ -160,13 +112,12 @@ object StreamBench {
     val evSchema = StructType(Seq(
       StructField("ts", TimestampType), StructField("event_type", StringType),
       StructField("value", DoubleType)))
-    runQuery(spark, "hopping_counts",
-      df => graft.streaming.StreamVerbs.hoppingCounts(df),
+    run(spark, ckpt, "hopping_counts", 1000000, Seq(Feed(evSchema,
       (bi, per) => (0 until per).map { i =>
         val gid = bi.toLong * per + i
         Row(new java.sql.Timestamp(base.getTime + gid * 100), // 100ms apart
           s"type${gid % 5}", (gid % 97).toDouble)
-      }, evSchema, rows = 1000000, batches = 10)
+      })))(dfs => graft.streaming.StreamVerbs.hoppingCounts(dfs.head))
 
     // 3) quality filter: NB model batch-trained on the sf documents
     //    (lang==en as the positive class — same shape as the
@@ -177,12 +128,11 @@ object StreamBench {
     val texts = docs.select("text").limit(2000).collect().map(_.getString(0))
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    runQuery(spark, "quality_filter",
-      df => graft.streaming.StreamVerbs.streamQualityFilter(df, "text", model),
+    run(spark, ckpt, "quality_filter", 200000, Seq(Feed(docSchema,
       (bi, per) => (0 until per).map { i =>
         val gid = bi.toLong * per + i
         Row(gid, texts((gid % texts.length).toInt))
-      }, docSchema, rows = 200000, batches = 10)
+      })))(dfs => graft.streaming.StreamVerbs.streamQualityFilter(dfs.head, "text", model))
 
     // --- r11: the three stateful twins the differential fuzzer added ---
 
@@ -192,27 +142,25 @@ object StreamBench {
     //    Misra–Gries sketch row per open window
     val keySchema = StructType(Seq(
       StructField("k", StringType), StructField("ts", TimestampType)))
-    runQuery(spark, "streaming_topk",
-      df => graft.streaming.StreamVerbs.streamingTopK(df, "k", "ts"),
+    run(spark, ckpt, "streaming_topk", 1000000, Seq(Feed(keySchema,
       (bi, per) => (0 until per).map { i =>
         val gid = bi.toLong * per + i
         val u = (gid * 2654435761L) % 1000
         Row(s"k${(u * u) / 10000}", // ~100-key domain, low keys hot
           new java.sql.Timestamp(base.getTime + gid * 100))
-      }, keySchema, rows = 1000000, batches = 10)
+      })))(dfs => graft.streaming.StreamVerbs.streamingTopK(dfs.head, "k", "ts"))
 
     // 5) key-based streaming dedup: 1M rows, 25% duplicate (key, ts)
     //    pairs within each batch; state = distinct pairs in the 2h
     //    horizon
     val kvSchema = StructType(Seq(
       StructField("k1", LongType), StructField("ts", TimestampType)))
-    runQuery(spark, "streaming_dedup",
-      df => graft.streaming.StreamVerbs.streamingDedup(df, Seq("k1")),
+    run(spark, ckpt, "streaming_dedup", 1000000, Seq(Feed(kvSchema,
       (bi, per) => (0 until per).map { i =>
         val gid = bi.toLong * per + i
         val k = gid % (per * 3L / 4 + 1) + bi.toLong * per
         Row(k, new java.sql.Timestamp(base.getTime + k * 10))
-      }, kvSchema, rows = 1000000, batches = 10)
+      })))(dfs => graft.streaming.StreamVerbs.streamingDedup(dfs.head, Seq("k1")))
 
     // 6) stream-stream interval join: 500k rows per feed, 5k-key
     //    domain, right rows offset ≤5m from their left partners (all
@@ -221,19 +169,17 @@ object StreamBench {
       StructField("k", LongType), StructField("lts", TimestampType)))
     val rSchema = StructType(Seq(
       StructField("k", LongType), StructField("rts", TimestampType)))
-    runQuery2(spark, "interval_join",
-      (l, r) => graft.streaming.StreamVerbs.intervalJoin(
-        l, "lts", r, "rts", Seq("k")),
-      (bi, per) => (0 until per).map { i =>
+    run(spark, ckpt, "interval_join", 500000, Seq(
+      Feed(lSchema, (bi, per) => (0 until per).map { i =>
         val gid = bi.toLong * per + i
         Row(gid % 5000, new java.sql.Timestamp(base.getTime + gid * 50))
-      },
-      (bi, per) => (0 until per).map { i =>
+      }),
+      Feed(rSchema, (bi, per) => (0 until per).map { i =>
         val gid = bi.toLong * per + i
         Row(gid % 5000,
           new java.sql.Timestamp(base.getTime + gid * 50 + (gid % 300) * 1000))
-      }, lSchema, rSchema, rows = 500000, batches = 10)
-
-    spark.stop()
+      }))) { case Seq(l, r) =>
+      graft.streaming.StreamVerbs.intervalJoin(l, "lts", r, "rts", Seq("k"))
+    }
   }
 }

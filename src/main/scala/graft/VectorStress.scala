@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.ml.{Pq, Similarity}
 
 /** Vector-family stress at the LARGEST amplifiable factor — the
   * closing arm of the self-sizing story. The embeddings amplifier
@@ -37,11 +39,8 @@ import org.apache.spark.sql.functions._
 object VectorStress {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val src = if (args.length > 0) args(0) else "/tmp/graft_stress64v"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    GraftSession.setLogLevel(spark, "WARN")
+    val spark = Harness.session()
 
     // The amplified fixture is ONE ~65MB parquet file → one input
     // split → every map-only pass serializes on a single task. A real
@@ -50,24 +49,24 @@ object VectorStress {
     // stress measures — from single-file read parallelism, which is a
     // fixture artifact.
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
-      .repartition(cpus.toInt)
+      .repartition(Harness.cpus)
     val n = emb.count()
     val queries = emb.filter(col("vec_id") < 50) // copy 0 keeps base ids
     val nQueries = queries.count() // measured, not assumed — a different
     // fixture's vec_id space may not yield exactly 50 rows
     System.err.println(s"[vector] corpus $n vectors, $nQueries queries")
 
-    def timed(mk: () => DataFrame): (Double, Long) = {
-      var rows = 0L
-      rows = mk().count() // warmup (count forces the full plan)
-      spark.catalog.clearCache(); System.gc()
-      val t = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        rows = mk().count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      (t, rows)
-    }
+    // each arm named once: timed by Harness.trial, its recall measured
+    def brute() = Similarity.bruteForceTopK(
+      emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10)
+    def ivf(nProbe: Int = 0) = Similarity.ivfTopK(
+      emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+      k = 10, nProbe = nProbe)
+    def ivfPq(residual: Boolean) = Pq.ivfPqTopK(
+      emb, "vec_id", "embedding", queries, "vec_id", "embedding",
+      k = 10, m = 16, pqK = 64, rerank = 50, residual = residual)
+    def timed(arm: => DataFrame): (Double, Long) =
+      Harness.trial(spark)(arm.count()) // count forces the full plan
 
     // r14 (verdict #2): INTER-ARM drain — the r13 suite ran the ~55 s
     // calibrated-PQ arm (sustained shuffle/spill pressure) straight
@@ -78,51 +77,35 @@ object VectorStress {
     // committed band 0.018–0.030) so a reading is attributable to the
     // OPERATOR, not to its predecessor's tail. Bounded: 180 s per arm.
     def drain(label: String): Unit = {
-      var io = Bench.sentinelIo()
-      var spent = 0
-      while (io >= 0.033 && spent < 180) {
-        Thread.sleep(15000L); spent += 15; io = Bench.sentinelIo()
-      }
+      val (spent, io) = Harness.drainIo(0.033, 180)
       if (spent > 0)
         System.err.println(f"[vector] drain before $label: ${spent}s (io now $io%.3f)")
     }
 
-    Bench.sentinel(); Bench.sentinelIo()
-    val pre = (Bench.sentinel(), Bench.sentinelIo())
+    val (record, sentinelJson) = Harness.bracketed {
+      // ground truth once, untimed (the brute-force arm is timed below
+      // as the baseline): ~500 (query, neighbour) pairs held on the
+      // driver, where no cache reset between trials can drop them
+      val truthRows = brute().select(col("query_id"), col("nn_id")).collect()
+      val truth = truthRows.map(r => (r.getLong(0), r.getLong(1))).toSet
+      def recallOf(rows: Array[Row]): Double =
+        rows.count(r => truth((r.getLong(0), r.getLong(1)))).toDouble / truthRows.length
+      def recallOfArm(arm: DataFrame): Double =
+        recallOf(arm.select(col("query_id"), col("nn_id")).collect())
 
-    graft.core.Persisted.holding { hold =>
-      // ground truth once, cached for the recall joins (untimed: the
-      // brute-force arm is timed separately below as the baseline)
-      val truth = hold(graft.ml.Similarity.bruteForceTopK(
-          emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10)
-        .select(col("query_id"), col("nn_id")))
-      val truthPairs = truth.count()
-
-      def recallOf(res: DataFrame): Double = {
-        val hit = res.select(col("query_id"), col("nn_id"))
-          .join(truth, Seq("query_id", "nn_id"), "left_semi").count()
-        hit.toDouble / truthPairs
-      }
-
-      val (tBrute, _) = timed(() => graft.ml.Similarity.bruteForceTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
+      val (tBrute, _) = timed(brute())
 
       drain("ann_ivf")
-      val (tIvf, _) = timed(() => graft.ml.Similarity.ivfTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
-      val rIvf = recallOf(graft.ml.Similarity.ivfTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
+      val (tIvf, _) = timed(ivf())
+      val rIvf = recallOfArm(ivf())
       // recall-vs-probe sweep at the auto list count: distinguishes "the
       // √nLists probe heuristic under-probes" (recall jumps superlinearly
       // with nProbe) from "the corpus is near-unclusterable at this
       // similarity floor" (recall ~ scanned fraction, no cheap fix)
-      val autoLists = graft.ml.Similarity.autoNLists(n)
-      val autoProbe = graft.ml.Similarity.autoNProbe(autoLists)
-      def ivfAt(p: Int) = recallOf(graft.ml.Similarity.ivfTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, nProbe = p))
-      val rIvf2 = ivfAt(2 * autoProbe)
-      val rIvf4 = ivfAt(4 * autoProbe)
+      val autoLists = Similarity.autoNLists(n)
+      val autoProbe = Similarity.autoNProbe(autoLists)
+      val rIvf2 = recallOfArm(ivf(2 * autoProbe))
+      val rIvf4 = recallOfArm(ivf(4 * autoProbe))
 
       // CALIBRATED arm (r12): the engineered answer to the 0.41 default
       // reading — ivfTopKCalibrated measures recall on a 20-query sample
@@ -134,31 +117,22 @@ object VectorStress {
       // query truth, so the floor carries sampling slack vs the in-job
       // sample.
       drain("ann_ivf_cal")
-      val tCal0 = System.nanoTime()
-      val calRows = graft.ml.Similarity.ivfTopKCalibrated(
+      val (tCal, calRows) = Harness.timed(Similarity.ivfTopKCalibrated(
           emb, "vec_id", "embedding", queries, "vec_id", "embedding",
           k = 10, targetRecall = 0.7)
         .select(col("query_id"), col("nn_id"), col("measured_recall"),
-          col("calibrated_nprobe")).collect()
-      val tCal = (System.nanoTime() - tCal0) / 1e9
-      val truthSet = truth.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val rCal = calRows.count(r => truthSet((r.getLong(0), r.getLong(1))))
-        .toDouble / truthPairs
+          col("calibrated_nprobe")).collect())
+      val rCal = recallOf(calRows)
       val calProbe = if (calRows.nonEmpty) calRows.head.getInt(3) else -1
       val calSampled = if (calRows.nonEmpty) calRows.head.getDouble(2) else -1.0
-      spark.catalog.clearCache(); System.gc()
 
       // RAW-codebook arm (r13 semantics, residual=false): the structural
       // baseline the r14 residual default is measured against on the
       // exact fixture that exposed it (default recall 0.354 vs the IVF
       // candidate-set ceiling 0.408 at the same autoNProbe)
       drain("ann_ivf_pq_raw")
-      val (tPqRaw, _) = timed(() => graft.ml.Pq.ivfPqTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, m = 16, pqK = 64, rerank = 50, residual = false))
-      val rPqRaw = recallOf(graft.ml.Pq.ivfPqTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, m = 16, pqK = 64, rerank = 50, residual = false))
+      val (tPqRaw, _) = timed(ivfPq(residual = false))
+      val rPqRaw = recallOfArm(ivfPq(residual = false))
 
       // r14 DEFAULT arm: residual (IVFADC) codes. Probe loss bounds this
       // from above at the plain-IVF reading (same candidates, same
@@ -166,12 +140,8 @@ object VectorStress {
       // candidate set — the raw arm's gap below the IVF ceiling —
       // closes.
       drain("ann_ivf_pq")
-      val (tPq, _) = timed(() => graft.ml.Pq.ivfPqTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, m = 16, pqK = 64, rerank = 50))
-      val rPq = recallOf(graft.ml.Pq.ivfPqTopK(
-        emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, m = 16, pqK = 64, rerank = 50))
+      val (tPq, _) = timed(ivfPq(residual = true))
+      val rPq = recallOfArm(ivfPq(residual = true))
 
       // CALIBRATED PQ arm (r13): the two-knob answer to the 0.354
       // default reading — ivfPqTopKCalibrated escalates nProbe ×2 while
@@ -181,21 +151,15 @@ object VectorStress {
       // operator, as with the IVF calibrated arm); recall re-measured on
       // the FULL query truth.
       drain("ann_ivf_pq_cal")
-      val tPqCal0 = System.nanoTime()
-      val pqCalRows = graft.ml.Pq.ivfPqTopKCalibrated(
+      val (tPqCal, pqCalRows) = Harness.timed(Pq.ivfPqTopKCalibrated(
           emb, "vec_id", "embedding", queries, "vec_id", "embedding",
           k = 10, targetRecall = 0.7, m = 16, pqK = 64)
         .select(col("query_id"), col("nn_id"), col("measured_recall"),
-          col("calibrated_nprobe"), col("calibrated_rerank")).collect()
-      val tPqCal = (System.nanoTime() - tPqCal0) / 1e9
-      val rPqCal = pqCalRows.count(r => truthSet((r.getLong(0), r.getLong(1))))
-        .toDouble / truthPairs
+          col("calibrated_nprobe"), col("calibrated_rerank")).collect())
+      val rPqCal = recallOf(pqCalRows)
       val pqCalProbe = if (pqCalRows.nonEmpty) pqCalRows.head.getInt(3) else -1
       val pqCalRerank = if (pqCalRows.nonEmpty) pqCalRows.head.getInt(4) else -1
       val pqCalSampled = if (pqCalRows.nonEmpty) pqCalRows.head.getDouble(2) else -1.0
-      // also drops the truth cache: the recall joins are done, and the
-      // dedup arms don't read it
-      spark.catalog.clearCache(); System.gc()
 
       // threshold 0.7, NOT the bench suite's 0.45: at 128k vectors the
       // auto geometry PRICED OUT 0.45 — autoBands raised ("522 bands >
@@ -204,14 +168,13 @@ object VectorStress {
       // is itself a finding this stress records. 0.7 is the regime
       // banded LSH is built for (near-dup, p = 0.75).
       drain("embed_dedup")
-      val (tEmbDedup, keepEmb) = timed(() => graft.ml.Dedup.embeddingDedup(
+      val (tEmbDedup, keepEmb) = timed(graft.ml.Dedup.embeddingDedup(
         emb, "vec_id", "embedding", threshold = 0.7))
 
       drain("semantic_dedup")
-      val (tSem, keepSem) = timed(() => graft.ml.Dedup.semanticDedup(
+      val (tSem, keepSem) = timed(graft.ml.Dedup.semanticDedup(
         emb, "vec_id", "embedding", threshold = 0.45))
 
-      val post = (Bench.sentinel(), Bench.sentinelIo())
       // REGRESSION floors pinned NEAR the measured default values (r12
       // ADVICE: floors at 0.25/0.2 let a 0.41→0.26 regression pass
       // silently): IVF defaults measured 0.41 on this fixture, PQ
@@ -236,15 +199,14 @@ object VectorStress {
         f"calibrated IVF-PQ recall missed target at n=$n: $rPqCal%.3f " +
           f"(sampled $pqCalSampled%.3f, nProbe=$pqCalProbe, rerank=$pqCalRerank)")
 
-      println(
-        f"""{"metric":"vector_stress","corpus":$n,"queries":$nQueries,"k":10,""" +
-          f""""arms":{"ann_brute":$tBrute%.3f,"ann_ivf":$tIvf%.3f,"ann_ivf_cal":$tCal%.3f,"ann_ivf_pq_raw":$tPqRaw%.3f,"ann_ivf_pq":$tPq%.3f,"ann_ivf_pq_cal":$tPqCal%.3f,""" +
-          f""""embed_dedup":$tEmbDedup%.3f,"semantic_dedup":$tSem%.3f},""" +
-          f""""recall":{"ivf":$rIvf%.3f,"ivf_2x_probe":$rIvf2%.3f,"ivf_4x_probe":$rIvf4%.3f,"ivf_cal":$rCal%.3f,"ivf_cal_sampled":$calSampled%.3f,"ivf_pq_raw":$rPqRaw%.3f,"ivf_pq":$rPq%.3f,"ivf_pq_cal":$rPqCal%.3f,"ivf_pq_cal_sampled":$pqCalSampled%.3f},""" +
-          f""""geometry":{"auto_nlists":$autoLists,"auto_nprobe":$autoProbe,"cal_nprobe":$calProbe,"pq_cal_nprobe":$pqCalProbe,"pq_cal_rerank":$pqCalRerank},""" +
-          f""""keeps":{"embed_dedup":$keepEmb,"semantic_dedup":$keepSem},""" +
-          f""""sentinel":{"cpu_pre":${pre._1}%.3f,"io_pre":${pre._2}%.3f,"cpu_post":${post._1}%.3f,"io_post":${post._2}%.3f}}""")
+      f"""{"metric":"vector_stress","corpus":$n,"queries":$nQueries,"k":10,""" +
+        f""""arms":{"ann_brute":$tBrute%.3f,"ann_ivf":$tIvf%.3f,"ann_ivf_cal":$tCal%.3f,"ann_ivf_pq_raw":$tPqRaw%.3f,"ann_ivf_pq":$tPq%.3f,"ann_ivf_pq_cal":$tPqCal%.3f,""" +
+        f""""embed_dedup":$tEmbDedup%.3f,"semantic_dedup":$tSem%.3f},""" +
+        f""""recall":{"ivf":$rIvf%.3f,"ivf_2x_probe":$rIvf2%.3f,"ivf_4x_probe":$rIvf4%.3f,"ivf_cal":$rCal%.3f,"ivf_cal_sampled":$calSampled%.3f,"ivf_pq_raw":$rPqRaw%.3f,"ivf_pq":$rPq%.3f,"ivf_pq_cal":$rPqCal%.3f,"ivf_pq_cal_sampled":$pqCalSampled%.3f},""" +
+        f""""geometry":{"auto_nlists":$autoLists,"auto_nprobe":$autoProbe,"cal_nprobe":$calProbe,"pq_cal_nprobe":$pqCalProbe,"pq_cal_rerank":$pqCalRerank},""" +
+        f""""keeps":{"embed_dedup":$keepEmb,"semantic_dedup":$keepSem},"""
     }
+    println(record + sentinelJson + "}")
     spark.stop()
   }
 }

@@ -117,9 +117,11 @@ object Dedup {
                        maxPartners: Int = 64): DataFrame = {
     require(maxPartners >= 1,
       s"maxPartners must be >= 1 (got $maxPartners): 0 would disable the probe")
+    // the corpus signatures stay persisted (documented-LRU): a caller
+    // probing more batches against the same corpus frame reuses them
     val (_, anchors) = bandedAnchors(
       longIds(corpus, idCol, textCol, "dedupAgainstNear"), idCol, textCol,
-      numHashes, bands, shingleSize, maxPartners)
+      numHashes, bands, shingleSize, maxPartners, persist = true)
     probeAnchors(batch, anchors, idCol, textCol,
       numHashes, bands, threshold, shingleSize, maxPartners)
   }
@@ -147,7 +149,7 @@ object Dedup {
                            caller: String = "dedupAgainstNear"): DataFrame = {
     val (batchBanded, _) = bandedAnchors(
       longIds(batch, idCol, textCol, caller), idCol, textCol,
-      numHashes, bands, shingleSize, maxPartners)
+      numHashes, bands, shingleSize, maxPartners, persist = false)
     // inner join: a batch row in a bucket no corpus row occupies has no
     // candidates — it survives via the left_anti below
     val dups = batchBanded.join(anchors, Seq("__bkey"))
@@ -179,7 +181,7 @@ object Dedup {
       s"maxPartners must be >= 1 (got $maxPartners): 0 would disable the probe")
     val (_, anchors) = bandedAnchors(
       longIds(corpus, idCol, textCol, "buildNearDupIndex"), idCol, textCol,
-      numHashes, bands, shingleSize, maxPartners)
+      numHashes, bands, shingleSize, maxPartners, persist = false)
     anchors
       .withColumn("num_hashes", lit(numHashes))
       .withColumn("bands", lit(bands))
@@ -267,7 +269,7 @@ object Dedup {
     val (_, anchors) = bandedAnchors(
       longIds(batch, idCol, textCol, "appendToNearDupIndex"), idCol, textCol,
       numHashes = p.getInt(0), bands = p.getInt(1),
-      shingleSize = p.getInt(2), maxPartners = p.getInt(3))
+      shingleSize = p.getInt(2), maxPartners = p.getInt(3), persist = false)
     Persisted.holding { hold =>
       // three consumers (write + two statistics) — persist the bounded
       // per-bucket fold, not the corpus
@@ -427,29 +429,30 @@ object Dedup {
     F.array(sigs: _*)
   }
 
-  /** Signature projection: one custom-kernel expression per row (the
-    * child normalize expression is evaluated once inside it) — see
-    * graft.functions.MinHashSigExpr for why this beats the HOF
+  /** (__id, __sig) signature projection: one custom-kernel expression
+    * per row (the child normalize expression is evaluated once inside
+    * it) — see graft.functions.MinHashSigExpr for why this beats the HOF
     * formulation (`signatureFromHashes`) by ~50×.
     *
-    * PERSISTED (memory-and-disk): the banding explode and the two
-    * candidate-side joins all consume this frame, so without a persist
-    * the O(len × hashes) kernel runs 3× per document. The persisted
-    * form is (id, 64-long signature) ≈ 0.5 KB/doc — far smaller than
-    * the corpus — spills to disk under pressure and ages out by LRU;
-    * measured ~30% off the end-to-end dedup at bench scale. */
-  /** (__id, __sig) projection, persisted MEMORY_AND_DISK: every LSH
-    * caller consumes it at least twice (banding + verify/anchor), and
-    * recomputing the kernel costs more than the ~0.5 KB/row cache.
-    * Lifetime note: the cache lives until `spark.catalog.clearCache()`
-    * or session end — one-shot batch callers that are done deduping
-    * can clear it (the bench does so between queries). */
+    * `persist` (MEMORY_AND_DISK) is for a caller that reads the frame
+    * twice — [[minhashDedup]] (banding explode + anchor fold) and
+    * [[minhashPairs]] (banding + the two verify joins) — where the
+    * O(len × hashes) kernel would otherwise run once per read; the
+    * (id, 64-long signature) ≈ 0.5 KB/doc is far smaller than the corpus
+    * (measured ~30% off the end-to-end dedup at bench scale). A frame
+    * read once is not persisted: a per-micro-batch persist would add one
+    * cache entry per batch that nothing reads again. Lifetime note: a
+    * persisted frame lives until `spark.catalog.clearCache()` or session
+    * end, aging out by LRU — one-shot batch callers that are done
+    * deduping can clear it (the bench does so between queries). */
   private def sigFrame(df: DataFrame, idCol: String, textCol: String,
-                       numHashes: Int, shingleSize: Int): DataFrame =
-    df.select(col(idCol).as("__id"),
+                       numHashes: Int, shingleSize: Int, persist: Boolean): DataFrame = {
+    val sigs = df.select(col(idCol).as("__id"),
       graft.functions.Kernels.minhashSig(
         TextFunctions.normalizeText(col(textCol)), numHashes, shingleSize).as("__sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (persist) sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else sigs
+  }
 
   /** The ONE banding + anchor-fold construction behind every
     * anchor-probe dedup path (intra-corpus [[minhashDedup]] and
@@ -461,11 +464,11 @@ object Dedup {
     * [[MinKSigAgg]] partial aggregate, so a degenerate 10^6-copy
     * bucket costs k × sigBytes, never |bucket|. Both frames are lazy —
     * a caller using only one pays only for that one. `df` must carry a
-    * non-null long `idCol`. */
+    * non-null long `idCol`. `persist` goes to [[sigFrame]]. */
   private def bandedAnchors(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int, bands: Int, shingleSize: Int,
-                            maxPartners: Int): (DataFrame, DataFrame) = {
-    val banded = sigFrame(df, idCol, textCol, numHashes, shingleSize)
+                            maxPartners: Int, persist: Boolean): (DataFrame, DataFrame) = {
+    val banded = sigFrame(df, idCol, textCol, numHashes, shingleSize, persist)
       .select(col("__id"), col("__sig"),
         explode_outer(bandKeys(col("__sig"), numHashes, bands)).as("__bkey"))
     val mk = F.udaf(new MinKSigAgg(maxPartners),
@@ -535,7 +538,8 @@ object Dedup {
         val (banded, anchors) = bandedAnchors(
           df.filter(col(idCol).isNotNull)
             .select(col(idCol).cast("long").as(idCol), col(textCol)),
-          idCol, textCol, numHashes, bands, shingleSize, maxPartners)
+          idCol, textCol, numHashes, bands, shingleSize, maxPartners,
+          persist = true)
         banded.join(anchors, Seq("__bkey"))
           .filter(graft.functions.Kernels.minhashAnchorDrop(
             col("__id"), col("__sig"), col("__anchors"), numHashes, threshold))
@@ -569,7 +573,7 @@ object Dedup {
     require(maxPartners >= 1,
       s"maxPartners must be >= 1 (got $maxPartners): 0 would silently " +
         "generate no candidate pairs and disable dedup entirely")
-    val sigs = sigFrame(df, idCol, textCol, numHashes, shingleSize)
+    val sigs = sigFrame(df, idCol, textCol, numHashes, shingleSize, persist = true)
     // bucket-join on (band key) with bare ids; signatures join back on
     // the (deduplicated) candidate pairs only
     val banded = sigs.select(col("__id"),

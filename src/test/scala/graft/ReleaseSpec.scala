@@ -12,7 +12,8 @@ import org.apache.spark.storage.StorageLevel
   * read) a frame must leave no persisted RDD behind. One failing call
   * per site — the IVF lifecycle, connected components (both tiers),
   * near-dup ingest, NB compile, the salted-join and semantic-dedup
-  * guards — plus the rule that a caller-owned cache is never released. */
+  * guards — plus the rule that a caller-owned cache is never released,
+  * and a successful near-dup ingest that leaves nothing cached. */
 class ReleaseSpec extends GraftSpec {
 
   import spark.implicits._
@@ -22,11 +23,18 @@ class ReleaseSpec extends GraftSpec {
     Seq.fill(n)(Seq.fill(8)(r.nextFloat() - 0.5f))
   }
 
+  /** Persisted RDD ids `body` leaves behind. */
+  private def leftBy(body: => Any): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    body
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
   /** Persisted RDD ids the failing `body` leaves behind. */
   private def leakedBy(body: => Any): (Throwable, Set[Int]) = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val e = intercept[Throwable](body)
-    (e, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+    var e: Throwable = null
+    val leaked = leftBy { e = intercept[Throwable](body) }
+    (e, leaked)
   }
 
   test("exact-cosine calibrated call releases its persists when the truth pass fails") {
@@ -102,25 +110,45 @@ class ReleaseSpec extends GraftSpec {
     } finally pairs.unpersist()
   }
 
-  test("near-dup ingest releases its kept batch when the sink throws") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-fail").toString
+  /** A two-document near-dup index and a fresh one-document batch. */
+  private def nearDupIndex(): (String, org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest").toString
     val corpus = Seq(
       (0L, "the quick brown fox jumps over the lazy dog again and again"),
       (1L, "pack my box with five dozen liquor jugs for the journey north"))
       .toDF("doc_id", "text")
     Dedup.buildNearDupIndex(corpus, "doc_id", "text", dir,
       numHashes = 64, bands = 16, shingleSize = 4)
-    val batch = Seq((10L, "an entirely fresh document about distributed query engines"))
-      .toDF("doc_id", "text")
-    // the probe's signature frame is a documented-LRU persist: warm it
-    // first, so the check sees only the kept batch
-    Dedup.dedupAgainstNearIndexed(batch, dir, "doc_id", "text", threshold = 0.7).count()
+    (dir, Seq((10L, "an entirely fresh document about distributed query engines"))
+      .toDF("doc_id", "text"))
+  }
+
+  test("near-dup ingest releases its kept batch when the sink throws") {
+    val (dir, batch) = nearDupIndex()
     val ingest = StreamVerbs.nearDupIngest(dir, "doc_id", "text", threshold = 0.7) {
       (kept, _) => kept.count(); throw new IllegalStateException("sink down")
     }
     val (e, leaked) = leakedBy(ingest(batch, 0L))
     assert(e.getMessage == "sink down", e.toString)
     assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("a successful near-dup ingest that appends its batch leaves nothing cached") {
+    // the batch's signatures are read once by the probe and once by the
+    // append's anchor fold: neither may stay in the cache per micro-batch
+    // (a registered entry counts even before its RDD materializes)
+    val (dir, batch) = nearDupIndex()
+    spark.catalog.clearCache()
+    var sunk = -1L
+    val ingest = StreamVerbs.nearDupIngest(dir, "doc_id", "text", threshold = 0.7,
+      appendKept = true) { (kept, _) => sunk = kept.count() }
+    val left = leftBy(ingest(batch, 0L))
+    assert(sunk == 1L)
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+    assert(spark.sharedState.cacheManager.isEmpty, "a cache entry outlived the micro-batch")
+    // appended: the batch now dedups against itself
+    assert(Dedup.dedupAgainstNearIndexed(batch, dir, "doc_id", "text", threshold = 0.7)
+      .isEmpty)
   }
 
   test("compileNb releases its model when the vocabulary is over maxVocab") {
