@@ -16,6 +16,13 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
+      // one JVM runs every suite: the default 100-entry generated-class
+      // cache evicts plans the fuzz campaigns rebuild seed after seed,
+      // re-paying Janino on each; checkpoint checksum files add IO to
+      // every micro-batch of the streaming fuzzers. Neither changes a
+      // result.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -24,4 +31,23 @@ object TestSpark {
 
 abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Run `body` once per seed, `threads` seeds at a time, and fail with
+    * the LOWEST failing seed's error (so a red run names the same seed
+    * a sequential loop would). For fuzz campaigns whose cases are
+    * independent: each case's wall is mostly driver-side planning,
+    * codegen and micro-batch bookkeeping on tiny frames, which a
+    * sequential loop leaves the local[4] executor idle through. Every
+    * seed still runs to completion and is checked. */
+  protected def forEachSeed(seeds: Seq[Int], threads: Int = 4)(body: Int => Unit): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val failures =
+      try {
+        seeds.map(s => s -> pool.submit(new java.util.concurrent.Callable[Option[Throwable]] {
+          def call(): Option[Throwable] =
+            try { body(s); None } catch { case e: Throwable => Some(e) }
+        })).flatMap { case (s, f) => f.get().map(s -> _) }
+      } finally pool.shutdownNow()
+    failures.sortBy(_._1).headOption.foreach { case (_, e) => throw e }
+  }
 }

@@ -676,27 +676,27 @@ class StreamBatchFuzzSpec extends GraftSpec {
   test("stream-vs-batch differential: 25 seeds across all terminal shapes") {
     // smoke tier (fast dev loop); the tagged soak below carries the
     // campaign range and runs in every full `sbt test`/CI pass
-    (1 to 25).foreach(s => runCase(30000 + s))
+    forEachSeed(1 to 25)(s => runCase(30000 + s))
   }
 
   test("every terminal arm fires at least once (incl. the r11 stateful twins)") {
-    (0 until allTerminals).foreach(t => runCase(31000 + t, forceTerminal = t))
+    forEachSeed(0 until allTerminals)(t => runCase(31000 + t, forceTerminal = t))
   }
 
   test("nearDupIngest terminal: multi-chunk seeds with planted cross-chunk dups") {
     // extra forced coverage for the r13 terminal: the random draw gives
     // it ~1/12 of seeds; these force it under 4 different doc mixes
-    (0 until 4).foreach(i => runCase(32000 + i, forceTerminal = 11))
+    forEachSeed(0 until 4)(i => runCase(32000 + i, forceTerminal = 11))
   }
 
   test("lifecycle terminal: compact/rebuild interleave under 4 forced doc mixes") {
     // extra forced coverage for the r14 terminal (verdict r13 #7): the
     // random draw gives it ~1/13 of seeds; these force the lifecycle
     // interleave across different chunk counts and stateless chains
-    (0 until 4).foreach(i => runCase(33000 + i, forceTerminal = 12))
+    forEachSeed(0 until 4)(i => runCase(33000 + i, forceTerminal = 12))
   }
 
   test("stream-vs-batch differential soak: seeds 30026-30300", Soak) {
-    (26 to 300).foreach(s => runCase(30000 + s))
+    forEachSeed(26 to 300)(s => runCase(30000 + s))
   }
 }

@@ -386,11 +386,11 @@ class VerbChainFuzzSpec extends GraftSpec {
   test("random verb chains observe cleanly and keep structural contracts") {
     // smoke tier (fast dev loop); the 300-seed tagged soak below is
     // the real campaign arm and runs in every full `sbt test`/CI pass
-    (1 to 12).foreach(s => runCase(1000 + s))
+    forEachSeed(1 to 12)(s => runCase(1000 + s))
   }
 
   test("random verb chains survive quoting-hostile column names") {
-    (1 to 8).foreach(s => runCase(1000 + s, hostileNames = true))
+    forEachSeed(1 to 8)(s => runCase(1000 + s, hostileNames = true))
   }
 
   test("seed 1215: computed sort key survives rename + RDD-boundary verb") {
@@ -436,7 +436,7 @@ class VerbChainFuzzSpec extends GraftSpec {
     // exact-sampleFrac / filterByRow / complete appended as ops
     // 35-38); tagged Soak so the fast dev loop skips it — full
     // `sbt test` (and CI) runs it every time
-    (50001 to 50300).foreach { s =>
+    forEachSeed(50001 to 50300) { s =>
       if (s % 2 == 0) runCaseSoakHostile(s) else runCaseSoak(s)
     }
   }
