@@ -48,17 +48,17 @@ object Harness {
   }
 
   /** The trial protocol: one warm-up run (JIT, codegen cache, parquet
-    * footers), reset, the MIN of `n` measured runs — a one-off JIT/GC
+    * footers), reset, the MIN of 3 measured runs — a one-off JIT/GC
     * pause in a single run cannot fabricate a 10x reading — then reset,
     * so the next measurement starts clean. Returns the min seconds and
     * the last run's result. `measuring` runs after the warm-up's reset,
     * just before the first measured run. */
-  def trial[A](spark: SparkSession, n: Int = 3, measuring: () => Unit = () => ())
+  def trial[A](spark: SparkSession, measuring: () => Unit = () => ())
               (f: => A): (Double, A) = {
     f
     reset(spark)
     measuring()
-    val runs = (1 to n).map(_ => timed(f))
+    val runs = (1 to 3).map(_ => timed(f))
     reset(spark)
     (runs.map(_._1).min, runs.last._2)
   }
@@ -77,8 +77,8 @@ object Harness {
   // inflates proportionally. Any bench number can then be mechanically
   // classified: sentinel ≈ clean → trust the trial; sentinel ≫ clean →
   // the window was contended and the trial is a ceiling, not a
-  // measurement.
-  private val sentinelBuf: Array[Byte] = {
+  // measurement. Lazy: only a main that probes pays the 64 MiB.
+  private lazy val sentinelBuf: Array[Byte] = {
     val b = new Array[Byte](64 << 20)
     var x = 0x9E3779B97F4A7C15L
     var i = 0
@@ -92,11 +92,12 @@ object Harness {
   @volatile private var sentinelSink: Long = 0L // defeats DCE of the loop
 
   private[graft] def sentinel(): Double = {
+    val buf = sentinelBuf // built on the first probe, outside the timing
     val t0 = System.nanoTime()
     var h = 0xCBF29CE484222325L
     var i = 0
-    while (i < sentinelBuf.length) {
-      h ^= sentinelBuf(i); h *= 0x100000001B3L
+    while (i < buf.length) {
+      h ^= buf(i); h *= 0x100000001B3L
       i += 1
     }
     sentinelSink = h

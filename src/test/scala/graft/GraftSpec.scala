@@ -18,11 +18,8 @@ object TestSpark {
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       // one JVM runs every suite: the default 100-entry generated-class
       // cache evicts plans the fuzz campaigns rebuild seed after seed,
-      // re-paying Janino on each; checkpoint checksum files add IO to
-      // every micro-batch of the streaming fuzzers. Neither changes a
-      // result.
+      // re-paying Janino on each. It changes no result.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -32,15 +29,17 @@ object TestSpark {
 abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
 
-  /** Run `body` once per seed, `threads` seeds at a time, and fail with
+  /** Run `body` once per seed, four seeds at a time, and fail with
     * the LOWEST failing seed's error (so a red run names the same seed
     * a sequential loop would). For fuzz campaigns whose cases are
     * independent: each case's wall is mostly driver-side planning,
     * codegen and micro-batch bookkeeping on tiny frames, which a
     * sequential loop leaves the local[4] executor idle through. Every
-    * seed still runs to completion and is checked. */
-  protected def forEachSeed(seeds: Seq[Int], threads: Int = 4)(body: Int => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    * seed still runs to completion and is checked. The seeds share the
+    * one session, so `body` must keep to its own frames, sink names and
+    * directories: no cache clear, no session conf change. */
+  protected def forEachSeed(seeds: Seq[Int])(body: Int => Unit): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val failures =
       try {
         seeds.map(s => s -> pool.submit(new java.util.concurrent.Callable[Option[Throwable]] {

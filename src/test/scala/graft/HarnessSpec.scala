@@ -40,7 +40,7 @@ class HarnessSpec extends GraftSpec {
     var runs = 0
     var cachedAtRun = Seq.empty[Boolean]
     val df = Seq(1, 2, 3).toDF("x").repartition(2)
-    val (t, last) = Harness.trial(spark, n = 3) {
+    val (t, last) = Harness.trial(spark) {
       runs += 1
       cachedAtRun :+= df.storageLevel != StorageLevel.NONE
       df.persist().count()
