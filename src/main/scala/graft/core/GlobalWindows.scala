@@ -48,17 +48,16 @@ private[graft] object GlobalWindows {
   // (row count × schema default-size width — a row-count gate
   // under-protects wide/struct-heavy schemas: the edge frame is both
   // broadcast through the driver and buffered 2·m rows per task).
-  // Read from the session conf per materialize() call so the
-  // GlobalWindowsSpec fallback seam is a scoped conf set/unset, not
-  // mutable object state (which would be racy across parallel
-  // suites). Defaults: 64 MiB for the edge frame (well under any
-  // sane driver heap), 512 MiB for the total patch contributions
-  // (each roll explodes the edge frame by its width before the
-  // patch groupBy re-shrinks it).
+  // The edge gate is read from the session conf per materialize()
+  // call so the GlobalWindowsSpec fallback seam is a scoped conf
+  // set/unset, not mutable object state (which would be racy across
+  // parallel suites). Limits: 64 MiB default for the edge frame (well
+  // under any sane driver heap), 512 MiB for the total patch
+  // contributions (each roll explodes the edge frame by its width
+  // before the patch groupBy re-shrinks it).
   private[graft] val EdgeBytesKey = "spark.graft.globalWindows.fuseEdgeBytes"
-  private[graft] val ContribBytesKey = "spark.graft.globalWindows.fuseContribBytes"
   private val DefaultEdgeBytes: Long = 64L << 20
-  private val DefaultContribBytes: Long = 512L << 20
+  private val ContribCapBytes: Long = 512L << 20
 
   /** Small-frame tier gate (r14): when the OPTIMIZER'S size estimate of
     * the input plan is at or under this many bytes, compute every call
@@ -277,15 +276,14 @@ private[graft] object GlobalWindows {
     // rows × the schema's defaultSize width (the contribution frame
     // is narrower than the base — IDX + one column per call — so
     // using the base width there is conservative).
-    val conf = df.sparkSession.conf
-    val edgeCapBytes = conf.get(EdgeBytesKey, DefaultEdgeBytes.toString).toLong
-    val contribCapBytes = conf.get(ContribBytesKey, DefaultContribBytes.toString).toLong
+    val edgeCapBytes =
+      df.sparkSession.conf.get(EdgeBytesKey, DefaultEdgeBytes.toString).toLong
     val rowBytes = math.max(8L, s.schema.fields.map(_.dataType.defaultSize.toLong).sum)
     val bndRows = 2L * mEdge * s.rdd.getNumPartitions
     val contribRows = bndRows * (shifts.map(_.offset).distinct.size +
       rolls.map(_.width.toLong).sum)
     val fuse = (shifts.nonEmpty || rolls.nonEmpty) &&
-      bndRows * rowBytes <= edgeCapBytes && contribRows * rowBytes <= contribCapBytes
+      bndRows * rowBytes <= edgeCapBytes && contribRows * rowBytes <= ContribCapBytes
 
     if (fuse) {
       val bnd = edgeRows(s, mEdge)

@@ -557,8 +557,9 @@ case class CosineBucketDupsExpr(child: Expression, threshold: Double, roundDigit
 /** Anchor-probe MinHash verify: does this row's signature agree with
   * any LOWER-id anchor at estimated Jaccard >= threshold? `anchors` is
   * the bucket's bounded k-smallest member list
-  * (`array<struct<id: long, sig: array<long>>>`, from
-  * [[graft.ml.MinKSigAgg]]) joined back onto each bucket member —
+  * (`array<struct<id: long, sig: array<long>>>`, from the bounded-k
+  * fold [[graft.ml.TopK.bucketAnchors]]) joined back onto each bucket
+  * member —
   * together they implement [[graft.ml.Dedup.minhashPairs]]' capped
   * lower-partner contract with bounded memory everywhere: the
   * aggregation buffer holds k items, each probe row carries one
@@ -1306,7 +1307,7 @@ case class CutSharedSpansExpr(child: Expression, refHashes: Array[Long], n: Int)
   * trick for SIGNED comparison: positives keep their bits, negatives
   * flip their low 63 bits so sign-magnitude becomes two's-complement)
   * — lets double-valued priorities ride the repo's bounded
-  * long-keyed top-k aggregates (MinKByKeyAgg) instead of a full-sort
+  * long-keyed bounded-k fold (TopK.smallestPerGroup) instead of a full-sort
   * Window. Signed-long comparison of the outputs equals double
   * comparison of the inputs; NaN (canonical bits) sorts ABOVE every
   * number, −0.0 immediately below +0.0 — both documented, neither

@@ -99,9 +99,9 @@ object Dedup {
     * corpus rows sharing one of its LSH band buckets. Same banding +
     * anchor-probe machinery as [[minhashDedup]], pointed across two
     * frames: corpus buckets fold to their `maxPartners` smallest-id
-    * members via the bounded [[MinKSigAgg]] (a boilerplate cluster of
-    * 10^6 corpus copies still costs k × sigBytes), batch rows probe the
-    * anchor arrays in-task. The probe passes `Long.MaxValue` as the
+    * members via the bounded-k fold ([[TopK.bucketAnchors]]; a
+    * boilerplate cluster of 10^6 corpus copies still costs
+    * k × sigBytes), batch rows probe the anchor arrays in-task. The probe passes `Long.MaxValue` as the
     * probing id, so EVERY corpus anchor is compared (the kernel's
     * `anchor.id < id` lower-id rule degenerates to "all") — corpus ids
     * must therefore be below `Long.MaxValue`, which also keeps the
@@ -172,8 +172,8 @@ object Dedup {
     * and a single atomic overwrite means an interrupted rebuild can
     * never pair new anchors with stale parameters (two files could).
     * Layout: `path/anchors` (band key → bounded anchor array, the
-    * [[MinKSigAgg]] fold, + the params columns). Same recall contract
-    * as the inline path; `threshold` stays a PROBE-time knob. */
+    * [[TopK.bucketAnchors]] fold, + the params columns). Same recall
+    * contract as the inline path; `threshold` stays a PROBE-time knob. */
   def buildNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                         path: String, numHashes: Int = 128, bands: Int = 32,
                         shingleSize: Int = 5, maxPartners: Int = 64): Unit = {
@@ -308,7 +308,7 @@ object Dedup {
     * gap: the signal only logged a rebuild recommendation).
     *
     * The fold runs under the FROZEN stored parameters over the ANCHOR
-    * TABLE ONLY — one explode + one bounded [[MinKSigAgg]] shuffle over
+    * TABLE ONLY — one explode + one [[TopK.bucketAnchors]] shuffle over
     * ≤ generations × buckets rows, NEVER the corpus (that is the whole
     * point: a rebuild re-scans and re-signs every document; compaction
     * re-folds a few KB per bucket). Equivalence is exact, not
@@ -343,19 +343,14 @@ object Dedup {
       s"compactNearDupIndex: index at $path holds no anchors — nothing to compact")
     val p = params(0)
     val maxPartners = p.getInt(3)
-    val mk = F.udaf(new MinKSigAgg(maxPartners),
-      org.apache.spark.sql.Encoders.product[MinKSigItem])
     // explode the per-generation bounded sets back to members, drop
     // exact duplicates (the same id re-appended lands twice; the fresh
     // build would hold it once), re-fold bounded per bucket
-    val folded = stored
+    val folded = TopK.bucketAnchors(stored
       .select(col("__bkey"), explode(col("__anchors")).as("__a"))
       .select(col("__bkey"), col("__a").getField("id").as("__id"),
         col("__a").getField("sig").as("__sig"))
-      .distinct()
-      .groupBy(col("__bkey"))
-      .agg(mk(col("__id"), col("__sig")).as("__mk"))
-      .select(col("__bkey"), col("__mk").getField("items").as("__anchors"))
+      .distinct(), maxPartners)
       .withColumn("num_hashes", lit(p.getInt(0)))
       .withColumn("bands", lit(p.getInt(1)))
       .withColumn("shingle_size", lit(p.getInt(2)))
@@ -460,10 +455,11 @@ object Dedup {
     * __bkey) explode of `df`'s signatures (explode_outer — bandKeys is
     * fixed-size and never empty, and a plain explode's inferred
     * size-filter would evaluate it twice); `anchors` folds each bucket
-    * to its `maxPartners` SMALLEST (id, sig) members via the bounded
-    * [[MinKSigAgg]] partial aggregate, so a degenerate 10^6-copy
-    * bucket costs k × sigBytes, never |bucket|. Both frames are lazy —
-    * a caller using only one pays only for that one. `df` must carry a
+    * to its `maxPartners` SMALLEST (id, sig) members via the bounded-k
+    * fold ([[TopK.bucketAnchors]], the [[MinKSigAgg]] order), so a
+    * degenerate 10^6-copy bucket costs k × sigBytes, never |bucket|.
+    * Both frames are lazy — a caller using only one pays only for
+    * that one. `df` must carry a
     * non-null long `idCol`. `persist` goes to [[sigFrame]]. */
   private def bandedAnchors(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int, bands: Int, shingleSize: Int,
@@ -471,12 +467,7 @@ object Dedup {
     val banded = sigFrame(df, idCol, textCol, numHashes, shingleSize, persist)
       .select(col("__id"), col("__sig"),
         explode_outer(bandKeys(col("__sig"), numHashes, bands)).as("__bkey"))
-    val mk = F.udaf(new MinKSigAgg(maxPartners),
-      org.apache.spark.sql.Encoders.product[MinKSigItem])
-    val anchors = banded.groupBy(col("__bkey"))
-      .agg(mk(col("__id"), col("__sig")).as("__mk"))
-      .select(col("__bkey"), col("__mk").getField("items").as("__anchors"))
-    (banded, anchors)
+    (banded, TopK.bucketAnchors(banded, maxPartners))
   }
 
   /** LSH band keys: signature split into `bands` bands of
@@ -521,7 +512,7 @@ object Dedup {
         // signatures ride the banding explode (512 B/row — far cheaper
         // than re-joining them onto candidate pairs); each bucket's
         // `maxPartners` SMALLEST members are folded by a bounded
-        // partial aggregate (graft.ml.MinKSigAgg — a degenerate
+        // partial aggregate (TopK.bucketAnchors — a degenerate
         // 10^6-copy bucket costs k × sigBytes in the buffer, never
         // |bucket|); then every bucket member probes its bucket's
         // anchor array in one in-task loop

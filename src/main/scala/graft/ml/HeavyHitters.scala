@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Misra–Gries buffer: at most `m` tracked keys with lower-bound
   * counts. Top-level case class: nested case classes break Janino
-  * codegen for Encoders (see TopKItem). */
+  * codegen for Encoders (see BoundedKBuf). */
 case class MgBuf(counts: Map[String, Long])
 
 /** Misra–Gries frequent-items sketch as a partial aggregate.

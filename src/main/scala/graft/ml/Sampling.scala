@@ -229,62 +229,25 @@ object Sampling {
     * draw is defined for them — same convention as weightedSample's
     * null weights).
     *
-    * Two physical paths, identical selected set (total order pri asc,
-    * id asc on both): integral ids take the BOUNDED-AGGREGATE path —
-    * each task folds its slice into a ≤n buffer per stratum
-    * ([[MinKByKeyAgg]]), only strata × tasks × n pairs shuffle, the
-    * picked ids (strata × n rows, broadcast-sized in practice) join
-    * back map-side — no stratum is ever sorted whole. The aggregate
-    * path applies for n ≤ 65536 (its per-task buffers hold n pairs
-    * per stratum — the right trade at sample sizes, the wrong one as
-    * n approaches stratum size); larger n, and non-integral numeric
-    * ids, take the per-stratum `row_number` window, which exchanges
-    * and sorts the full input. Ids must be numeric (the Knuth draw is
-    * integer arithmetic); at 100 TB prefer integral ids and sample-
-    * sized n. */
+    * The n smallest (hash, id) pairs per stratum come from
+    * [[TopK.smallestPerGroup]]: two physical paths, identical selected
+    * set. Integral ids with n ≤ [[TopK.MaxBufferedK]] take the
+    * bounded-k fold — each task folds its slice into a ≤n buffer per
+    * stratum, only strata × tasks × n pairs shuffle, the picked ids
+    * (strata × n rows, broadcast-sized in practice) join back
+    * map-side — no stratum is ever sorted whole; larger n, and
+    * non-integral numeric ids, take the per-stratum `row_number`
+    * window, which exchanges and sorts the full input. Ids must be
+    * numeric (the Knuth draw is integer arithmetic); at 100 TB prefer
+    * integral ids and sample-sized n. A null stratum is a real
+    * stratum. */
   def stratifiedSample(df: DataFrame, strataCols: Seq[String], idCol: String,
                        n: Int, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     require(strataCols.nonEmpty, "stratifiedSample needs at least one stratum column")
     require(n > 0, s"n must be positive, got $n")
     requireNumericId(df, idCol, "stratifiedSample")
-    val nn = df.filter(col(idCol).isNotNull)
-    df.schema(idCol).dataType match {
-      // the aggregate path buffers up to n (hash, id) pairs PER TASK
-      // per stratum — the right trade at sample sizes, the wrong one
-      // when n approaches stratum size (the buffers would dwarf the
-      // sort they avoid); past the cutoff the window sort is honest
-      case LongType | IntegerType if n <= 65536 =>
-        // picked carries the STRATA alongside the id, so an id
-        // duplicated across strata can never leak a foreign stratum's
-        // rows through the semi-join; within a stratum, idCol is
-        // assumed unique (the contract of every id-hash operator here)
-        val mk = udaf(new MinKByKeyAgg(n),
-          org.apache.spark.sql.Encoders.product[MinKKeyItem])
-        val picked = nn
-          .groupBy(strataCols.map(col): _*)
-          .agg(mk(knuthHash(col(idCol), seed),
-            col(idCol).cast("long")).as("__mk"))
-          .select(strataCols.map(c => col(c).as(s"__ps_$c")) :+
-            explode(col("__mk").getField("items")).as("__it"): _*)
-          .select(strataCols.map(c => col(s"__ps_$c")) :+
-            col("__it").getField("id").cast(df.schema(idCol).dataType).as("__ps_id"): _*)
-        // NULL-SAFE equality on the strata: groupBy keeps a null
-        // stratum as a group, and a plain equi-join would then never
-        // match it back (NULL = NULL is not TRUE) — silently emptying
-        // that stratum while the window fallback samples it. <=> is
-        // still an equi-join key (hash join, AQE-broadcastable:
-        // strata × n rows on the build side). Ids are non-null here.
-        val cond = strataCols.map(c => col(c) <=> col(s"__ps_$c"))
-          .reduce(_ && _) && col(idCol) === col("__ps_id")
-        nn.join(picked, cond, "left_semi")
-      case _ =>
-        val rn = "__ss_rank"
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(strataCols.map(col): _*)
-          .orderBy(knuthHash(col(idCol), seed), col(idCol))
-        nn.withColumn(rn, row_number().over(w)).filter(col(rn) <= n).drop(rn)
-    }
+    TopK.smallestPerGroup(df.filter(col(idCol).isNotNull), strataCols, idCol,
+      knuthHash(col(idCol), seed), n)
   }
 
   /** EXACT-COUNT mixture sample: floor-apportioned per-source targets
@@ -298,12 +261,15 @@ object Sampling {
     * An undersupplied source takes everything it has — no
     * redistribution (the realized total shrinks; duplication policy
     * belongs to the caller). Unlisted and null sources are dropped;
-    * null ids are excluded. One per-source rank shuffle (targets can
-    * be corpus-scale, so the bounded-buffer shortcut doesn't apply). */
+    * null ids are excluded. Selection is [[TopK.smallestPerGroup]]
+    * capped per source: integral ids with every target ≤
+    * [[TopK.MaxBufferedK]] take the bounded-k fold (each source's
+    * buffer holds the largest target; a source keeps its first
+    * target_s positions); corpus-scale targets take one per-source
+    * `row_number` window, which sorts each source whole. */
   def mixtureSampleExact(df: DataFrame, srcCol: String, idCol: String,
                          weights: Map[String, Double], totalN: Long,
                          seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     require(totalN > 0, s"totalN must be positive, got $totalN")
     requireNumericId(df, idCol, "mixtureSampleExact")
     val (wMicro, sw) = quantizeWeights(weights, "mixtureSampleExact")
@@ -317,42 +283,9 @@ object Sampling {
       s"totalN = $totalN floor-apportions every source to zero rows")
     val spark = df.sparkSession
     import spark.implicits._
-    val tDf = targets.toDF(srcCol, "__tgt")
-    val nn = df.filter(col(idCol).isNotNull)
-    val maxTgt = targets.map(_._2).max
-    val integral = df.schema(idCol).dataType match {
-      case LongType | IntegerType => true; case _ => false
-    }
-    if (integral && maxTgt <= 65536) {
-      // sort-free path, same machinery as stratifiedSample: fold each
-      // task's slice into a ≤maxTarget buffer per source, keep each
-      // source's first target_s positions of the merged ascending
-      // buffer, semi-join back. The window shape's partitionBy(src)
-      // would instead sort EACH source's entire slice in one task.
-      val mk = udaf(new MinKByKeyAgg(maxTgt.toInt),
-        org.apache.spark.sql.Encoders.product[MinKKeyItem])
-      val picked = nn.join(broadcast(tDf), Seq(srcCol))
-        .groupBy(col(srcCol), col("__tgt"))
-        .agg(mk(knuthHash(col(idCol), seed),
-          col(idCol).cast("long")).as("__mk"))
-        .select(col(srcCol).as("__mx_src"), col("__tgt"),
-          posexplode(col("__mk").getField("items")).as(Seq("__pos", "__it")))
-        .filter(col("__pos") < col("__tgt"))
-        .select(col("__mx_src"),
-          col("__it").getField("id").cast(df.schema(idCol).dataType).as("__mx_id"))
-      nn.join(picked,
-        col(srcCol) === col("__mx_src") && col(idCol) === col("__mx_id"),
-        "left_semi")
-    } else {
-      val rn = "__mx_rank"
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(srcCol))
-        .orderBy(knuthHash(col(idCol), seed), col(idCol))
-      nn.join(broadcast(tDf), Seq(srcCol))
-        .withColumn(rn, row_number().over(w))
-        .filter(col(rn) <= col("__tgt"))
-        .drop(rn, "__tgt")
-    }
+    TopK.smallestPerGroup(df.filter(col(idCol).isNotNull), Seq(srcCol), idCol,
+      knuthHash(col(idCol), seed), targets.map(_._2).max,
+      Some(targets.toDF(srcCol, "__cap")))
   }
 
   /** Weighted sample WITHOUT replacement, k rows per key group:

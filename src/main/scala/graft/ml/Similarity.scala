@@ -68,7 +68,8 @@ object Similarity {
 
   /** Exact brute-force cosine top-k: `queries(qid, qvec)` is broadcast;
     * the corpus is scored in one map-side pass folded into per-(query,
-    * task) top-k buffers (graft.ml.TopKAgg) — only `queries × tasks × k`
+    * task) top-k buffers (the bounded-k fold [[BoundedK]], its
+    * [[TopKAgg]] order) — only `queries × tasks × k`
     * rows reach the shuffle. */
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
                      queries: DataFrame, qidCol: String, qvecCol: String,
@@ -351,24 +352,6 @@ object Similarity {
     Ivf.calibrated(corpus, idCol, vecCol, queries, qidCol, qvecCol, k,
       targetRecall, sampleQueries, nLists, nProbe, maxProbeFactor, rerank = None,
       refineIters, seed, initMethod, Ivf.ExactFit, queryBudget, "ivfTopKCalibrated")
-
-  /** Random-hyperplane LSH bucket key for cosine similarity: `nBits`
-    * sign bits of projections onto deterministic pseudo-random
-    * hyperplanes (hash-derived, no stored planes). Near-neighbors
-    * collide with prob 1 - angle/π per bit. */
-  def cosineLshKey(vec: Column, dim: Int, nBits: Int = 16, seed: Long = 42L): Column = {
-    val bits = (0 until nBits).map { b =>
-      // pseudo-random ±1 plane component per (bit, dim index), derived
-      // from a deterministic hash — row-local, no plane table needed
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), lit(dim - 1)),
-          (x, i) => x.cast("double") *
-            when(xxhash64(lit(seed), lit(b), i).bitwiseAND(lit(1L)) =!= 0, 1.0).otherwise(-1.0)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, c) => a.bitwiseOR(c))
-  }
 
   /** Persist an IVF index: the assigned corpus written as parquet
     * PARTITIONED BY list_id (one directory per inverted list) plus the

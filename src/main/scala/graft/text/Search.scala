@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *     rows) and broadcast back;
   *   - corpus stats (N, avgdl) are ONE row, broadcast;
   *   - per-query accumulation is an integer sum and the final top-k is
-  *     the bounded [[graft.ml.TopKAgg]] partial aggregate — queries ×
-  *     tasks × k rows to the shuffle, never the corpus, no Window.
+  *     the bounded-k fold ([[graft.ml.BoundedK]], its [[graft.ml.TopKAgg]]
+  *     order) — queries × tasks × k rows to the shuffle, never the
+  *     corpus, no Window.
   *
   * Determinism contract: each (query, doc, term) contribution is
   * quantized to integer MICRO-units (`round(c * 1e6)` as a long) before
@@ -136,8 +137,9 @@ object Search {
     * Scale shape: tf aggregates on (doc, term) — the corpus-scale
     * shuffle; df reduces tf by term (vocabulary-sized, with map-side
     * partials) and joins back on the term key; corpus size N is one
-    * broadcast row; the per-doc top-k is a bounded string-payload
-    * partial aggregate ([[graft.ml.TopKStrAgg]]) — docs × tasks × k
+    * broadcast row; the per-doc top-k is the bounded-k fold with a
+    * string payload ([[graft.ml.BoundedK]], its [[graft.ml.TopKStrAgg]]
+    * order, via [[graft.ml.TopK.termsPerDoc]]) — docs × tasks × k
     * buffered terms to the final shuffle, no Window.
     * Returns (doc_id, term, tfidf_micro, rank). */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
@@ -156,17 +158,10 @@ object Search {
         round(lit(1e6) * col("tf") *
           (log((col("n_docs") + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0)),
           0).cast("long").as("tfidf_micro"))
-    val tk = org.apache.spark.sql.functions.udaf(
-      new graft.ml.TopKStrAgg(k),
-      org.apache.spark.sql.Encoders.product[graft.ml.TopKStrItem])
-    scored.groupBy(col("doc_id"))
-      .agg(tk(col("tfidf_micro").cast("double"), col("term")).as("__topk"))
-      .select(col("doc_id"),
-        posexplode(col("__topk").getField("items")).as(Seq("__pos", "__it")))
-      .select(col("doc_id"),
-        col("__it").getField("term").as("term"),
-        col("__it").getField("score").cast("long").as("tfidf_micro"),
-        (col("__pos") + 1).cast("long").as("rank"))
+    graft.ml.TopK.termsPerDoc(scored, col("tfidf_micro").cast("double"), k)
+      .select(col("doc_id"), col("term"),
+        col("score").cast("long").as("tfidf_micro"),
+        col("rank").cast("long").as("rank"))
   }
 
   /** Reciprocal-rank fusion of any number of per-query rankings (each
@@ -178,7 +173,7 @@ object Search {
     *
     * Scale shape: the inputs are already top-k'd (queries × k rows
     * each), so the union + sum is tiny regardless of corpus size; the
-    * final top-k reuses the bounded [[graft.ml.TopKAgg]].
+    * final top-k reuses the bounded-k fold ([[graft.ml.TopK.perQuery]]).
     * Returns (query_id, doc_id, rrf_micro, rank). */
   def rrfFuse(rankings: Seq[DataFrame], k: Int, k0: Int = 60): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse needs at least one ranking")

@@ -6,6 +6,11 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
 object TestSpark {
+  /** The test JVM's temp root: build.sbt points `java.io.tmpdir` of
+    * the forked test JVM at a directory under `target/` and clears it
+    * around every test run, so what a suite writes here is removed. */
+  val tmpRoot: String = System.getProperty("java.io.tmpdir")
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -15,7 +20,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
+      .config("spark.sql.warehouse.dir", s"$tmpRoot/graft-test-warehouse")
       // one JVM runs every suite: the default 100-entry generated-class
       // cache evicts plans the fuzz campaigns rebuild seed after seed,
       // re-paying Janino on each. It changes no result.
@@ -28,6 +33,9 @@ object TestSpark {
 
 abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** A fixed-name path under the test temp root. */
+  protected def tmpPath(name: String): String = s"${TestSpark.tmpRoot}/$name"
 
   /** Run `body` once per seed, four seeds at a time, and fail with
     * the LOWEST failing seed's error (so a red run names the same seed

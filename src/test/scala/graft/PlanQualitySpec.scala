@@ -125,7 +125,7 @@ class PlanQualitySpec extends GraftSpec {
   test("persisted IVF index queries prune to the probed list partitions") {
     import graft.ml.Similarity
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val path = "/tmp/graft-test-ivf"
+    val path = tmpPath("graft-test-ivf")
     Similarity.buildIvfIndex(e, "vec_id", "embedding", path, nLists = 8)
     val queries = e.filter(org.apache.spark.sql.functions.col("vec_id") < 3)
     val res = Similarity.ivfTopKIndexed(spark, path, queries, "vec_id", "embedding",
@@ -153,7 +153,7 @@ class PlanQualitySpec extends GraftSpec {
       .withColumnRenamed("o_orderkey", "l_orderkey")
     for (t <- Seq("b_lineitem", "b_orders")) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"/tmp/graft-test-warehouse/$t")
+      val loc = new java.io.File(tmpPath(s"graft-test-warehouse/$t"))
       if (loc.exists()) {
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

@@ -168,7 +168,7 @@ class PqSpec extends GraftSpec {
 
   test("pre-r14 index without a residual column reads as raw and still answers") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").limit(400)
-    val path = "/tmp/graft-test-ivfpq-prer14"
+    val path = tmpPath("graft-test-ivfpq-prer14")
     Pq.buildIvfPqIndex(emb, "vec_id", "embedding", path,
       m = 16, pqK = 32, nLists = 4, iters = 0, residual = false)
     // strip the version column to simulate an r13-built index
@@ -185,7 +185,7 @@ class PqSpec extends GraftSpec {
 
   test("persisted IVF-PQ index: prunes to probed lists, answers like the direct path, re-ranks from source vectors") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val path = "/tmp/graft-test-ivfpq"
+    val path = tmpPath("graft-test-ivfpq")
     Pq.buildIvfPqIndex(emb, "vec_id", "embedding", path,
       m = 16, pqK = 64, nLists = 8, iters = 1)
     val queries = emb.filter(col("vec_id") < 3)

@@ -43,7 +43,7 @@ class ZOrderSpec extends GraftSpec {
   }
 
   test("z-ordered write preserves the exact row set") {
-    val dir = "/tmp/graft_zorder_spec_roundtrip"
+    val dir = tmpPath("graft_zorder_spec_roundtrip")
     val df = (1 to 5000).map(i => (i.toLong, (i * 7919 % 100).toLong,
       (i * 104729 % 100).toLong)).toDF("id", "x", "y")
     ZOrder.writeZOrdered(df, dir, Seq("x", "y"), numFiles = 8)
@@ -55,8 +55,8 @@ class ZOrderSpec extends GraftSpec {
     // 100x100 uniform grid, 10k rows, 64 files of ~156 rows each
     val grid = (for (x <- 0 until 100; y <- 0 until 100)
       yield (x.toLong, y.toLong)).toDF("x", "y")
-    val zDir = "/tmp/graft_zorder_spec_z"
-    val linDir = "/tmp/graft_zorder_spec_lin"
+    val zDir = tmpPath("graft_zorder_spec_z")
+    val linDir = tmpPath("graft_zorder_spec_lin")
     ZOrder.writeZOrdered(grid, zDir, Seq("x", "y"), numFiles = 64)
     grid.repartitionByRange(64, col("x"), col("y"))
       .sortWithinPartitions("x", "y")
@@ -78,7 +78,7 @@ class ZOrderSpec extends GraftSpec {
   }
 
   test("single-dimension filters still prune under z-order") {
-    val dir = "/tmp/graft_zorder_spec_z" // written by the previous test
+    val dir = tmpPath("graft_zorder_spec_z") // written by the previous test
     val ranges = ZOrder.fileRanges(spark, dir, Seq("x", "y"))
     val total = ranges.count()
     // a narrow filter on EITHER column alone must exclude some files —
