@@ -10,8 +10,25 @@ package graft
   * `sbt "runMain graft.PlanDump <outDir> <suffix> [query...]"` —
   * env `SPARK_GRAFT_SF_DIR` as in Bench, the session from `Harness`.
   * Export entries (Unit actions) have no single plan; x_zorder_write's
-  * layout frame is captured via its zOrderBy stage explicitly. */
+  * layout frame is captured via its zOrderBy stage explicitly. A file
+  * depends only on its query's plan, not on what ran before it
+  * ([[renumbered]]). */
 object PlanDump {
+  /** `plan` with its run-dependent numbers renumbered 0, 1, … in
+    * first-seen order, one sequence each: expression ids (`#<n>`),
+    * exchange ids (`plan_id=<n>`), lambda-variable suffixes
+    * (`lambda x_<n>`) and the JVM's closure class names, which carry
+    * a load-order number, an address and an identity hash (a
+    * `mapPartitions` body prints as one). */
+  private[graft] def renumbered(plan: String): String =
+    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(lambda [a-z]+_)(\d+)""",
+        """(\$Lambda)(\$\d+/0x\p{XDigit}+@\p{XDigit}+)""")
+      .foldLeft(plan) { (text, pattern) =>
+        val seen = scala.collection.mutable.Map.empty[String, Int]
+        pattern.r.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+          m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size)))
+      }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [query...]")
     val outDir = new java.io.File(args(0))
@@ -36,8 +53,8 @@ object PlanDump {
       try {
         val fn = Bench.benchVariant.orElse(planOnly).orElse(SparkEntry.queries)
         val df = fn(n)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = renumbered(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         val f = new java.io.File(outDir, s"${n}_$suffix.txt")
         val w = new java.io.PrintWriter(f, "UTF-8")
         try w.println(txt) finally w.close()

@@ -62,6 +62,9 @@ abstract class BoundedK[I <: Product : TypeTag](k: Int)
   /** The fold as an aggregate column over one argument per item field;
     * its `items` field is the group's ≤k best, first-ranked first. */
   private[graft] def fold(args: Column*): Column = F.udaf(this, inputEncoder)(args: _*)
+
+  /** Stable in plan text (the default embeds the identity hash). */
+  override def toString: String = s"${getClass.getName}(k=$k)"
 }
 
 /** One (similarity, id) candidate. */
@@ -195,8 +198,7 @@ object TopK {
     * so an id repeated across groups can never leak a foreign group's
     * row — semi-join the rows back (AQE-broadcastable). Otherwise a
     * per-group `row_number` window exchanges and sorts the full input.
-    * Without caps the window path keeps `df`'s column order; with caps
-    * the join onto them hoists the group columns first. */
+    * Either path returns `df`'s columns in `df`'s order. */
   private[graft] def smallestPerGroup(df: DataFrame, groupCols: Seq[String], idCol: String,
                                       pri: Column, k: Long,
                                       caps: Option[DataFrame] = None): DataFrame = {
@@ -207,7 +209,7 @@ object TopK {
       val w = Window.partitionBy(groupCols.map(col): _*).orderBy(pri, col(idCol))
       in.withColumn(rn, row_number().over(w))
         .filter(col(rn) <= capCols.headOption.getOrElse(lit(k)))
-        .drop(rn, "__cap")
+        .select(df.columns.map(graft.core.qcol): _*)
     } else {
       val folded = in.groupBy(groupCols.map(col) ++ capCols: _*)
         .agg(new MinKByKeyAgg(k.toInt).fold(pri, col(idCol).cast("long")).as("__mk"))

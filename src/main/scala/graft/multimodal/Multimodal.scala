@@ -1,6 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,9 +9,9 @@ import org.apache.spark.sql.types._
   * beyond the reference surface — SURVEY §7.2 step 8).
   *
   * Media ride as opaque `binary` columns with a typed metadata struct;
-  * decode / feature-extract run per-partition over iterator batches
-  * (the Scala counterpart of `mapInPandas`: one decoder init per
-  * partition, streaming rows, no whole-partition materialization).
+  * every per-row transform (decode, feature-extract, hash, re-encode)
+  * is one column over `content` ([[fromContent]]), so it composes
+  * with `select`/`withColumn` on batch and streaming frames alike.
   *
   * Three tiers of "decode":
   *   - HEADER SNIFFING is REAL: container formats carry their geometry
@@ -829,45 +830,49 @@ object Multimodal {
     out
   }
 
-  /** Decode + featurize media rows per partition. `mapPartitions` so a
-    * decoder is initialized once per task, not per row — the pattern
-    * that matters when the decoder is an expensive native context.
-    * BMP, PNG, GIF, baseline+progressive JPEG and PCM/ADPCM WAV get a
-    * REAL decode (per-quadrant pixel means / RMS+zero-crossing audio
-    * features); the scoped-out formats fall back to the deterministic
-    * stub. Binary-heavy frames should be
-    * repartitioned by size beforehand (`maxPartitionBytes` governs scan
-    * splits natively). */
-  def extractFeatures(media: DataFrame, dim: Int = 16): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(featureSchema)
-    media.select(col("media_id"), col("kind"), col("content"))
-      .mapPartitions { rows =>
-        // codec-library init would happen here, once per partition
-        rows.map { r =>
-          val bytes = r.getAs[Array[Byte]]("content")
-          val feature: Seq[Float] =
-            if (bytes == null) null
-            else {
-              decodeImage(bytes) match {
-                case (w, h, px) => bmpQuadrantMeans(w, h, px, dim).toSeq
-                case null => decodeAudioSamples(bytes) match {
-                  case (_, samples) => wavQuarterFeatures(samples, dim).toSeq
-                  case null =>
-                    // REAL video-frame features for MJPEG AVI: frame 0
-                    // is a complete JPEG the image decoder handles
-                    val fr = Avi.frame(bytes, 0)
-                    (if (fr == null) null else decodeImage(fr)) match {
-                      case (w, h, px) => bmpQuadrantMeans(w, h, px, dim).toSeq
-                      case null       => fakeDecodeFeature(bytes, dim).toSeq
-                    }
-                }
-              }
-            }
-          Row(r.getAs[Long]("media_id"), r.getAs[String]("kind"),
-            if (bytes == null) null else bytes.length.toLong, feature)
-        }
-      }(enc)
-  }
+  /** A per-row media transform as a column: `f` of the `content`
+    * bytes (null content passes in as null), called once per row and
+    * shown as `name` in plans and errors. Non-deterministic so the
+    * optimizer never copies the call into a filter on its result
+    * (predicate pushdown would decode every row of
+    * `.filter(col(out).isNotNull)` twice); like the `mapPartitions` it
+    * stands for, no predicate moves below it. */
+  private def fromContent[T: TypeTag](name: String)(f: Array[Byte] => T): Column =
+    udf(f).withName(name).asNondeterministic()(col("content"))
+
+  /** `content`'s byte count, null for null content. */
+  private def nBytes: Column = length(col("content")).cast(LongType).as("n_bytes")
+
+  /** The `feature` of one payload: BMP, PNG, GIF, baseline+progressive
+    * JPEG and MJPEG AVI (frame 0) get per-quadrant pixel means, the
+    * decodable audio codecs RMS+zero-crossing features, the scoped-out
+    * formats the deterministic stub; null for null bytes. */
+  private[graft] def mediaFeature(bytes: Array[Byte], dim: Int): Array[Float] =
+    if (bytes == null) null
+    else decodeImage(bytes) match {
+      case (w, h, px) => bmpQuadrantMeans(w, h, px, dim)
+      case null => decodeAudioSamples(bytes) match {
+        case (_, samples) => wavQuarterFeatures(samples, dim)
+        case null =>
+          // REAL video-frame features for MJPEG AVI: frame 0 is a
+          // complete JPEG the image decoder handles
+          val fr = Avi.frame(bytes, 0)
+          (if (fr == null) null else decodeImage(fr)) match {
+            case (w, h, px) => bmpQuadrantMeans(w, h, px, dim)
+            case null       => fakeDecodeFeature(bytes, dim)
+          }
+      }
+    }
+
+  /** Decode + featurize media rows ([[mediaFeature]]) into the
+    * [[featureSchema]] layout — a map-only projection. Binary-heavy
+    * frames should be repartitioned by size beforehand
+    * (`maxPartitionBytes` governs scan splits natively). */
+  def extractFeatures(media: DataFrame, dim: Int = 16): DataFrame =
+    media.select(col("media_id"), col("kind"), nBytes,
+      // the UDF's array<float> promises non-null elements; featureSchema's doesn't
+      fromContent("mediaFeature")(mediaFeature(_, dim))
+        .cast(ArrayType(FloatType)).as("feature"))
 
   /** REAL container-header sniffing, pure JVM byte arithmetic:
     * PNG IHDR (big-endian dims at offsets 16/20), JPEG SOF0-2 marker
@@ -999,20 +1004,19 @@ object Multimodal {
       }(enc)
   }
 
-  /** Parse container headers across a media frame — real metadata from
-    * the bytes themselves (mapPartitions like the decoder, map-only). */
-  def sniffMetadata(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(sniffedSchema)
-    media.select(col("media_id"), col("kind"), col("content"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val bytes = r.getAs[Array[Byte]]("content")
-          val (mime, w, h, dur) = sniffMeta(bytes)
-          Row(r.getAs[Long]("media_id"), r.getAs[String]("kind"),
-            if (bytes == null) null else bytes.length.toLong, mime, w, h, dur)
-        }
-      }(enc)
-  }
+  /** `names` bound to the fields of the struct column `struct`, in
+    * order — how the projecting transforms spread one per-row result. */
+  private def fieldsOf(struct: String, names: String*): Seq[Column] =
+    names.zipWithIndex.map { case (n, i) => col(s"$struct._${i + 1}").as(n) }
+
+  /** Parse container headers across a media frame ([[sniffMeta]]) into
+    * the [[sniffedSchema]] layout — real metadata from the bytes
+    * themselves, map-only. */
+  def sniffMetadata(media: DataFrame): DataFrame =
+    media.select(col("media_id"), col("kind"), nBytes,
+        fromContent("sniffMeta")(sniffMeta).as("__m"))
+      .select(Seq(col("media_id"), col("kind"), col("n_bytes")) ++
+        fieldsOf("__m", "mime", "width", "height", "duration_ms"): _*)
 
   /** Bilinear resample of a decoded BGR buffer (the shared decoder
     * output convention) — pure JVM, half-pixel-center mapping (the
@@ -1091,21 +1095,10 @@ object Multimodal {
   }
 
   /** Append a `phash` column ([[dHash64]], null for undecodable rows)
-    * to a media frame — mapPartitions like the featurizer, so a codec
-    * context initializes once per task. Near-dup image pairs are then
-    * one `Dedup.hammingPairs(out, "media_id", "phash", maxDist)` call. */
-  def withPerceptualHash(media: DataFrame): DataFrame = {
-    val schema = StructType(media.schema.fields :+
-      StructField("phash", LongType, nullable = true))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val h = dHash64(r.getAs[Array[Byte]](contentIdx))
-        Row.fromSeq(r.toSeq :+ (if (h == null) null else h.longValue()))
-      }
-    }(enc)
-  }
+    * to a media frame. Near-dup image pairs are then one
+    * `Dedup.hammingPairs(out, "media_id", "phash", maxDist)` call. */
+  def withPerceptualHash(media: DataFrame): DataFrame =
+    media.withColumn("phash", fromContent("dHash64")(dHash64))
 
   /** Canonical time base for [[audioFingerprint64]]: every clip is
     * linearly resampled to this rate before the Goertzel pass, so the
@@ -1117,11 +1110,12 @@ object Multimodal {
   private val CanonicalFpRate = 8000
 
   /** Linear-interpolation resample, exact rational index arithmetic
-    * (k·from/to) — deterministic on any engine, no phase drift. Output
+    * (k·from/to) — deterministic on any engine, no phase drift; an
+    * empty clip resamples to an empty one. Output
     * in double so an exact power-of-two gain edit stays exactly scaled
     * through the resample (the fingerprint's bit-identity contract). */
   private[graft] def resampleLinear(samples: Array[Short], from: Int, to: Int): Array[Double] = {
-    if (from == to) return samples.map(_.toDouble)
+    if (from == to || samples.isEmpty) return samples.map(_.toDouble)
     val outLen = math.max(1, (samples.length.toLong * to / from).toInt)
     val out = new Array[Double](outLen)
     var k = 0
@@ -1235,23 +1229,16 @@ object Multimodal {
   }
 
   /** Append an `audio_fp` column ([[audioFingerprint64]], null for
-    * undecodable rows) — mapPartitions like the featurizer. Near-dup
-    * audio pairs are then one
+    * undecodable rows). Near-dup audio pairs are then one
     * `Dedup.hammingPairs(out, "media_id", "audio_fp", maxDist)` call. */
-  def withAudioFingerprint(media: DataFrame): DataFrame = {
-    val schema = StructType(media.schema.fields :+
-      StructField("audio_fp", LongType, nullable = true))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val h = audioFingerprint64(r.getAs[Array[Byte]](contentIdx))
-        Row.fromSeq(r.toSeq :+ (if (h == null) null else h.longValue()))
-      }
-    }(enc)
-  }
+  def withAudioFingerprint(media: DataFrame): DataFrame =
+    media.withColumn("audio_fp", fromContent("audioFingerprint64")(audioFingerprint64))
 
-  /** Volume-scale decodable WAV audio by the exact rational num/den and
+  /** A computed sample, truncated to 16-bit range. */
+  private def clampShort(v: Long): Short =
+    math.max(Short.MinValue, math.min(Short.MaxValue, v)).toShort
+
+  /** Volume-scale decodable audio by the exact rational num/den and
     * re-encode as mono 16-bit PCM at the source rate — the audio
     * counterpart of [[resizeImages]]: decode → integer-exact transform
     * → standard re-encode. Appends a `scaled` binary column (null when
@@ -1264,27 +1251,11 @@ object Multimodal {
     * within Hamming distance 2 of its half-gain copies. */
   def scaleAudioPcm(media: DataFrame, num: Int, den: Int): DataFrame = {
     require(den != 0, "den must be nonzero")
-    val schema = StructType(media.schema.fields :+
-      StructField("scaled", org.apache.spark.sql.types.BinaryType, nullable = true))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val dec = decodeAudioSamples(r.getAs[Array[Byte]](contentIdx))
-        val scaled: Array[Byte] = if (dec == null) null else {
-          val (rate, samples) = dec
-          val out = new Array[Short](samples.length)
-          var i = 0
-          while (i < samples.length) {
-            val v = samples(i).toLong * num / den
-            out(i) = math.max(Short.MinValue, math.min(Short.MaxValue, v)).toShort
-            i += 1
-          }
-          pcmWavBytes(rate, out)
-        }
-        Row.fromSeq(r.toSeq :+ scaled)
-      }
-    }(enc)
+    media.withColumn("scaled", fromContent("scaleAudioPcm") { b =>
+      val dec = decodeAudioSamples(b)
+      if (dec == null) null
+      else pcmWavBytes(dec._1, dec._2.map(s => clampShort(s.toLong * num / den)))
+    })
   }
 
   /** Re-encode decodable audio as FLAC ([[Flac.flacBytes]]) — the
@@ -1293,58 +1264,32 @@ object Multimodal {
     * [[audioFingerprint64]] is bit-equal to the source's and a
     * WAV-vs-FLAC re-ingest of one master collapses at Hamming
     * distance 0. Appends a `flac` binary column (null when the
-    * content isn't decodable audio). Same mapPartitions shape as the
-    * other audio transforms — per-row codec work, map-only. */
-  def transcodeAudioFlac(media: DataFrame): DataFrame = {
-    val schema = StructType(media.schema.fields :+
-      StructField("flac", org.apache.spark.sql.types.BinaryType, nullable = true))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val dec = decodeAudioSamples(r.getAs[Array[Byte]](contentIdx))
-        // FLAC's STREAMINFO rate field is 20 bits; a decodable WAV can
-        // declare more — such a row NULLS (the module contract: hostile
-        // rows never kill the job), it must not throw in flacBytes
-        val out: Array[Byte] =
-          if (dec == null || dec._1 >= (1 << 20)) null
-          else Flac.flacBytes(dec._1, dec._2)
-        Row.fromSeq(r.toSeq :+ out)
-      }
-    }(enc)
-  }
+    * content isn't decodable audio). */
+  def transcodeAudioFlac(media: DataFrame): DataFrame =
+    media.withColumn("flac", fromContent("transcodeAudioFlac") { b =>
+      val dec = decodeAudioSamples(b)
+      // FLAC's STREAMINFO rate field is 20 bits; a decodable WAV can
+      // declare more — such a row NULLS (the module contract: hostile
+      // rows never kill the job), it must not throw in flacBytes
+      if (dec == null || dec._1 >= (1 << 20)) null else Flac.flacBytes(dec._1, dec._2)
+    })
 
-  /** Resample decodable WAV audio to `targetRate` and re-encode as
-    * mono 16-bit PCM — the rate-normalization stage of an audio ingest
+  /** Resample decodable audio to `targetRate` and re-encode as mono
+    * 16-bit PCM — the rate-normalization stage of an audio ingest
     * pipeline (every clip onto one time base before fingerprinting or
     * training). Linear interpolation with exact rational index
     * arithmetic ([[resampleLinear]]), rounded half-even to shorts.
     * Appends a `resampled` binary column (null when the content isn't
-    * decodable audio). Same mapPartitions shape as [[scaleAudioPcm]] —
-    * per-row binary codec work, map-only, no shuffle. */
+    * decodable audio; an empty clip gives an empty WAV at
+    * `targetRate`). */
   def resampleAudioPcm(media: DataFrame, targetRate: Int): DataFrame = {
     require(targetRate > 0, s"targetRate must be positive, got $targetRate")
-    val schema = StructType(media.schema.fields :+
-      StructField("resampled", org.apache.spark.sql.types.BinaryType, nullable = true))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val dec = decodeAudioSamples(r.getAs[Array[Byte]](contentIdx))
-        val out: Array[Byte] = if (dec == null) null else {
-          val res = resampleLinear(dec._2, dec._1, targetRate)
-          val shorts = new Array[Short](res.length)
-          var i = 0
-          while (i < res.length) {
-            shorts(i) = math.max(Short.MinValue,
-              math.min(Short.MaxValue, math.rint(res(i)).toLong)).toShort
-            i += 1
-          }
-          pcmWavBytes(targetRate, shorts)
-        }
-        Row.fromSeq(r.toSeq :+ out)
-      }
-    }(enc)
+    media.withColumn("resampled", fromContent("resampleAudioPcm") { b =>
+      val dec = decodeAudioSamples(b)
+      if (dec == null) null
+      else pcmWavBytes(targetRate,
+        resampleLinear(dec._2, dec._1, targetRate).map(v => clampShort(math.rint(v).toLong)))
+    })
   }
 
   /** Sample every `everyK`-th stored video frame of each decodable
@@ -1356,8 +1301,8 @@ object Multimodal {
     * the sampled rows feed every image op directly (resize, features,
     * [[withPerceptualHash]] → video near-dup via the same Hamming
     * blocking). Static GIFs and other non-video rows yield no frames.
-    * mapPartitions like the featurizer (decoder init once per task);
-    * the row multiplier is frames/everyK. */
+    * The row multiplier is frames/everyK, so this one stays a
+    * `mapPartitions` (a column yields one value per row). */
   def sampleVideoFrames(media: DataFrame, everyK: Int = 1): DataFrame = {
     require(everyK >= 1, s"everyK must be >= 1 (got $everyK)")
     val schema = StructType(Seq(
@@ -1395,23 +1340,13 @@ object Multimodal {
     * and external players. */
   def wrapAsMjpegAvi(media: DataFrame, fps: Int = 1): DataFrame = {
     require(fps >= 1, s"fps must be >= 1 (got $fps)")
-    val schema = StructType(media.schema.fields :+
-      StructField("avi", org.apache.spark.sql.types.BinaryType, nullable = true))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](contentIdx)
-        val avi: Array[Byte] =
-          if (bytes == null) null
-          else sniffMeta(bytes) match {
-            case ("image/jpeg", w, h, _) if w != null && h != null =>
-              Avi.mjpegAvi(w.intValue(), h.intValue(), fps, Seq(bytes))
-            case _ => null
-          }
-        Row.fromSeq(r.toSeq :+ avi)
+    media.withColumn("avi", fromContent("wrapAsMjpegAvi") { b =>
+      sniffMeta(b) match {
+        case ("image/jpeg", w, h, _) if w != null && h != null =>
+          Avi.mjpegAvi(w.intValue(), h.intValue(), fps, Seq(b))
+        case _ => null
       }
-    }(enc)
+    })
   }
 
   /** Spec-conformant RGB PNG from a decoded BGR buffer (filter-0
@@ -1472,7 +1407,7 @@ object Multimodal {
 
   /** REAL image resize across a media frame: decode (BMP/PNG/GIF/
     * baseline JPEG), bilinear-resample to (outW, outH), re-encode as
-    * RGB PNG — all pure JVM, per-partition like the featurizer.
+    * RGB PNG — all pure JVM, into the [[resizedSchema]] layout.
     * Rows whose payload isn't a decodable image carry null `resized`
     * (width/height report the ORIGINAL decoded geometry, so callers
     * can filter upscales). The training-pipeline "resize" stage:
@@ -1484,25 +1419,23 @@ object Multimodal {
       // (stride+1)*h scanline buffer must stay inside Int range
       (outW.toLong * 3 + 1) * outH <= 256L * 1024 * 1024,
       s"resize dims out of range: $outW x $outH")
-    val enc = org.apache.spark.sql.Encoders.row(resizedSchema)
-    media.select(col("media_id"), col("kind"), col("content"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val bytes = r.getAs[Array[Byte]]("content")
-          decodeImage(bytes) match {
-            case (w, h, px) =>
-              val resampled = bilinearResizeBgr(w, h, px, outW, outH)
-              Row(r.getAs[Long]("media_id"), r.getAs[String]("kind"),
-                Integer.valueOf(w), Integer.valueOf(h),
-                pngFromBgr(outW, outH, resampled),
-                java.lang.Long.valueOf(fnv64Bytes(resampled)))
-            case null =>
-              Row(r.getAs[Long]("media_id"), r.getAs[String]("kind"),
-                null, null, null, null)
-          }
-        }
-      }(enc)
+    media.select(col("media_id"), col("kind"),
+        fromContent("resizedImage")(resizedImage(_, outW, outH)).as("__r"))
+      .select(Seq(col("media_id"), col("kind")) ++
+        fieldsOf("__r", "width", "height", "resized", "pixel_digest"): _*)
   }
+
+  /** One row of [[resizeImages]]: the decoded (width, height), the
+    * resized PNG and its [[resizedSchema]] pixel digest — null when the
+    * bytes are not a decodable image. */
+  private[graft] def resizedImage(bytes: Array[Byte], outW: Int, outH: Int)
+      : (Integer, Integer, Array[Byte], java.lang.Long) =
+    decodeImage(bytes) match {
+      case (w, h, px) =>
+        val resampled = bilinearResizeBgr(w, h, px, outW, outH)
+        (w, h, pngFromBgr(outW, outH, resampled), fnv64Bytes(resampled))
+      case null => null
+    }
 
   /** One PNG chunk: length + type + data + CRC32 over type‖data. */
   private def pngChunk(t: String, data: Array[Byte]): Array[Byte] = {

@@ -163,9 +163,9 @@ object StreamVerbs {
     * decoded content (BMP re-saved as PNG, gain-edited PCM, re-wrapped
     * containers) collapse onto the first arrival even though their
     * BYTES — and so their content hashes — differ. Signature kernels
-    * are row-local (mapPartitions / expressions), so they compose onto
-    * a stream unchanged; the dedup state is one ≤8-byte signature per
-    * distinct key within the watermark, never the media. Rows with a
+    * are row-local columns, so they compose onto a stream unchanged;
+    * the dedup state is one ≤8-byte signature per distinct key within
+    * the watermark, never the media. Rows with a
     * NULL signature (undecodable content) pass through un-deduped,
     * matching the batch ops' convention that unhashable rows survive.
     * Semantics are signature EQUALITY (Hamming-0): the batch

@@ -52,4 +52,27 @@ class HarnessSpec extends GraftSpec {
     assert(cachedAtRun == Seq(false, false, true, true))
     assert(df.storageLevel == StorageLevel.NONE)
   }
+
+  test("PlanDump: a query's plan text does not depend on what ran before it") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{array, col, transform}
+    def plan(): String = {
+      val scored = Seq((1L, 2L, 0.5), (1L, 3L, 0.7), (2L, 3L, 0.1))
+        .toDF("query_id", "nn_id", "cos_sim").repartition(2)
+      val df = graft.ml.TopK.perQuery(scored, 2)
+        .select(col("query_id"), transform(array(col("cos_sim")), x => x + 1).as("t"))
+      PlanDump.renumbered(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+    }
+    val first = plan()
+    // moves the session's expression-id, exchange-id and lambda counters
+    Seq((1, "a")).toDF("k", "v").repartition(2)
+      .select(transform(array(col("k")), x => x * 2)).collect()
+    val again = plan()
+    assert(again == first, s"$first\n---\n$again")
+    assert(first.contains("graft.ml.TopKAgg(k=2)") && first.contains("lambda x_0#"), first)
+    // closure class names, as a mapPartitions body prints
+    assert(PlanDump.renumbered("M$$$Lambda$4179/0x00007f5e2524@dc72335 N$$$Lambda$12/0x0a@1f " +
+      "M$$$Lambda$4179/0x00007f5e2524@dc72335") == "M$$$Lambda0 N$$$Lambda1 M$$$Lambda0")
+  }
 }

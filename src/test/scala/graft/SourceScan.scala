@@ -1,8 +1,9 @@
 package graft
 
 /** Line-based scans of `src/main/scala` for the source-scan specs
-  * (`PersistInventorySpec`, `HarnessSpec`): per-file counts of a needle
-  * on comment-stripped lines. */
+  * (`PersistInventorySpec`, `HarnessSpec`, `MediaColumnsSpec`): per-file
+  * counts of a needle on comment-stripped lines, and the members that
+  * hold it. */
 private[graft] object SourceScan {
 
   private val root = new java.io.File("src/main/scala")
@@ -34,10 +35,26 @@ private[graft] object SourceScan {
       }
     }.mkString("\n")
 
-  private def countIn(f: java.io.File, needle: String): Int = {
+  private def strippedLines(f: java.io.File): Iterator[String] = {
     val src = scala.io.Source.fromFile(f, "UTF-8")
     val text = try src.mkString finally src.close()
-    stripComments(text).linesIterator.count(_.contains(needle))
+    stripComments(text).linesIterator
+  }
+
+  private def countIn(f: java.io.File, needle: String): Int =
+    strippedLines(f).count(_.contains(needle))
+
+  /** Names of the members of the top-level object in `file` (a path
+    * under `src/main/scala`) whose comment-stripped bodies hold
+    * `needle`: a member starts at a two-space-indented `def`, possibly
+    * with modifiers, and runs to the next one. */
+  def defsWith(file: String, needle: String): Set[String] = {
+    val member = """^  (?:[a-z\[\]]+ )*def (\w+)""".r.unanchored
+    var current = ""
+    strippedLines(new java.io.File(root, file)).flatMap { l =>
+      l match { case member(n) => current = n; case _ => () }
+      if (l.contains(needle)) Some(current) else None
+    }.toSet
   }
 
   /** Per-file counts (path from the repo root) of the comment-stripped

@@ -538,6 +538,25 @@ class WindowJoinsSpec extends GraftSpec {
     assert(viaWin == a)
   }
 
+  test("mixtureSampleExact: both paths return the input's columns in order") {
+    import spark.implicits._
+    import graft.ml.Sampling
+    val docs = (1L to 3800L).map { i =>
+      (i, s"doc $i", if (i <= 2000) "en" else if (i <= 3000) "de" else "fr")
+    }.toDF("id", "text", "src")
+    val w = Map("en" -> 0.5, "de" -> 0.3, "fr" -> 0.2)
+    // long ids take the bounded fold, decimal ids the row_number window
+    val viaFold = Sampling.mixtureSampleExact(docs, "src", "id", w, 1000L)
+    val viaWin = Sampling.mixtureSampleExact(
+      docs.withColumn("id", col("id").cast("decimal(20,0)")), "src", "id", w, 1000L)
+    assert(viaFold.columns.toSeq == Seq("id", "text", "src"))
+    assert(viaWin.columns.toSeq == Seq("id", "text", "src"))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[org.apache.spark.sql.Row] =
+      df.withColumn("id", col("id").cast("long")).collect().toSet
+    val fold = rows(viaFold)
+    assert(fold.size == 1000 && rows(viaWin) == fold)
+  }
+
   test("greedy packing: budget boundaries, oversize rows, per-key reset") {
     import spark.implicits._
     import graft.operators.Pack
