@@ -40,43 +40,29 @@ object Bench {
     // ran mid-list) — at the end it can only contaminate itself
     "q_cc_distributed")
 
-  /** Bench-only variants for names whose VERIFY query is a correctness
-    * HARNESS rather than the operator itself. q_embed_dedup's verify
-    * query re-computes the exact all-pairs keep-set and anti-joins it
-    * against the LSH keep-set purely to PROVE them equal; timing that
-    * would benchmark the proof, not the engine. The bench measures
-    * what a user calls: Dedup.embeddingDedup (banded hyperplane LSH,
-    * bucket join + rounded-cosine verify) with the SAME parameters the
-    * proof query pins as exact-equivalent. */
+  /** The entries whose timed frame is neither the declared query nor
+    * its bare operator ([[SparkEntry.operators]], which the certified
+    * queries wrap): the bench-only entries, which have no query of
+    * their own, and the two whose proof differs from the operator a
+    * user calls on purpose. */
   private[graft] val benchVariant: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // nBits deliberately NOT pinned (r10): the operator self-sizes the
-    // bucket space from the corpus (autoNBits — 4 at sf0.1's 2k
-    // vectors, identical to the old pin; 8 at the ×16 stress sweep's
-    // 32k, where the pinned 4 went quadratic by the operator's own
-    // sizing contract). The VERIFY query keeps its explicit nBits=4 —
-    // its LSH==exact certificate pins that geometry.
+    // differs on purpose: nBits left to the operator's autoNBits (the
+    // proof pins nBits = 4, the geometry its LSH == exact certificate
+    // holds at; 4 at sf0.1, 8 at the ×16 stress sweep)
     "q_embed_dedup" -> ((s, d) =>
       graft.ml.Dedup.embeddingDedup(SparkEntry.t(s, d, "embeddings"),
         "vec_id", "embedding", threshold = 0.45, bands = 64)
         .select("vec_id")),
-    // the 100-TB global-window code path (r14): q_window_global's
-    // exact calls forced through the DISTRIBUTED GlobalWindows
-    // machinery (zipWithIndex ordinals, two-level prefix scans, edge
-    // patch, rank join). The declared query now takes the small-frame
-    // tier at bench SF — the plan a small frame SHOULD get — so this
-    // entry keeps the at-scale path's cost measured per round, exactly
-    // the q_cc_distributed precedent. Results are tier-invariant
-    // (GlobalWindowsSpec pins tier ≡ distributed row-for-row).
+    // bench-only: q_window_global through the distributed GlobalWindows
+    // tier, which the declared query skips at bench scale
+    // (GlobalWindowsSpec pins the two tiers row-for-row equal)
     "q_window_global_dist" -> ((s, d) => {
       s.conf.set(graft.core.GlobalWindows.SmallFrameBytesKey, "0")
       try SparkEntry.queries("q_window_global")(s, d)
       finally s.conf.unset(graft.core.GlobalWindows.SmallFrameBytesKey)
     }),
-    // the 100-TB connected-components code path: q_dedup_cc's pair
-    // generation, but labels forced through the DISTRIBUTED min-label
-    // + pointer-jumping loop (localEdgeLimit = 0) instead of the
-    // driver union-find — tracks the per-round cost of the path
-    // q_cc_labels oracle-checks, which the local tier otherwise hides
+    // bench-only: q_dedup_cc's pairs through the distributed min-label
+    // loop (localEdgeLimit = 0) instead of the driver union-find
     "q_cc_distributed" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val pairs = graft.ml.Dedup.minhashPairs(
@@ -85,75 +71,9 @@ object Bench {
       graft.ml.Dedup.connectedComponents(
         pairs.select(col("id_a"), col("id_b")), localEdgeLimit = 0L)
     }),
-    // q_dedup_minhash's verify query runs the operator PLUS an
-    // independent pair-join formulation PLUS two anti-joins purely to
-    // PROVE the keep-sets equal; the bench measures what a user calls
-    // — Dedup.minhashDedup with the certificate-pinned parameters
-    "q_dedup_minhash" -> ((s, d) =>
-      graft.ml.Dedup.minhashDedup(SparkEntry.t(s, d, "documents"),
-        "doc_id", "text", numHashes = 64, bands = 16, threshold = 0.7,
-        shingleSize = 4).select("doc_id")),
-    // q_simhash_pairs' verify query anti-joins the blocked pairs
-    // against an |docs|² exhaustive Hamming probe (the recall
-    // certificate); the bench measures the pigeonhole-blocked
-    // operator alone, with the same proven-exact maxDist
-    "q_simhash_pairs" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Dedup.simhashPairs(SparkEntry.t(s, d, "documents"),
-        "doc_id", "text", maxDist = 3)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("int").as("hamming"))
-    }),
-    // q_ann_pq's verify query now carries the in-band recall
-    // certificate (r9): a brute-force ground-truth probe + overlap
-    // join that exists to PROVE recall, not to serve queries. The
-    // bench measures the operator a user calls — train + probe with
-    // the same certificate-pinned parameters (the train-once/probe-
-    // many shape is the separate q_ann_pq_probe entry below).
-    "q_ann_pq" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val e = SparkEntry.t(s, d, "embeddings")
-      graft.ml.Pq.ivfPqTopK(e, "vec_id", "embedding",
-        e.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, m = 16, pqK = 64, nLists = 16, nProbe = 8, iters = 1,
-        rerank = 50)
-        .select("query_id", "rank", "nn_id")
-    }),
-    // q_ann_ivf_cal's verify query adds an EXTERNAL brute-force overlap
-    // certificate on top of the operator; the bench measures the
-    // operator a user calls — ivfTopKCalibrated, whose own in-job
-    // sampled ground truth + escalation loop IS the operator's cost
-    // (that price being visible is the point of the entry)
-    "q_ann_ivf_cal" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val e = SparkEntry.t(s, d, "embeddings")
-      graft.ml.Similarity.ivfTopKCalibrated(e, "vec_id", "embedding",
-        e.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, targetRecall = 0.7, nLists = 16)
-        .select("query_id", "rank", "nn_id")
-    }),
-    // q_ann_pq_cal mirrors q_ann_ivf_cal: the verify query's external
-    // overlap certificate is proof, not operator; the bench measures
-    // the two-knob calibrated op itself (in-job truth + escalation
-    // included — the visible price of a measured recall)
-    "q_ann_pq_cal" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val e = SparkEntry.t(s, d, "embeddings")
-      graft.ml.Pq.ivfPqTopKCalibrated(e, "vec_id", "embedding",
-        e.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, targetRecall = 0.7, m = 16, pqK = 64, nLists = 16, iters = 1)
-        .select("query_id", "rank", "nn_id")
-    }),
-    // The RECURRING-pipeline ANN shape: q_ann_pq trains the IVF-PQ
-    // index inside the measured query (the Lloyd round + encode
-    // dominate, making it the suite's most expensive and most
-    // variance-prone entry), but production is train-once/probe-many.
-    // This entry measures the probe alone: the index is built ONCE
-    // (during the warmup pass — build seconds reported on stderr; it
-    // lives on disk, so the per-query cache reset cannot evict it)
-    // and every timed trial pays only centroid ranking + pruned list
-    // scan + ADC + exact re-rank — the cost a recurring pipeline
-    // pays per batch. Same geometry as q_ann_pq; PqSpec pins the
-    // indexed probe equal to the in-memory path.
+    // bench-only: q_ann_pq's probe alone against an index built once,
+    // untimed, during the warm-up pass (build seconds on stderr) — the
+    // train-once/probe-many cost; PqSpec pins indexed == in-memory
     "q_ann_pq_probe" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val dir = exportDir("pqindex", d)
@@ -170,48 +90,18 @@ object Bench {
         "vec_id", "embedding", k = 5, nProbe = 8, rerank = 50,
         rerankFrom = e, rerankIdCol = "vec_id", rerankVecCol = "embedding")
     }),
-    // q_semantic_dedup's verify query gained the r10 independent-twin
-    // certificate (re-derived clustering + pair-join keep-set + two
-    // anti-joins); the bench times the bare operator a user calls
+    // differs on purpose: the proof shares the operator's collected
+    // clustering (semanticCentroids), the bench times the one call
     "q_semantic_dedup" -> ((s, d) =>
       graft.ml.Dedup.semanticDedup(SparkEntry.t(s, d, "embeddings"),
         "vec_id", "embedding", threshold = 0.45, nLists = 8,
-        refineIters = 2).select("vec_id")),
-    // q_video_dedup's verify query gained the r10 planted-dup
-    // certificate (two anti-joins + raise_error union) — proof work
-    // that must not ride the perf record (the q_embed_dedup
-    // precedent). The bench times the bare cross-modal operator:
-    // wrap stills as AVIs, sample frames back, hash both modalities,
-    // Hamming-block, anti-join.
-    "q_video_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val imgs = graft.multimodal.Multimodal.syntheticMedia(s, 90)
-        .filter(col("kind") === "image")
-      val wrapped = graft.multimodal.Multimodal.wrapAsMjpegAvi(imgs)
-        .filter(col("avi").isNotNull)
-        .select((col("media_id") + 20000L).as("media_id"), col("avi").as("content"))
-      val frames = graft.multimodal.Multimodal.sampleVideoFrames(wrapped)
-        .select(col("media_id"), col("content"))
-      val stills = imgs.select(col("media_id"), col("content"))
-      val hashed = graft.multimodal.Multimodal
-        .withPerceptualHash(stills.unionByName(frames))
-        .filter(col("phash").isNotNull)
-      val dups = graft.ml.Dedup.hammingPairs(hashed, "media_id", "phash", maxDist = 0)
-        .select(col("id_b").as("media_id")).distinct()
-      hashed.join(dups, Seq("media_id"), "left_anti").select(col("media_id"))
-    }),
-    // q_dedup_against_near's verify query carries the brute-force
-    // equality certificate; the bench measures the user-facing call
-    // (banded anchor probe) with the same proven-equivalent parameters
-    "q_dedup_against_near" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val docs = SparkEntry.t(s, d, "documents")
-      graft.ml.Dedup.dedupAgainstNear(
-        docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text",
-        numHashes = 64, bands = 16, threshold = 0.7, shingleSize = 4)
-        .select("doc_id")
-    }))
+        refineIters = 2).select("vec_id")))
+
+  /** The frame Bench times (and PlanDump prints) for a DataFrame entry:
+    * its bench variant, else the bare operator of a certified query,
+    * else the declared query. */
+  private[graft] def frame(name: String): (SparkSession, String) => DataFrame =
+    benchVariant.orElse(SparkEntry.operators).applyOrElse(name, SparkEntry.queries)
 
   /** Export/IO group: the write paths BENCH previously never saw — a
     * regression there (e.g. losing the identity shard→task
@@ -300,7 +190,7 @@ object Bench {
         exportBench.get(name) match {
           case Some(action) => action(spark, sfDir)
           case None =>
-            benchVariant.getOrElse(name, SparkEntry.queries(name))(spark, sfDir).write
+            frame(name)(spark, sfDir).write
               .format("noop").mode("overwrite").save()
         }
       }._1

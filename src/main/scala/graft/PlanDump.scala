@@ -3,7 +3,8 @@ package graft
 /** Writes `.explain("formatted")` for every DataFrame-shaped bench
   * entry to one file per query — the optimization round's plan
   * evidence (`plans/r14/<query>_{before,after}.txt`). Uses the SAME
-  * query function the bench times (benchVariant override first, then
+  * frame the bench times ([[Bench.frame]]: the bench variant, else a
+  * certified query's bare operator from [[SparkEntry.operators]], else
   * the declared query) and the same session factory, so the captured
   * plan is the one whose seconds the bench records.
   *
@@ -51,8 +52,7 @@ object PlanDump {
       else Bench.headline ++ planOnly.keys
     names.foreach { n =>
       try {
-        val fn = Bench.benchVariant.orElse(planOnly).orElse(SparkEntry.queries)
-        val df = fn(n)(spark, sfDir)
+        val df = planOnly.getOrElse(n, Bench.frame(n))(spark, sfDir)
         val txt = renumbered(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
         val f = new java.io.File(outDir, s"${n}_$suffix.txt")

@@ -75,34 +75,163 @@ object SparkEntry {
     (docs, pairs)
   }
 
-  /** In-band planted-dup certificate for the media dedup queries (the
-    * q_ann_ivf raise_error skeleton): the harness plants every dup
-    * pair itself (id-offset re-ingests), so the correct keep-set is
-    * known at query-build time. Any id in `keep` but not `expected`
-    * is a planted pair the operator MISSED (a surviving copy); any id
-    * in `expected` but not `keep` is a NON-planted collapse (an
-    * original dropped). Either direction raises in-query — the
-    * rows-only driver check then cannot pass on a wrong answer. The
-    * certificate columns ride the kept id column, so Catalyst cannot
-    * prune the proof away. */
-  private def certifyKeepSet(keep: DataFrame, expected: DataFrame,
-                             what: String): DataFrame = {
-    val idType = keep.schema("media_id").dataType
-    // null ids are contractually OUTSIDE dedup scope (the repo's
-    // unhashable-rows-survive rule) and can never match an equi-join
-    // key — unfiltered they'd land in BOTH anti-joins and raise
-    // spuriously. Compare the non-null keep-sets only; the null rows
-    // still ride `keep` into the result untouched.
-    val keepIds = keep.filter(col("media_id").isNotNull)
-    val expIds = expected.filter(col("media_id").isNotNull)
-    val missed = keepIds.join(expIds, Seq("media_id"), "left_anti")
-    val overDropped = expIds.join(keepIds, Seq("media_id"), "left_anti")
-    val mismatch = missed.unionByName(overDropped)
-      .select(F.raise_error(concat(
-        lit(s"$what planted-dup certificate violated at media_id="),
-        col("media_id").cast("string"))).cast(idType).as("media_id"))
-    keep.unionByName(mismatch)
+  // ---------------------------------------------------------------------
+  // in-band certificates: a rows-only query whose answer cannot be
+  // oracle-checked proves it in the query itself, and raises instead of
+  // shipping a wrong answer
+  // ---------------------------------------------------------------------
+
+  /** `result` plus, per row of `failures`, a row that raises `message`
+    * (a column over `failures`). The raise rides `result`'s first
+    * column and the other columns are typed nulls (a non-nullable one
+    * gets its type's default), so the union keeps `result`'s schema,
+    * nullability included, and Catalyst cannot prune the proof away. */
+  private def raiseOn(result: DataFrame, failures: DataFrame,
+                      message: Column): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftkit.Bridge.column
+    result.union(failures.select(result.schema.fields.zipWithIndex.map { case (f, i) =>
+      val v = if (i == 0) raise_error(message).cast(f.dataType) else lit(null).cast(f.dataType)
+      (if (f.nullable) v else coalesce(v, column(Literal.default(f.dataType)))).as(f.name)
+    }.toSeq: _*))
   }
+
+  /** Key-set certificate: `result`, unchanged, when its non-null `keys`
+    * are exactly `expected`'s; otherwise the query raises, naming the
+    * first (smallest) key that differs and its side. Null keys sit out
+    * on both sides: ids outside dedup scope survive it by contract and
+    * never match an equi-join, so they would raise spuriously. */
+  private[graft] def certifyKeys(result: DataFrame, expected: DataFrame,
+                                 keys: Seq[String], what: String): DataFrame = {
+    def keySet(df: DataFrame) = df.select(keys.map(col): _*)
+      .filter(keys.map(col(_).isNotNull).reduce(_ && _))
+    val (got, want) = (keySet(result), keySet(expected))
+    val diff = got.join(want, keys, "left_anti").withColumn("__side", lit("unexpected"))
+      .union(want.join(got, keys, "left_anti").withColumn("__side", lit("missing")))
+    val first = diff.agg(F.min(struct((keys :+ "__side").map(col): _*)).as("__d"))
+      .filter(col("__d").isNotNull).select("__d.*")
+    raiseOn(result, first, concat(lit(s"$what certificate failed: "), col("__side"),
+      lit(" "), concat_ws(", ", keys.map(k => concat(lit(s"$k="), col(k).cast("string"))): _*)))
+  }
+
+  /** Threshold certificate: `result`, unchanged, when every named column
+    * of the one-row `stats` frame reaches its floor; otherwise the
+    * query raises, reporting each reading against its floor. */
+  private[graft] def certifyFloors(result: DataFrame, stats: DataFrame, what: String,
+                                   floors: (String, Double)*): DataFrame = {
+    val readings = floors.flatMap { case (c, f) =>
+      Seq(lit(s" $c="), coalesce(col(c).cast("string"), lit("null")),
+        lit(s" (floor ${java.math.BigDecimal.valueOf(f).stripTrailingZeros.toPlainString})"))
+    }
+    raiseOn(result, stats.filter(!floors.map { case (c, f) => col(c) >= f }.reduce(_ && _)),
+      concat(lit(s"$what certificate failed:") +: readings: _*))
+  }
+
+  /** The ten probe queries of the ANN entries. */
+  private def annQueries(e: DataFrame): DataFrame = e.filter(col("vec_id") < 10)
+
+  /** An ANN top-5 as the ANN entries emit it: long rank, cosine rounded
+    * to 6 digits, then `extra` (the calibrated entries' evidence). */
+  private def annRows(topK: DataFrame, extra: Column*): DataFrame =
+    topK.select(Seq(col("query_id"), col("rank").cast("long").as("rank"), col("nn_id"),
+      round(col("cos_sim"), 6).as("cos_sim")) ++ extra: _*)
+
+  /** The ANN entries' recall certificate, sorted for output: the
+    * neighbours overlap a brute-force top-5 over the same queries on at
+    * least 35 of the 50 (query, nn) pairs, and a calibrated result's
+    * emitted measured recall (taken over the overlapping rows) reaches
+    * its 0.7 target, so the calibration cannot vouch for itself. */
+  private def certifiedAnn(result: DataFrame, e: DataFrame, what: String): DataFrame = {
+    val truth = Similarity.bruteForceTopK(e, "vec_id", "embedding",
+      annQueries(e), "vec_id", "embedding", k = 5).select(col("query_id"), col("nn_id"))
+    val pairs = Seq("query_id", "nn_id")
+    val calibrated = result.columns.contains("measured_recall")
+    val stats =
+      if (!calibrated) result.select(pairs.map(col): _*).join(truth, pairs)
+        .agg(count(lit(1)).as("overlap"))
+      else result.select(col("query_id"), col("nn_id"), col("measured_recall"))
+        .join(truth, pairs, "left_semi")
+        .agg(count(lit(1)).as("overlap"), F.min(col("measured_recall")).as("measured_recall"))
+    val floors = ("overlap" -> 35.0) +: (if (calibrated) Seq("measured_recall" -> 0.7) else Nil)
+    CrysFrame(certifyFloors(result, stats, what, floors: _*)).sortBy("query_id", "rank").out
+  }
+
+  /** Greedy min-id media dedup over a perceptual hash: every id that is
+    * the larger end of a pair within `maxDist` goes. */
+  private def mediaKeep(hashed: DataFrame, hashCol: String, maxDist: Int): DataFrame = {
+    val dups = Dedup.hammingPairs(hashed, "media_id", hashCol, maxDist = maxDist)
+      .select(col("id_b").as("media_id")).distinct()
+    hashed.join(dups, Seq("media_id"), "left_anti").select(col("media_id"))
+  }
+
+  /** q_video_dedup's scenario: the image stills of `syntheticMedia(90)`
+    * (ids < 20000) and the frames sampled back out of their single-frame
+    * MJPEG wraps (ids +20000), perceptual-hashed, unhashable rows out. */
+  private def videoHashed(s: SparkSession): DataFrame = {
+    val imgs = Multimodal.syntheticMedia(s, 90).filter(col("kind") === "image")
+    val wrapped = Multimodal.wrapAsMjpegAvi(imgs)
+      .filter(col("avi").isNotNull)
+      .select((col("media_id") + 20000L).as("media_id"), col("avi").as("content"))
+    val frames = Multimodal.sampleVideoFrames(wrapped)
+      .select(col("media_id"), col("content"))
+    val stills = imgs.select(col("media_id"), col("content"))
+    Multimodal.withPerceptualHash(stills.unionByName(frames))
+      .filter(col("phash").isNotNull)
+  }
+
+  /** The incremental-ingest split of documents: (odd ids, the new
+    * batch; even ids, the standing corpus). */
+  private def ingestHalves(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val docs = t(s, d, "documents")
+    (docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+      docs.filter(pmod(col("doc_id"), lit(2)) === 0))
+  }
+
+  /** The bare operator call of each certified query whose bench entry
+    * times that same call. The entry in [[queries]] wraps this frame
+    * with its certificate and its sort; Bench and PlanDump time and
+    * print it directly, so the call the certificate vouches for and
+    * the call Bench times are one declaration. */
+  val operators: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "q_dedup_minhash" -> ((s, d) =>
+      Dedup.minhashDedup(t(s, d, "documents"), "doc_id", "text",
+        numHashes = 64, bands = 16, threshold = 0.7, shingleSize = 4)
+        .select("doc_id")),
+    // maxDist = 3: the 4-block pigeonhole scheme's guaranteed-recall
+    // bound (larger distances would silently under-recall)
+    "q_simhash_pairs" -> ((s, d) =>
+      Dedup.simhashPairs(t(s, d, "documents"), "doc_id", "text", maxDist = 3)
+        .select(col("id_a"), col("id_b"), col("hamming").cast("int").as("hamming"))),
+    "q_dedup_against_near" -> ((s, d) => {
+      val (batch, corpus) = ingestHalves(s, d)
+      Dedup.dedupAgainstNear(batch, corpus, "doc_id", "text",
+        numHashes = 64, bands = 16, threshold = 0.7, shingleSize = 4)
+        .select("doc_id")
+    }),
+    "q_ann_pq" -> ((s, d) => {
+      val e = t(s, d, "embeddings")
+      annRows(graft.ml.Pq.ivfPqTopK(e, "vec_id", "embedding",
+        annQueries(e), "vec_id", "embedding", k = 5, m = 16, pqK = 64,
+        nLists = 16, nProbe = 8, iters = 1, rerank = 50))
+    }),
+    "q_ann_ivf_cal" -> ((s, d) => {
+      val e = t(s, d, "embeddings")
+      annRows(Similarity.ivfTopKCalibrated(e, "vec_id", "embedding",
+          annQueries(e), "vec_id", "embedding", k = 5, targetRecall = 0.7,
+          nLists = 16),
+        round(col("measured_recall"), 6).as("measured_recall"),
+        col("calibrated_nprobe").cast("long").as("calibrated_nprobe"))
+    }),
+    "q_ann_pq_cal" -> ((s, d) => {
+      val e = t(s, d, "embeddings")
+      annRows(graft.ml.Pq.ivfPqTopKCalibrated(e, "vec_id", "embedding",
+          annQueries(e), "vec_id", "embedding", k = 5, targetRecall = 0.7,
+          m = 16, pqK = 64, nLists = 16, iters = 1),
+        round(col("measured_recall"), 6).as("measured_recall"),
+        col("calibrated_nprobe").cast("long").as("calibrated_nprobe"),
+        col("calibrated_rerank").cast("long").as("calibrated_rerank"))
+    }),
+    "q_video_dedup" -> ((s, _) => mediaKeep(videoHashed(s), "phash", maxDist = 0)))
 
   /** Exact money aggregation: per-term decimal cast, exact decimal sum,
     * final scale-2 decimal. The final scale is the SOURCE scale (money
@@ -806,13 +935,10 @@ object SparkEntry {
         .filter(col("resized").isNotNull)
         .select(col("media_id"), col("resized").as("content"))
       val b = a.select((col("media_id") + 10000L).as("media_id"), col("content"))
-      val hashed = Multimodal.withPerceptualHash(a.unionByName(b))
-      val dups = Dedup.hammingPairs(hashed, "media_id", "phash", maxDist = 0)
-        .select(col("id_b").as("media_id")).distinct()
-      val keep = hashed.join(dups, Seq("media_id"), "left_anti")
-        .select(col("media_id"))
-      CrysFrame(certifyKeepSet(keep, a.select(col("media_id")), "image dedup"))
-        .sortBy("media_id").out
+      val keep = mediaKeep(Multimodal.withPerceptualHash(a.unionByName(b)), "phash",
+        maxDist = 0)
+      CrysFrame(certifyKeys(keep, a.select(col("media_id")), Seq("media_id"),
+        "image dedup planted-dup")).sortBy("media_id").out
     }),
 
     // cross-modal video dedup: the same footage ingested as STILLS and
@@ -822,28 +948,13 @@ object SparkEntry {
     // each video to its source still and greedy min-id keeps the
     // stills. Rows-only (container walk + frame decode not
     // SQL-expressible); AviSpec pins writer/walker/frame exactness
-    "q_video_dedup" -> ((s, d) => {
-      val imgs = Multimodal.syntheticMedia(s, 90).filter(col("kind") === "image")
-      val wrapped = Multimodal.wrapAsMjpegAvi(imgs)
-        .filter(col("avi").isNotNull)
-        .select((col("media_id") + 20000L).as("media_id"), col("avi").as("content"))
-      val frames = Multimodal.sampleVideoFrames(wrapped)
-        .select(col("media_id"), col("content"))
-      val stills = imgs.select(col("media_id"), col("content"))
-      val hashed = Multimodal.withPerceptualHash(stills.unionByName(frames))
-        .filter(col("phash").isNotNull)
-      val dups = Dedup.hammingPairs(hashed, "media_id", "phash", maxDist = 0)
-        .select(col("id_b").as("media_id")).distinct()
-      val keep = hashed.join(dups, Seq("media_id"), "left_anti")
-        .select(col("media_id"))
+    "q_video_dedup" -> ((s, d) =>
       // r10 certificate: expected keep-set = every HASHED still (ids
       // < 20000 — the video wraps are offset +20000 and must all
       // collapse onto their source stills); see q_image_dedup
-      CrysFrame(certifyKeepSet(keep,
-        hashed.filter(col("media_id") < 20000L).select(col("media_id")),
-        "video dedup"))
-        .sortBy("media_id").out
-    }),
+      CrysFrame(certifyKeys(operators("q_video_dedup")(s, d),
+        videoHashed(s).filter(col("media_id") < 20000L).select(col("media_id")),
+        Seq("media_id"), "video dedup planted-dup")).sortBy("media_id").out),
 
     // audio near-dup dedup: spectral fingerprint over the REAL WAV
     // decoders fed through the same pigeonhole Hamming blocking as text
@@ -874,21 +985,20 @@ object SparkEntry {
       val flacCopies = Multimodal.transcodeAudioFlac(aud)
         .filter(col("flac").isNotNull)
         .select((col("media_id") + 30000L).as("media_id"), col("flac").as("content"))
+      // localCheckpoint (eager), as q_multimodal: the fingerprinted
+      // union feeds the Hamming pairs, the anti-join and the
+      // certificate — uncached, every consumer would rebuild and
+      // re-decode the synthetic media
       val hashed = Multimodal.withAudioFingerprint(
           aud.select(col("media_id"), col("content"))
             .unionByName(gainCopies).unionByName(rateCopies).unionByName(flacCopies))
-        .filter(col("audio_fp").isNotNull)
-      val dups = Dedup.hammingPairs(hashed, "media_id", "audio_fp", maxDist = 2)
-        .select(col("id_b").as("media_id")).distinct()
-      val keep = hashed.join(dups, Seq("media_id"), "left_anti")
-        .select(col("media_id"))
+        .filter(col("audio_fp").isNotNull).localCheckpoint()
       // r10 certificate: expected keep-set = every fingerprinted
       // ORIGINAL (ids < 10000 — gain/rate/FLAC re-ingests are offset
       // +10000/+20000/+30000 and must all collapse); see q_image_dedup
-      CrysFrame(certifyKeepSet(keep,
+      CrysFrame(certifyKeys(mediaKeep(hashed, "audio_fp", maxDist = 2),
         hashed.filter(col("media_id") < 10000L).select(col("media_id")),
-        "audio dedup"))
-        .sortBy("media_id").out
+        Seq("media_id"), "audio dedup planted-dup")).sortBy("media_id").out
     }),
 
     // deterministic content-stable sampling (ml.Sampling): both derive
@@ -1013,10 +1123,8 @@ object SparkEntry {
     // AGAINST the even half playing the standing corpus — the corpus
     // side reduces to distinct 8-byte hashes before the anti-join
     "q_dedup_against" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      CrysFrame(Dedup.dedupAgainstExact(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0), "text")
+      val (batch, corpus) = ingestHalves(s, d)
+      CrysFrame(Dedup.dedupAgainstExact(batch, corpus, "text")
         .select("doc_id", "lang", "n_chars")).sortBy("doc_id").out
     }),
 
@@ -1028,12 +1136,7 @@ object SparkEntry {
     // rows-only check. Hash family isn't SQL-portable → rows-only.
     "q_dedup_against_near" -> ((s, d) => {
       import graft.functions.Kernels
-      val docs = t(s, d, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-      val batch = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-      val lshKeep = Dedup.dedupAgainstNear(batch, corpus, "doc_id", "text",
-        numHashes = 64, bands = 16, threshold = 0.7, shingleSize = 4)
-        .select("doc_id")
+      val (batch, corpus) = ingestHalves(s, d)
       def sigOf(df: DataFrame) = df.select(
         col("doc_id").cast("long").as("id"),
         Kernels.minhashSig(
@@ -1046,20 +1149,13 @@ object SparkEntry {
         .select(col("id").as("doc_id"))
       val bfKeep = batch.select(col("doc_id").cast("long").as("doc_id"))
         .join(bfDrop, Seq("doc_id"), "left_anti")
-      val lshKeepL = lshKeep.select(col("doc_id").cast("long").as("doc_id"))
-      val mismatch = lshKeepL.join(bfKeep, Seq("doc_id"), "left_anti")
-        .union(bfKeep.join(lshKeepL, Seq("doc_id"), "left_anti"))
-        .select(raise_error(concat(
-          lit("dedupAgainstNear banded/brute-force keep-set mismatch at doc_id="),
-          col("doc_id").cast("string"))).cast("long").as("doc_id"))
-      CrysFrame(lshKeepL.union(mismatch)).sortBy("doc_id").out
+      CrysFrame(certifyKeys(operators("q_dedup_against_near")(s, d), bfKeep,
+        Seq("doc_id"), "dedupAgainstNear banded/brute-force keep-set"))
+        .sortBy("doc_id").out
     }),
 
     "q_dedup_minhash" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val keep = Dedup.minhashDedup(docs, "doc_id", "text",
-        numHashes = 64, bands = 16, threshold = 0.7, shingleSize = 4)
-        .select("doc_id")
       // in-query certificate: the SCALE path (bounded MinK anchor
       // aggregate + probe kernel) must produce the same keep-set as
       // the independent pair-join formulation of the identical
@@ -1072,12 +1168,8 @@ object SparkEntry {
         numHashes = 64, bands = 16, threshold = 0.7, shingleSize = 4)
         .select(col("id_b").as("doc_id")).distinct()
       val pairKeep = docs.select("doc_id").join(dups, Seq("doc_id"), "left_anti")
-      val mismatch = keep.join(pairKeep, Seq("doc_id"), "left_anti")
-        .union(pairKeep.join(keep, Seq("doc_id"), "left_anti"))
-        .select(raise_error(concat(
-          lit("minhash anchor/pair keep-set mismatch at doc_id="),
-          col("doc_id").cast("string"))).cast("long").as("doc_id"))
-      CrysFrame(keep.union(mismatch)).sortBy("doc_id").out
+      CrysFrame(certifyKeys(operators("q_dedup_minhash")(s, d), pairKeep,
+        Seq("doc_id"), "minhash anchor/pair keep-set")).sortBy("doc_id").out
     }),
 
     // duplicate-CLUSTER dedup (connected components over the verified
@@ -1089,13 +1181,8 @@ object SparkEntry {
         numHashes = 64, bands = 16, threshold = 0.7, shingleSize = 4)
         .select("doc_id")).sortBy("doc_id").out),
 
-    // maxDist = 3: the 4-block pigeonhole scheme's guaranteed-recall
-    // bound (larger distances would silently under-recall)
     "q_simhash_pairs" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val blocked = Dedup.simhashPairs(docs, "doc_id", "text", maxDist = 3)
-        .withColumn("hamming", col("hamming").cast("int"))
-        .select("id_a", "id_b", "hamming")
       // in-query certificate: pigeonhole blocking GUARANTEES recall
       // at maxDist ≤ 3, so the blocked pairs must EQUAL the
       // exhaustive all-pairs Hamming probe exactly — any divergence
@@ -1109,14 +1196,9 @@ object SparkEntry {
         .select(col("id_a"), col("id_b"),
           Dedup.hamming(col("__ha"), col("__hb")).cast("int").as("hamming"))
         .filter(col("hamming") <= 3)
-      val mismatch = blocked.join(exact, Seq("id_a", "id_b", "hamming"), "left_anti")
-        .union(exact.join(blocked, Seq("id_a", "id_b", "hamming"), "left_anti"))
-        .select(
-          raise_error(concat(lit("simhash blocked/exhaustive pair mismatch at ("),
-            col("id_a").cast("string"), lit(","), col("id_b").cast("string"),
-            lit(")"))).cast("long").as("id_a"),
-          col("id_b"), col("hamming"))
-      CrysFrame(blocked.union(mismatch)).sortBy("id_a", "id_b").out
+      CrysFrame(certifyKeys(operators("q_simhash_pairs")(s, d), exact,
+        Seq("id_a", "id_b", "hamming"), "simhash blocked/exhaustive pairs"))
+        .sortBy("id_a", "id_b").out
     }),
 
     // exact n-gram Jaccard over a bounded slice (the verify kernel of the
@@ -1189,17 +1271,8 @@ object SparkEntry {
         .filter(round(Similarity.cosine(col("va"), col("vb")), 6) >= 0.45)
         .select(col("id_b").as("vec_id")).distinct()
       val exactKeep = e.join(dups, Seq("vec_id"), "left_anti").select("vec_id")
-      val idType = e.schema("vec_id").dataType
-      // null ids survive dedup by contract and never equi-join — keep
-      // them out of the anti-join certificate (they'd raise spuriously)
-      val mismatch = lshKeep.filter(col("vec_id").isNotNull)
-        .join(exactKeep, Seq("vec_id"), "left_anti")
-        .union(exactKeep.filter(col("vec_id").isNotNull)
-          .join(lshKeep, Seq("vec_id"), "left_anti"))
-        .select(raise_error(concat(
-          lit("embeddingDedup LSH/exact keep-set mismatch at vec_id="),
-          col("vec_id").cast("string"))).cast(idType).as("vec_id"))
-      CrysFrame(lshKeep.union(mismatch)).sortBy("vec_id").out
+      CrysFrame(certifyKeys(lshKeep, exactKeep, Seq("vec_id"),
+        "embeddingDedup LSH/exact keep-set")).sortBy("vec_id").out
     }),
 
     // SemDeDup cluster dedup (ml.Dedup.semanticDedup): k-means
@@ -1235,18 +1308,8 @@ object SparkEntry {
         .filter(round(Similarity.cosine(col("va"), col("vb")), 6) >= 0.45)
         .select(col("id_b").as("vec_id")).distinct()
       val expectKeep = e.join(dups, Seq("vec_id"), "left_anti").select("vec_id")
-      val idType = e.schema("vec_id").dataType
-      // null ids: outside dedup scope, never equi-join — exclude from
-      // the certificate anti-joins (see certifyKeepSet)
-      val mismatch = keep.filter(col("vec_id").isNotNull)
-        .join(expectKeep, Seq("vec_id"), "left_anti")
-        .union(expectKeep.filter(col("vec_id").isNotNull)
-          .join(keep, Seq("vec_id"), "left_anti"))
-        .select(raise_error(concat(
-          lit("semanticDedup keep-set diverged from the independent " +
-            "pair-join formulation at vec_id="),
-          col("vec_id").cast("string"))).cast(idType).as("vec_id"))
-      CrysFrame(keep.union(mismatch)).sortBy("vec_id").out
+      CrysFrame(certifyKeys(keep, expectKeep, Seq("vec_id"),
+        "semanticDedup operator/pair-join keep-set")).sortBy("vec_id").out
     }),
 
     // ---------------- extensions: similarity search ----------------
@@ -1264,11 +1327,8 @@ object SparkEntry {
 
     "q_ann_topk" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      CrysFrame(Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("nn_id"),
-          round(col("cos_sim"), 6).as("cos_sim")))
+      CrysFrame(annRows(Similarity.bruteForceTopK(e, "vec_id", "embedding",
+        annQueries(e), "vec_id", "embedding", k = 5)))
         .sortBy("query_id", "rank").out
     }),
 
@@ -1283,26 +1343,9 @@ object SparkEntry {
     // costs about one q_ann_topk (10 queries x corpus, broadcast side).
     "q_ann_ivf" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val ivf = Similarity.ivfTopK(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5, nLists = 16, nProbe = 8)
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("nn_id"),
-          round(col("cos_sim"), 6).as("cos_sim"))
-      val bf = Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("nn_id"))
-      val hits = ivf.select(col("query_id"), col("nn_id"))
-        .join(bf, Seq("query_id", "nn_id"))
-        .agg(count(lit(1)).as("__h"))
-      val idType = e.schema("vec_id").dataType
-      val bad = hits.filter(col("__h") < 35)
-        .select(
-          raise_error(concat(lit("ivfTopK recall certificate failed: "),
-            col("__h").cast("string"), lit("/50 overlap < 35/50")))
-            .cast(idType).as("query_id"),
-          lit(0L).as("rank"), lit(null).cast(idType).as("nn_id"),
-          lit(0.0).as("cos_sim"))
-      CrysFrame(ivf.union(bad)).sortBy("query_id", "rank").out
+      certifiedAnn(annRows(Similarity.ivfTopK(e, "vec_id", "embedding",
+        annQueries(e), "vec_id", "embedding", k = 5, nLists = 16, nProbe = 8)),
+        e, "ivfTopK recall")
     }),
 
     // CALIBRATED IVF top-k (r12): the probe count is not guessed from
@@ -1315,34 +1358,9 @@ object SparkEntry {
     // the op proceeds-with-evidence at its cap, the query gates on the
     // evidence), (b) the same independent brute-force overlap floor as
     // q_ann_ivf, so the calibration cannot vouch for itself.
-    "q_ann_ivf_cal" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val cal = Similarity.ivfTopKCalibrated(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5, targetRecall = 0.7,
-        nLists = 16)
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("nn_id"),
-          round(col("cos_sim"), 6).as("cos_sim"),
-          round(col("measured_recall"), 6).as("measured_recall"),
-          col("calibrated_nprobe").cast("long").as("calibrated_nprobe"))
-      val bf = Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("nn_id"))
-      val hits = cal.select(col("query_id"), col("nn_id"), col("measured_recall"))
-        .join(bf, Seq("query_id", "nn_id"), "left_semi")
-        .agg(count(lit(1)).as("__h"), F.min(col("measured_recall")).as("__r"))
-      val idType = e.schema("vec_id").dataType
-      val bad = hits.filter(col("__h") < 35 || col("__r") < 0.7)
-        .select(
-          raise_error(concat(lit("ivfTopKCalibrated certificate failed: "),
-            col("__h").cast("string"), lit("/50 overlap (floor 35) at measured recall "),
-            col("__r").cast("string"), lit(" (target 0.7)")))
-            .cast(idType).as("query_id"),
-          lit(0L).as("rank"), lit(null).cast(idType).as("nn_id"),
-          lit(0.0).as("cos_sim"), lit(0.0).as("measured_recall"),
-          lit(0L).as("calibrated_nprobe"))
-      CrysFrame(cal.union(bad)).sortBy("query_id", "rank").out
-    }),
+    "q_ann_ivf_cal" -> ((s, d) =>
+      certifiedAnn(operators("q_ann_ivf_cal")(s, d), t(s, d, "embeddings"),
+        "ivfTopKCalibrated")),
 
     // IVF-PQ with exact re-rank (ml.Pq): inverted lists bound WHICH
     // candidates are touched, 16-byte PQ codes bound the bytes per
@@ -1362,30 +1380,9 @@ object SparkEntry {
     // lose recall vs the IVF candidate set at the same nProbe (PqSpec
     // "re-rank must not lose recall"); measured 0.82-0.92 across the
     // driver SFs.
-    "q_ann_pq" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val pq = graft.ml.Pq.ivfPqTopK(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5, m = 16, pqK = 64,
-        nLists = 16, nProbe = 8, iters = 1, rerank = 50)
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("nn_id"),
-          round(col("cos_sim"), 6).as("cos_sim"))
-      val bf = Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("nn_id"))
-      val hits = pq.select(col("query_id"), col("nn_id"))
-        .join(bf, Seq("query_id", "nn_id"))
-        .agg(count(lit(1)).as("__h"))
-      val idType = e.schema("vec_id").dataType
-      val bad = hits.filter(col("__h") < 35)
-        .select(
-          raise_error(concat(lit("ivfPqTopK recall certificate failed: "),
-            col("__h").cast("string"), lit("/50 overlap < 35/50")))
-            .cast(idType).as("query_id"),
-          lit(0L).as("rank"), lit(null).cast(idType).as("nn_id"),
-          lit(0.0).as("cos_sim"))
-      CrysFrame(pq.union(bad)).sortBy("query_id", "rank").out
-    }),
+    "q_ann_pq" -> ((s, d) =>
+      certifiedAnn(operators("q_ann_pq")(s, d), t(s, d, "embeddings"),
+        "ivfPqTopK recall")),
 
     // CALIBRATED IVF-PQ top-k (r13; r14 knob policy + residual codes):
     // the two-knob counterpart of q_ann_ivf_cal — whichever knob's
@@ -1399,35 +1396,9 @@ object SparkEntry {
     // in-band certificates: (a) the emitted measured_recall must clear
     // the target, (b) an independent brute-force overlap floor, so the
     // calibration cannot vouch for itself.
-    "q_ann_pq_cal" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val cal = graft.ml.Pq.ivfPqTopKCalibrated(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5, targetRecall = 0.7,
-        m = 16, pqK = 64, nLists = 16, iters = 1)
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("nn_id"),
-          round(col("cos_sim"), 6).as("cos_sim"),
-          round(col("measured_recall"), 6).as("measured_recall"),
-          col("calibrated_nprobe").cast("long").as("calibrated_nprobe"),
-          col("calibrated_rerank").cast("long").as("calibrated_rerank"))
-      val bf = Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("nn_id"))
-      val hits = cal.select(col("query_id"), col("nn_id"), col("measured_recall"))
-        .join(bf, Seq("query_id", "nn_id"), "left_semi")
-        .agg(count(lit(1)).as("__h"), F.min(col("measured_recall")).as("__r"))
-      val idType = e.schema("vec_id").dataType
-      val bad = hits.filter(col("__h") < 35 || col("__r") < 0.7)
-        .select(
-          raise_error(concat(lit("ivfPqTopKCalibrated certificate failed: "),
-            col("__h").cast("string"), lit("/50 overlap (floor 35) at measured recall "),
-            col("__r").cast("string"), lit(" (target 0.7)")))
-            .cast(idType).as("query_id"),
-          lit(0L).as("rank"), lit(null).cast(idType).as("nn_id"),
-          lit(0.0).as("cos_sim"), lit(0.0).as("measured_recall"),
-          lit(0L).as("calibrated_nprobe"), lit(0L).as("calibrated_rerank"))
-      CrysFrame(cal.union(bad)).sortBy("query_id", "rank").out
-    }),
+    "q_ann_pq_cal" -> ((s, d) =>
+      certifiedAnn(operators("q_ann_pq_cal")(s, d), t(s, d, "embeddings"),
+        "ivfPqTopKCalibrated")),
 
     // ---------------- extensions: text analysis ----------------
     "q_token_count" -> ((s, d) =>

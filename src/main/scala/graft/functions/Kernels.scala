@@ -39,6 +39,18 @@ object Kernels {
         s"$name expects array<float|double|int|long>, got ${other.sql}")
     }
 
+  /** Element reader of a numeric array type (see [[requireNumericArray]])
+    * as a double — the one getter of the vector and PQ kernels, which
+    * each cache it per instance. */
+  private[functions] def doubleGetter(dt: DataType, name: String): (ArrayData, Int) => Double =
+    dt.asInstanceOf[ArrayType].elementType match {
+      case FloatType   => (a, i) => a.getFloat(i).toDouble
+      case DoubleType  => (a, i) => a.getDouble(i)
+      case LongType    => (a, i) => a.getLong(i).toDouble
+      case IntegerType => (a, i) => a.getInt(i).toDouble
+      case other => throw new IllegalArgumentException(s"$name over $other")
+    }
+
   /** splitmix64 finalizer — the hash-family parameter source (same
     * scheme as graft.ml.Dedup.hashParams). */
   private[graft] def mix(x: Long): Long = {
@@ -270,16 +282,7 @@ case class CosineLshBandsExpr(child: Expression, bands: Int, bitsPerBand: Int,
   override def checkInputDataTypes() =
     Kernels.requireNumericArray("cosine_lsh_bands", child.dataType)
 
-  private def elemGetter: (ArrayData, Int) => Double =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case FloatType   => (a, i) => a.getFloat(i).toDouble
-      case DoubleType  => (a, i) => a.getDouble(i)
-      case LongType    => (a, i) => a.getLong(i).toDouble
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case other => throw new IllegalArgumentException(s"cosine LSH over $other")
-    }
-
-  @transient private lazy val get = elemGetter
+  @transient private lazy val get = Kernels.doubleGetter(child.dataType, "cosine LSH")
 
   /** ±1.0 plane table, layout [(b·bitsPerBand + i)·dim + d] — exactly
     * `if ((mix(((b·bits+i)·1000003 + seed)·31 + d) & 1) != 0) 1 else -1`.
@@ -412,18 +415,9 @@ case class CosineBucketDupsExpr(child: Expression, threshold: Double, roundDigit
     }
   }
 
-  private def elemGetter: (ArrayData, Int) => Double =
-    child.dataType.asInstanceOf[ArrayType].elementType
-      .asInstanceOf[StructType](1).dataType
-      .asInstanceOf[ArrayType].elementType match {
-      case FloatType   => (a, i) => a.getFloat(i).toDouble
-      case DoubleType  => (a, i) => a.getDouble(i)
-      case LongType    => (a, i) => a.getLong(i).toDouble
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case other => throw new IllegalArgumentException(s"cosine over $other")
-    }
-
-  @transient private lazy val get = elemGetter
+  @transient private lazy val get = Kernels.doubleGetter(
+    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType](1).dataType,
+    "cosine")
 
   /** Spark's Round on doubles guards NaN/Infinity and passes them
     * through (so NaN >= threshold is simply false); BigDecimal.valueOf
@@ -637,17 +631,8 @@ case class CosineSimExpr(left: Expression, right: Expression)
       case fail => fail
     }
 
-  private def elemGetter(e: Expression): (ArrayData, Int) => Double =
-    e.dataType.asInstanceOf[ArrayType].elementType match {
-      case FloatType  => (a, i) => a.getFloat(i).toDouble
-      case DoubleType => (a, i) => a.getDouble(i)
-      case LongType   => (a, i) => a.getLong(i).toDouble
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case other => throw new IllegalArgumentException(s"cosine over $other")
-    }
-
-  @transient private lazy val getL = elemGetter(left)
-  @transient private lazy val getR = elemGetter(right)
+  @transient private lazy val getL = Kernels.doubleGetter(left.dataType, "cosine")
+  @transient private lazy val getR = Kernels.doubleGetter(right.dataType, "cosine")
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -717,21 +702,12 @@ case class BestCosineExpr(left: Expression, right: Expression)
       case fail => fail
     }
 
-  private def elemGetter(dt: DataType): (ArrayData, Int) => Double = dt match {
-    case FloatType   => (a, i) => a.getFloat(i).toDouble
-    case DoubleType  => (a, i) => a.getDouble(i)
-    case LongType    => (a, i) => a.getLong(i).toDouble
-    case IntegerType => (a, i) => a.getInt(i).toDouble
-    case other => throw new IllegalArgumentException(s"best_cosine over $other")
-  }
-
-  @transient private lazy val getV =
-    elemGetter(left.dataType.asInstanceOf[ArrayType].elementType)
+  @transient private lazy val getV = Kernels.doubleGetter(left.dataType, "best_cosine")
   @transient private lazy val candStruct =
     right.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
   @transient private lazy val idIsLong = candStruct.fields(0).dataType == LongType
   @transient private lazy val getC =
-    elemGetter(candStruct.fields(1).dataType.asInstanceOf[ArrayType].elementType)
+    Kernels.doubleGetter(candStruct.fields(1).dataType, "best_cosine")
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val v = l.asInstanceOf[ArrayData]

@@ -57,15 +57,6 @@ object PqKernels {
     require(codebook.length == m * k * subDim,
       s"codebook length ${codebook.length} != m*k*subDim = ${m * k * subDim}")
   }
-
-  private[functions] def doubleGetter(dt: DataType, name: String): (ArrayData, Int) => Double =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case FloatType   => (a, i) => a.getFloat(i).toDouble
-      case DoubleType  => (a, i) => a.getDouble(i)
-      case LongType    => (a, i) => a.getLong(i).toDouble
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case other => throw new IllegalArgumentException(s"$name over $other")
-    }
 }
 
 /** Encode a vector to its m sub-codes: per subspace, the L2-nearest
@@ -82,7 +73,7 @@ case class PqCodesExpr(child: Expression, codebook: Array[Double],
   override def checkInputDataTypes() =
     Kernels.requireNumericArray("pq_codes", child.dataType)
 
-  @transient private lazy val get = PqKernels.doubleGetter(child.dataType, "pq_codes")
+  @transient private lazy val get = Kernels.doubleGetter(child.dataType, "pq_codes")
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
@@ -145,9 +136,9 @@ case class PqResidualCodesExpr(left: Expression, right: Expression,
   }
 
   @transient private lazy val getV =
-    PqKernels.doubleGetter(left.dataType, "pq_residual_codes")
+    Kernels.doubleGetter(left.dataType, "pq_residual_codes")
   @transient private lazy val getA =
-    PqKernels.doubleGetter(right.dataType, "pq_residual_codes")
+    Kernels.doubleGetter(right.dataType, "pq_residual_codes")
 
   override def nullSafeEval(vecAny: Any, anchorAny: Any): Any = {
     val v = vecAny.asInstanceOf[ArrayData]
@@ -201,7 +192,7 @@ case class PqTableExpr(child: Expression, codebook: Array[Double],
   override def checkInputDataTypes() =
     Kernels.requireNumericArray("pq_table", child.dataType)
 
-  @transient private lazy val get = PqKernels.doubleGetter(child.dataType, "pq_table")
+  @transient private lazy val get = Kernels.doubleGetter(child.dataType, "pq_table")
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]

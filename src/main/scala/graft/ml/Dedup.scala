@@ -159,6 +159,24 @@ object Dedup {
     batch.join(dups, Seq(idCol), "left_anti")
   }
 
+  /** The four banding parameters a near-dup index stores as constant
+    * columns beside its anchors ([[buildNearDupIndex]]). */
+  private case class IndexBanding(numHashes: Int, bands: Int, shingleSize: Int,
+                                  maxPartners: Int) {
+    def stamp(anchors: DataFrame): DataFrame =
+      IndexBanding.columns.zip(productIterator.toSeq).foldLeft(anchors) {
+        case (df, (name, v)) => df.withColumn(name, lit(v)) }
+  }
+
+  private object IndexBanding {
+    val columns = Seq("num_hashes", "bands", "shingle_size", "max_partners")
+
+    /** The stored parameters, or None for an index with no anchors. */
+    def read(stored: DataFrame): Option[IndexBanding] =
+      stored.select(columns.map(col): _*).head(1).headOption.map(p =>
+        IndexBanding(p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3)))
+  }
+
   /** Build and persist the corpus side of [[dedupAgainstNear]] — the
     * recurring-ingest form. Signature computation over the corpus is
     * the expensive half (a full text scan + the banding shuffle), and
@@ -182,11 +200,7 @@ object Dedup {
     val (_, anchors) = bandedAnchors(
       longIds(corpus, idCol, textCol, "buildNearDupIndex"), idCol, textCol,
       numHashes, bands, shingleSize, maxPartners, persist = false)
-    anchors
-      .withColumn("num_hashes", lit(numHashes))
-      .withColumn("bands", lit(bands))
-      .withColumn("shingle_size", lit(shingleSize))
-      .withColumn("max_partners", lit(maxPartners))
+    IndexBanding(numHashes, bands, shingleSize, maxPartners).stamp(anchors)
       .write.mode("overwrite").parquet(s"$path/anchors")
   }
 
@@ -202,15 +216,14 @@ object Dedup {
                               threshold: Double = 0.8): DataFrame = {
     val spark = batch.sparkSession
     val stored = spark.read.parquet(s"$path/anchors")
-    stored.select(col("num_hashes"), col("bands"), col("shingle_size"),
-        col("max_partners")).head(1) match {
-      case Array(p) =>
+    IndexBanding.read(stored) match {
+      case Some(p) =>
         probeAnchors(batch,
           stored.select(col("__bkey"), col("__anchors")), idCol, textCol,
-          numHashes = p.getInt(0), bands = p.getInt(1),
-          threshold = threshold, shingleSize = p.getInt(2),
-          maxPartners = p.getInt(3), caller = "dedupAgainstNearIndexed")
-      case _ => batch
+          numHashes = p.numHashes, bands = p.bands, threshold = threshold,
+          shingleSize = p.shingleSize, maxPartners = p.maxPartners,
+          caller = "dedupAgainstNearIndexed")
+      case None => batch
     }
   }
 
@@ -260,24 +273,19 @@ object Dedup {
     // keeps seeing the PRE-append files even after the write below —
     // exactly what the new-bucket statistic needs
     val stored = spark.read.parquet(s"$path/anchors")
-    val params = stored.select(col("num_hashes"), col("bands"),
-      col("shingle_size"), col("max_partners")).head(1)
-    require(params.nonEmpty,
+    val banding = IndexBanding.read(stored)
+    require(banding.nonEmpty,
       s"appendToNearDupIndex: index at $path holds no anchors — build it " +
         "first (an empty corpus has no banding parameters to append under)")
-    val p = params(0)
+    val p = banding.get
     val (_, anchors) = bandedAnchors(
       longIds(batch, idCol, textCol, "appendToNearDupIndex"), idCol, textCol,
-      numHashes = p.getInt(0), bands = p.getInt(1),
-      shingleSize = p.getInt(2), maxPartners = p.getInt(3), persist = false)
+      numHashes = p.numHashes, bands = p.bands,
+      shingleSize = p.shingleSize, maxPartners = p.maxPartners, persist = false)
     Persisted.holding { hold =>
       // three consumers (write + two statistics) — persist the bounded
       // per-bucket fold, not the corpus
-      val newAnchors = hold(anchors
-        .withColumn("num_hashes", lit(p.getInt(0)))
-        .withColumn("bands", lit(p.getInt(1)))
-        .withColumn("shingle_size", lit(p.getInt(2)))
-        .withColumn("max_partners", lit(p.getInt(3))))
+      val newAnchors = hold(p.stamp(anchors))
       newAnchors.write.mode("append").parquet(s"$path/anchors")
       val batchKeys = newAnchors.select(col("__bkey")).distinct()
       val batchBuckets = batchKeys.count()
@@ -323,64 +331,37 @@ object Dedup {
     * the bounded `maxPartners` smallest — where the append chain
     * temporarily held a superset.
     *
-    * Write discipline: the folded table lands in a sibling directory
-    * first, then swaps in via TWO renames (live → `anchors.old`, new →
-    * live; each atomic on HDFS/local, emulated on object stores) — a
-    * probe can never see a HALF-WRITTEN table, and the no-table window
-    * is only the gap between the two metadata renames, not an
-    * O(files) delete. Compaction excludes concurrent WRITERS by the
-    * single-writer contract appends already carry; concurrent READERS
-    * are best-effort — a probe landing exactly in the rename gap fails
+    * Write discipline: the folded table lands in `path/.compacting`
+    * first, then swaps in via the IVF rebuild's TWO renames
+    * ([[IndexStats.swapIn]]: live → `anchors.old`, new → live; each
+    * atomic on HDFS/local, emulated on object stores) — a probe can
+    * never see a HALF-WRITTEN table, and the no-table window is only
+    * the gap between the two metadata renames, not an O(files) delete.
+    * Compaction excludes concurrent WRITERS by the single-writer
+    * contract appends already carry; concurrent READERS are
+    * best-effort — a probe landing exactly in the rename gap fails
     * cleanly ("holds no anchors") and retries. Crash recovery is
-    * documented at the swap site. Returns the compacted anchor-row
-    * count (== occupied buckets). */
+    * documented at [[IndexStats.swapIn]]. Returns the compacted
+    * anchor-row count (== occupied buckets). */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String): Long = {
     val stored = spark.read.parquet(s"$path/anchors")
-    val params = stored.select(col("num_hashes"), col("bands"),
-      col("shingle_size"), col("max_partners")).head(1)
-    require(params.nonEmpty,
+    val banding = IndexBanding.read(stored)
+    require(banding.nonEmpty,
       s"compactNearDupIndex: index at $path holds no anchors — nothing to compact")
-    val p = params(0)
-    val maxPartners = p.getInt(3)
+    val p = banding.get
     // explode the per-generation bounded sets back to members, drop
     // exact duplicates (the same id re-appended lands twice; the fresh
     // build would hold it once), re-fold bounded per bucket
-    val folded = TopK.bucketAnchors(stored
+    val folded = p.stamp(TopK.bucketAnchors(stored
       .select(col("__bkey"), explode(col("__anchors")).as("__a"))
       .select(col("__bkey"), col("__a").getField("id").as("__id"),
         col("__a").getField("sig").as("__sig"))
-      .distinct(), maxPartners)
-      .withColumn("num_hashes", lit(p.getInt(0)))
-      .withColumn("bands", lit(p.getInt(1)))
-      .withColumn("shingle_size", lit(p.getInt(2)))
-      .withColumn("max_partners", lit(maxPartners))
-    val tmp = s"$path/anchors.compacting"
-    folded.write.mode("overwrite").parquet(tmp)
-    val rows = spark.read.parquet(tmp).count()
-    // two-rename swap, never delete-then-rename (r13 verdict #3): the
-    // no-table window a concurrent probe could hit shrinks from an
-    // O(files) recursive delete to the gap between two metadata-only
-    // renames. Still NOT reader-serializable — a probe landing exactly
-    // in that gap fails with "no anchors"; compaction excludes
-    // concurrent WRITERS by contract and readers best-effort. CRASH
-    // RECOVERY: anchors.old + anchors.compacting with no live anchors
-    // → rename either back (old = roll back, compacting = roll
-    // forward); leftovers beside a healthy anchors table are post-swap
-    // residue, safe to delete.
-    val anchorsPath = new org.apache.hadoop.fs.Path(s"$path/anchors")
-    val oldPath = new org.apache.hadoop.fs.Path(s"$path/anchors.old")
-    val fs = anchorsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(oldPath, true) // stale aside from a crashed prior compaction
-    require(fs.rename(anchorsPath, oldPath),
-      s"compactNearDupIndex: rename $anchorsPath -> $oldPath failed — " +
-        "the live anchors are untouched; the compacted table stays at " +
-        s"$tmp")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), anchorsPath),
-      s"compactNearDupIndex: rename $tmp -> $anchorsPath failed — " +
-        s"recover by renaming $oldPath back (roll back) or $tmp in " +
-        "(roll forward)")
-    fs.delete(oldPath, true)
+      .distinct(), p.maxPartners))
+    val tmp = s"$path/.compacting"
+    folded.write.mode("overwrite").parquet(s"$tmp/anchors")
+    val rows = spark.read.parquet(s"$tmp/anchors").count()
+    IndexStats.swapIn(spark, path, tmp, Seq("anchors"))
     rows
   }
 

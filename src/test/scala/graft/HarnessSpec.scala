@@ -53,6 +53,16 @@ class HarnessSpec extends GraftSpec {
     assert(df.storageLevel == StorageLevel.NONE)
   }
 
+  test("Bench: one declaration per timed frame, every headline name resolves") {
+    // a certified query's operator call lives in SparkEntry.operators
+    // only; a bench variant is for what that map cannot state
+    assert(Bench.benchVariant.keySet.intersect(SparkEntry.operators.keySet).isEmpty)
+    assert(SparkEntry.operators.keySet.subsetOf(SparkEntry.queries.keySet))
+    val unresolved = Bench.headline.filter(n =>
+      scala.util.Try(Bench.frame(n)).isFailure)
+    assert(unresolved.isEmpty, unresolved)
+  }
+
   test("PlanDump: a query's plan text does not depend on what ran before it") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{array, col, transform}

@@ -453,7 +453,7 @@ class IndexAppendSpec extends GraftSpec {
       "doc_id", "text", threshold = 0.7)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(after == before, "compaction swap changed probe results")
-    assert(!exists(s"$nd/anchors.old") && !exists(s"$nd/anchors.compacting"),
+    assert(!exists(s"$nd/anchors.old") && !exists(s"$nd/.compacting"),
       "compaction left swap residue")
 
     // IVF rebuild (exercises IndexStats.swapIn per subdirectory)

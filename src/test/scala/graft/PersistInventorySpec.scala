@@ -38,7 +38,7 @@ class PersistInventorySpec extends AnyFunSuite {
     "src/main/scala/graft/ml/Ivf.scala" -> 1, // calibrated loop's materialized output
     "src/main/scala/graft/text/Bpe.scala" -> 2, // merge-loop vocab: initial + every 4th round
     "src/main/scala/graft/ml/Dedup.scala" -> 1, // CC loop truncation rounds
-    "src/main/scala/graft/SparkEntry.scala" -> 1) // synthetic media frame of the multimodal entry
+    "src/main/scala/graft/SparkEntry.scala" -> 2) // q_multimodal's media, q_audio_dedup's fingerprints
 
   private def inventoried(needle: String, expected: Map[String, Int]): Unit = {
     val actual = sites(needle)
