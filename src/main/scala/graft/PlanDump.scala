@@ -12,18 +12,24 @@ package graft
   * env `SPARK_GRAFT_SF_DIR` as in Bench, the session from `Harness`.
   * Export entries (Unit actions) have no single plan; x_zorder_write's
   * layout frame is captured via its zOrderBy stage explicitly. A file
-  * depends only on its query's plan, not on what ran before it
-  * ([[renumbered]]). */
+  * depends only on its query's plan, not on what ran before it or on
+  * which source line built its frame ([[renumbered]]). */
 object PlanDump {
   /** `plan` with its run-dependent numbers renumbered 0, 1, … in
     * first-seen order, one sequence each: expression ids (`#<n>`),
     * exchange ids (`plan_id=<n>`), lambda-variable suffixes
-    * (`lambda x_<n>`) and the JVM's closure class names, which carry
+    * (`lambda x_<n>`), the JVM's closure class names, which carry
     * a load-order number, an address and an identity hash (a
-    * `mapPartitions` body prints as one). */
+    * `mapPartitions` body prints as one), the identity hash of an array
+    * literal (a PQ codebook prints as `[D@<hex>`), and, in the scan of
+    * a frame built from an RDD, the RDD id (`MapPartitionsRDD[<n>]`)
+    * and the call site's source line (`Dedup.scala:<n>`), which move
+    * with the session's RDD count and with unrelated edits to that
+    * file. */
   private[graft] def renumbered(plan: String): String =
     Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(lambda [a-z]+_)(\d+)""",
-        """(\$Lambda)(\$\d+/0x\p{XDigit}+@\p{XDigit}+)""")
+        """(\$Lambda)(\$\d+/0x\p{XDigit}+@\p{XDigit}+)""", """(\[[BCDFIJSZ]@)(\p{XDigit}+)""",
+        """(RDD\[)(\d+)""", """(\.scala:)(\d+)""")
       .foldLeft(plan) { (text, pattern) =>
         val seen = scala.collection.mutable.Map.empty[String, Int]
         pattern.r.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(

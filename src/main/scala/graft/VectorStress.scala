@@ -62,9 +62,9 @@ object VectorStress {
     def ivf(nProbe: Int = 0) = Similarity.ivfTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding",
       k = 10, nProbe = nProbe)
-    def ivfPq(residual: Boolean) = Pq.ivfPqTopK(
+    def ivfPq() = Pq.ivfPqTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-      k = 10, m = 16, pqK = 64, rerank = 50, residual = residual)
+      k = 10, m = 16, pqK = 64, rerank = 50)
     def timed(arm: => DataFrame): (Double, Long) =
       Harness.trial(spark)(arm.count()) // count forces the full plan
 
@@ -126,22 +126,13 @@ object VectorStress {
       val calProbe = if (calRows.nonEmpty) calRows.head.getInt(3) else -1
       val calSampled = if (calRows.nonEmpty) calRows.head.getDouble(2) else -1.0
 
-      // RAW-codebook arm (r13 semantics, residual=false): the structural
-      // baseline the r14 residual default is measured against on the
-      // exact fixture that exposed it (default recall 0.354 vs the IVF
-      // candidate-set ceiling 0.408 at the same autoNProbe)
-      drain("ann_ivf_pq_raw")
-      val (tPqRaw, _) = timed(ivfPq(residual = false))
-      val rPqRaw = recallOfArm(ivfPq(residual = false))
-
-      // r14 DEFAULT arm: residual (IVFADC) codes. Probe loss bounds this
+      // IVF-PQ arm: residual (IVFADC) codes. Probe loss bounds this
       // from above at the plain-IVF reading (same candidates, same
       // nProbe); the residual claim is that ADC misranking inside the
-      // candidate set — the raw arm's gap below the IVF ceiling —
-      // closes.
+      // candidate set closes
       drain("ann_ivf_pq")
-      val (tPq, _) = timed(ivfPq(residual = true))
-      val rPq = recallOfArm(ivfPq(residual = true))
+      val (tPq, _) = timed(ivfPq())
+      val rPq = recallOfArm(ivfPq())
 
       // CALIBRATED PQ arm (r13): the two-knob answer to the 0.354
       // default reading — ivfPqTopKCalibrated escalates nProbe ×2 while
@@ -183,7 +174,6 @@ object VectorStress {
       // so a real default-path decay fails the run instead of only
       // recording decay in the sweep JSON
       require(rIvf >= 0.35, f"IVF default-path recall regressed at n=$n: $rIvf%.3f (measured 0.408)")
-      require(rPqRaw >= 0.3, f"raw-codebook IVF-PQ recall regressed at n=$n: $rPqRaw%.3f (measured 0.354)")
       // the residual default must sit at (or within tie-noise of) the
       // plain-IVF candidate ceiling at the same geometry — the IVFADC
       // structural claim this fixture was built to test
@@ -200,9 +190,9 @@ object VectorStress {
           f"(sampled $pqCalSampled%.3f, nProbe=$pqCalProbe, rerank=$pqCalRerank)")
 
       f"""{"metric":"vector_stress","corpus":$n,"queries":$nQueries,"k":10,""" +
-        f""""arms":{"ann_brute":$tBrute%.3f,"ann_ivf":$tIvf%.3f,"ann_ivf_cal":$tCal%.3f,"ann_ivf_pq_raw":$tPqRaw%.3f,"ann_ivf_pq":$tPq%.3f,"ann_ivf_pq_cal":$tPqCal%.3f,""" +
+        f""""arms":{"ann_brute":$tBrute%.3f,"ann_ivf":$tIvf%.3f,"ann_ivf_cal":$tCal%.3f,"ann_ivf_pq":$tPq%.3f,"ann_ivf_pq_cal":$tPqCal%.3f,""" +
         f""""embed_dedup":$tEmbDedup%.3f,"semantic_dedup":$tSem%.3f},""" +
-        f""""recall":{"ivf":$rIvf%.3f,"ivf_2x_probe":$rIvf2%.3f,"ivf_4x_probe":$rIvf4%.3f,"ivf_cal":$rCal%.3f,"ivf_cal_sampled":$calSampled%.3f,"ivf_pq_raw":$rPqRaw%.3f,"ivf_pq":$rPq%.3f,"ivf_pq_cal":$rPqCal%.3f,"ivf_pq_cal_sampled":$pqCalSampled%.3f},""" +
+        f""""recall":{"ivf":$rIvf%.3f,"ivf_2x_probe":$rIvf2%.3f,"ivf_4x_probe":$rIvf4%.3f,"ivf_cal":$rCal%.3f,"ivf_cal_sampled":$calSampled%.3f,"ivf_pq":$rPq%.3f,"ivf_pq_cal":$rPqCal%.3f,"ivf_pq_cal_sampled":$pqCalSampled%.3f},""" +
         f""""geometry":{"auto_nlists":$autoLists,"auto_nprobe":$autoProbe,"cal_nprobe":$calProbe,"pq_cal_nprobe":$pqCalProbe,"pq_cal_rerank":$pqCalRerank},""" +
         f""""keeps":{"embed_dedup":$keepEmb,"semantic_dedup":$keepSem},"""
     }

@@ -970,6 +970,62 @@ object Dedup {
   // embedding-cosine near-dup
   // -------------------------------------------------------------------
 
+  /** Smallest nBits putting ≤ `targetBucketRows` vectors in a mean
+    * LSH bucket: `max(4, ceil(log2(corpus / targetBucketRows)))` —
+    * the floor keeps some spatial selectivity on tiny corpora. Pinned
+    * by ReadersExtensionsSpec "autoNBits sizing formula". */
+  private[graft] def autoNBits(corpus: Long, targetBucketRows: Long): Int = {
+    require(targetBucketRows > 0, s"targetBucketRows must be positive: $targetBucketRows")
+    val buckets = math.max(1L, (corpus + targetBucketRows - 1) / targetBucketRows)
+    val bits =
+      if (buckets <= 1) 0
+      else 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)
+    math.max(4, bits)
+  }
+
+  /** Auto-band cap: 256 bands at targetBucketRows=125 is 32k cosine
+    * ops/row — past it the geometry is LSH-hostile (low threshold ×
+    * wide bucket space) and silently paying more would be the wrong
+    * default; the sizing raises instead (explicit `bands` overrides). */
+  private[graft] val MaxAutoBands = 256
+
+  /** Smallest band count holding the banded-LSH miss bound: a pair at
+    * exactly `threshold` cosine collides in one band with prob
+    * p^nBits, p = 1 - acos(threshold)/π, and escapes ALL bands with
+    * prob (1-p^nBits)^bands — so bands = ⌈ln(missBound)/ln(1-p^nBits)⌉
+    * pins per-pair miss ≤ missBound at the threshold (pairs above it
+    * do strictly better: p rises with cosine). Floor 4 keeps OR
+    * amplification non-degenerate on tiny spaces; over [[MaxAutoBands]]
+    * raises with the geometry spelled out, the same plan-time-error
+    * philosophy as the bucketBudget guard. threshold = 1.0 (exact-
+    * direction dedup) is valid: every qualifying pair collides in
+    * every band, so the floor count alone holds any bound. Pinned by
+    * SelfSizingDefaultsSpec "autoBands recall formula". Shared by
+    * [[embeddingDedup]] and [[Similarity.lshNeighborPairs]]. */
+  private[graft] def autoBands(threshold: Double, nBits: Int,
+                               missBound: Double = 1e-3): Int = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"autoBands needs a cosine threshold in (0,1]: $threshold")
+    require(missBound > 0.0 && missBound < 1.0,
+      s"missBound must be in (0,1): $missBound")
+    val p = 1.0 - math.acos(threshold) / math.Pi
+    val pBand = math.pow(p, nBits.toDouble) // one-band collision prob
+    val escape = 1.0 - pBand                // one-band miss prob
+    val raw =
+      if (escape <= 0.0) 1 // p^nBits == 1 within double: one band suffices
+      else math.ceil(math.log(missBound) / math.log(escape)).toInt
+    val b = math.max(4, raw)
+    if (b > MaxAutoBands)
+      throw new IllegalArgumentException(
+        f"autoBands: holding miss<=$missBound%g at threshold=$threshold " +
+          f"with nBits=$nBits needs $b bands (> $MaxAutoBands cap) — " +
+          f"one-band collision prob p^nBits=$pBand%.3g is too small for OR " +
+          "amplification to rescue cheaply. Lower nBits (denser buckets, " +
+          "e.g. via a larger rows-per-bucket target), raise missBound, " +
+          "or pass explicit bands to accept the cost.")
+    b
+  }
+
   /** Embedding-cosine near-dedup: drop every row whose vector is
     * ≥ `threshold` cosine-similar to a LOWER-id row (greedy min-id, the
     * same first-pass contract as [[minhashDedup]]). Candidates come
@@ -1031,62 +1087,6 @@ object Dedup {
     * with the auto-sizing count); pass `bucketBudget = 0` to skip it
     * when the caller has already sized the corpus (e.g. re-running a
     * known-good configuration). */
-  /** Smallest nBits putting ≤ `targetBucketRows` vectors in a mean
-    * LSH bucket: `max(4, ceil(log2(corpus / targetBucketRows)))` —
-    * the floor keeps some spatial selectivity on tiny corpora. Pinned
-    * by ReadersExtensionsSpec "autoNBits sizing formula". */
-  private[graft] def autoNBits(corpus: Long, targetBucketRows: Long): Int = {
-    require(targetBucketRows > 0, s"targetBucketRows must be positive: $targetBucketRows")
-    val buckets = math.max(1L, (corpus + targetBucketRows - 1) / targetBucketRows)
-    val bits =
-      if (buckets <= 1) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)
-    math.max(4, bits)
-  }
-
-  /** Auto-band cap: 256 bands at targetBucketRows=125 is 32k cosine
-    * ops/row — past it the geometry is LSH-hostile (low threshold ×
-    * wide bucket space) and silently paying more would be the wrong
-    * default; the sizing raises instead (explicit `bands` overrides). */
-  private[graft] val MaxAutoBands = 256
-
-  /** Smallest band count holding the banded-LSH miss bound: a pair at
-    * exactly `threshold` cosine collides in one band with prob
-    * p^nBits, p = 1 - acos(threshold)/π, and escapes ALL bands with
-    * prob (1-p^nBits)^bands — so bands = ⌈ln(missBound)/ln(1-p^nBits)⌉
-    * pins per-pair miss ≤ missBound at the threshold (pairs above it
-    * do strictly better: p rises with cosine). Floor 4 keeps OR
-    * amplification non-degenerate on tiny spaces; over [[MaxAutoBands]]
-    * raises with the geometry spelled out, the same plan-time-error
-    * philosophy as the bucketBudget guard. threshold = 1.0 (exact-
-    * direction dedup) is valid: every qualifying pair collides in
-    * every band, so the floor count alone holds any bound. Pinned by
-    * SelfSizingDefaultsSpec "autoBands recall formula". Shared by
-    * [[embeddingDedup]] and [[Similarity.lshNeighborPairs]]. */
-  private[graft] def autoBands(threshold: Double, nBits: Int,
-                               missBound: Double = 1e-3): Int = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"autoBands needs a cosine threshold in (0,1]: $threshold")
-    require(missBound > 0.0 && missBound < 1.0,
-      s"missBound must be in (0,1): $missBound")
-    val p = 1.0 - math.acos(threshold) / math.Pi
-    val pBand = math.pow(p, nBits.toDouble) // one-band collision prob
-    val escape = 1.0 - pBand                // one-band miss prob
-    val raw =
-      if (escape <= 0.0) 1 // p^nBits == 1 within double: one band suffices
-      else math.ceil(math.log(missBound) / math.log(escape)).toInt
-    val b = math.max(4, raw)
-    if (b > MaxAutoBands)
-      throw new IllegalArgumentException(
-        f"autoBands: holding miss<=$missBound%g at threshold=$threshold " +
-          f"with nBits=$nBits needs $b bands (> $MaxAutoBands cap) — " +
-          f"one-band collision prob p^nBits=$pBand%.3g is too small for OR " +
-          "amplification to rescue cheaply. Lower nBits (denser buckets, " +
-          "e.g. via a larger rows-per-bucket target), raise missBound, " +
-          "or pass explicit bands to accept the cost.")
-    b
-  }
-
   def embeddingDedup(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double = 0.95, nBits: Int = 0,
                      bands: Int = 0, seed: Long = 42L,

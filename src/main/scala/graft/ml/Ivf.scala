@@ -32,6 +32,8 @@ private[ml] object Ivf {
     def score: Column
     /** The frozen geometry an append must match: (dim, element type). */
     def frozen(spark: SparkSession, path: String): (Option[Int], Option[DataType])
+    /** The entry point that rebuilds (and converts) this kind of index. */
+    def rebuiltBy: String
   }
 
   /** Exact cosine over the stored vectors. */
@@ -52,14 +54,16 @@ private[ml] object Ivf {
         .headOption.map(_.getInt(0)),
         spark.read.parquet(s"$path/lists").schema.map(_.dataType)
           .collectFirst { case ArrayType(et, _) => et })
+    def rebuiltBy: String = "rebuildIvfIndex"
   }
 
-  /** Asymmetric-distance scoring over stored PQ codes and exact norms
-    * (raw or residual codebook — [[Pq.PqModel.residual]]). */
+  /** Asymmetric-distance scoring over stored residual (IVFADC) PQ codes
+    * and exact norms: a code decodes against the centroid of the list
+    * it was assigned under ([[Pq.trainResidual]]). */
   final case class Adc(model: Pq.PqModel) extends Scorer {
     def layout(assigned: DataFrame, idCol: String, vecCol: String,
                cents: DataFrame): DataFrame =
-      Pq.encodeFor(assigned, vecCol, model, cents)
+      Pq.encodeResidual(assigned, vecCol, model, cents)
         .select(col(idCol), col("pq_codes"), col("pq_norm"), col("list_id"))
     def isPayload(f: StructField): Boolean =
       f.name == "pq_codes" || f.name == "pq_norm"
@@ -69,12 +73,13 @@ private[ml] object Ivf {
         .filter(col("__c").isNotNull)
     def querySide(q: DataFrame): DataFrame = Pq.adcQuerySide(q, model)
     // `__qc` = ⟨q, c_list⟩, recovered in rank() from the ranking cosine
-    // × both norms, is the residual-mode ADC offset
+    // × both norms, is the residual ADC offset
     def probeCols: Seq[String] = Seq("query_id", "__table", "__qn", "__qc", "list_id")
-    def score: Column = Pq.adcCos(model.k, model.residual)
+    def score: Column = Pq.adcCos(model.k, residual = true)
     // codes, not vectors: only the codebook's dim is frozen
     def frozen(spark: SparkSession, path: String): (Option[Int], Option[DataType]) =
       (Some(model.dim), None)
+    def rebuiltBy: String = "rebuildIvfPqIndex"
   }
 
   /** Trains a scorer from (assigned corpus, centroids). `readsAssignment`:
@@ -86,10 +91,10 @@ private[ml] object Ivf {
   /** (list count, localized centroid table); `nLists <= 0` self-sizes
     * via [[Similarity.autoNLists]] (one count). */
   def centroids(corpus: DataFrame, idCol: String, vecCol: String, nLists: Int,
-                refineIters: Int, seed: Long, initMethod: String): (Int, DataFrame) = {
+                refineIters: Int, seed: Long): (Int, DataFrame) = {
     val lists = if (nLists > 0) nLists else Similarity.autoNLists(corpus.count())
     (lists, localize(Similarity.centroids(corpus, idCol, vecCol, lists, refineIters,
-      seed, initMethod))._1)
+      seed))._1)
   }
 
   private def queryFrame(queries: DataFrame, qidCol: String, qvecCol: String) =
@@ -142,11 +147,10 @@ private[ml] object Ivf {
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
            queries: DataFrame, qidCol: String, qvecCol: String,
            k: Int, nLists: Int, nProbe: Int, rerank: Int,
-           refineIters: Int, seed: Long, initMethod: String, fit: Fit,
+           refineIters: Int, seed: Long, fit: Fit,
            queryBudget: Long, caller: String): DataFrame = {
     Similarity.guardQueryBroadcast(queries, qvecCol, queryBudget, caller)
-    val (lists, cents) = centroids(corpus, idCol, vecCol, nLists, refineIters, seed,
-      initMethod)
+    val (lists, cents) = centroids(corpus, idCol, vecCol, nLists, refineIters, seed)
     val probes = if (nProbe > 0) nProbe else Similarity.autoNProbe(lists)
     val assigned = Similarity.assignLists(corpus, idCol, vecCol, cents)
     val scorer =
@@ -174,15 +178,13 @@ private[ml] object Ivf {
                  k: Int, targetRecall: Double, sampleQueries: Int,
                  nLists: Int, nProbe: Int, maxProbeFactor: Int,
                  rerank: Option[(Int, Int)], refineIters: Int, seed: Long,
-                 initMethod: String, fit: Fit,
-                 queryBudget: Long, caller: String): DataFrame = {
+                 fit: Fit, queryBudget: Long, caller: String): DataFrame = {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall must be in (0,1]: $targetRecall")
     require(sampleQueries >= 1, s"sampleQueries must be >= 1: $sampleQueries")
     require(maxProbeFactor >= 1, s"maxProbeFactor must be >= 1: $maxProbeFactor")
     Similarity.guardQueryBroadcast(queries, qvecCol, queryBudget, caller)
-    val (lists, cents) = centroids(corpus, idCol, vecCol, nLists, refineIters, seed,
-      initMethod)
+    val (lists, cents) = centroids(corpus, idCol, vecCol, nLists, refineIters, seed)
     val startProbe = if (nProbe > 0) nProbe else Similarity.autoNProbe(lists)
     val probeCap = math.min(lists.toLong, startProbe.toLong * maxProbeFactor).toInt
     val (startRerank, rerankCap) = rerank.getOrElse((0, 0))
@@ -249,9 +251,9 @@ private[ml] object Ivf {
     * the generation-0 drift baseline — observed on the job that first
     * materializes the assignment, so the stats cost no extra pass. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, path: String,
-            nLists: Int, refineIters: Int, seed: Long, initMethod: String,
+            nLists: Int, refineIters: Int, seed: Long,
             fit: Fit, obsName: String): Unit = {
-    val (_, cents) = centroids(corpus, idCol, vecCol, nLists, refineIters, seed, initMethod)
+    val (_, cents) = centroids(corpus, idCol, vecCol, nLists, refineIters, seed)
     val (assigned, obs) = IndexStats.observed(Similarity.assignListsWithSim(
       corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cents), obsName)
     holding { hold =>
@@ -269,14 +271,16 @@ private[ml] object Ivf {
   }
 
   /** Append a batch under the index's FROZEN centroids (and codebook),
-    * validated against the frozen geometry first: delta files land in
-    * each `list_id=` directory, nothing is rewritten, pruning holds. The
-    * batch's mean D² against the build baseline is the returned drift. */
+    * validated against the frozen geometry and the drift series first:
+    * delta files land in each `list_id=` directory, nothing is
+    * rewritten, pruning holds. The batch's mean D² against the build
+    * baseline is the returned drift. */
   def append(batch: DataFrame, idCol: String, vecCol: String, path: String,
              scorer: Scorer, obsName: String, caller: String): IndexAppendStats = {
     val spark = batch.sparkSession
     val (dim, elem) = scorer.frozen(spark, path)
     IndexStats.validateBatch(batch, vecCol, dim, elem, caller)
+    IndexStats.requireSeries(spark, path, scorer.rebuiltBy, caller)
     val cents = spark.read.parquet(s"$path/centroids")
     val (assigned, obs) = IndexStats.observed(Similarity.assignListsWithSim(
       batch.select(col(idCol), col(vecCol)), idCol, vecCol, cents), obsName)
@@ -325,8 +329,8 @@ private[ml] object Ivf {
   * [[Pq.appendToIvfPqIndex]]): how far the new batch sits from the
   * index's FROZEN centroids, relative to what the training data
   * measured at build time. `drift > 1.5` is the documented rebuild
-  * threshold; NaN means the index predates drift tracking (no `stats`
-  * table — rebuild once to start the series). */
+  * threshold; NaN means one side has no non-null vector to measure
+  * (an all-null batch, or a build over no non-null vectors). */
 case class IndexAppendStats(appendedRows: Long, batchMeanD2: Double,
                             baseMeanD2: Double, drift: Double,
                             generation: Long) {
@@ -417,6 +421,18 @@ private[ml] object IndexStats {
     }
   }
 
+  /** Fail-fast format contract: an index without a `stats` table was
+    * built before drift tracking, so an append would have no baseline.
+    * Refused before any delta file lands; `rebuiltBy` starts the
+    * series (and converts the index). */
+  def requireSeries(spark: SparkSession, path: String, rebuiltBy: String,
+                    caller: String): Unit = {
+    val stats = new Path(s"$path/stats")
+    require(stats.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(stats),
+      s"$caller: the index at $path has no stats table (built before drift tracking) " +
+        s"— rebuild it once with $rebuiltBy, which starts the drift series")
+  }
+
   /** Ride (rows, meanD2) on the index WRITE job itself via
     * `Dataset.observe` — no extra assignment scan for statistics. Null
     * sims (null vectors) sit out the mean but count as rows. Read with
@@ -444,24 +460,15 @@ private[ml] object IndexStats {
       .write.mode(if (overwrite) "overwrite" else "append").parquet(s"$path/stats")
   }
 
-  /** Read the stored series, append this batch's generation, and
-    * report drift vs the BUILD generation (0). Missing stats table
-    * (pre-r12 index): the append still lands, drift reads NaN, and a
-    * stderr line says how to start the series. */
+  /** Read the stored series ([[requireSeries]] has checked that it
+    * exists), append this batch's generation, and report drift vs the
+    * BUILD generation (0). */
   def appendAndReport(spark: SparkSession, path: String,
                       batch: (Long, Double), caller: String): IndexAppendStats = {
-    val stored = try {
-      spark.read.parquet(s"$path/stats").select(col("generation"), col("mean_d2")).collect()
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        System.err.println(s"[graft] $caller: index at $path has no stats " +
-          "table (built pre-drift-tracking) — appending without a drift " +
-          "baseline; rebuild once to start the series")
-        Array.empty[Row]
-    }
+    val stored = spark.read.parquet(s"$path/stats").select(col("generation"), col("mean_d2")).collect()
     val base = stored.find(_.getLong(0) == 0L).map(_.getDouble(1)).getOrElse(Double.NaN)
-    val gen = if (stored.isEmpty) 1L else stored.map(_.getLong(0)).max + 1L
-    write(spark, path, gen, batch, overwrite = false) // creates stats if absent
+    val gen = stored.map(_.getLong(0)).max + 1L
+    write(spark, path, gen, batch, overwrite = false)
     val drift = batch._2 / base
     val out = IndexAppendStats(batch._1, batch._2, base, drift, gen)
     if (out.rebuildRecommended)

@@ -24,6 +24,14 @@ import graft.functions.PqKernels
   *  - [[adcTopK]] / [[ivfPqTopK]]: per-query m×k table once, then
   *    lookups folded into the bounded [[TopK]] partial aggregate.
   *
+  * The flat API ([[train]], [[encode]], [[adcTopK]]) quantizes raw
+  * vectors. Every IVF-PQ entry point quantizes list RESIDUALS
+  * (IVFADC, [[trainResidual]]), the one IVF-PQ recipe: at ×64 it
+  * reads recall 0.362 against raw codes' 0.354, in 17.9–20.6 s
+  * against 24.3–26.1 s (`sweeps/r15_stress_x64_aba.json`). An index
+  * holding a raw-codebook model is refused; [[rebuildIvfPqIndex]]
+  * converts it.
+  *
   * Cosine scores are approximate by construction (recall/precision
   * spec-pinned, like IVF); exactness-critical paths should re-rank
   * (`rerank` > 0) or use the exact kernels. */
@@ -167,13 +175,6 @@ object Pq {
       .drop("cvec")
   }
 
-  /** [[encode]] or [[encodeResidual]] by the model's own flag — the
-    * one switch every IVF-PQ build/probe path routes through. */
-  private[ml] def encodeFor(assigned: DataFrame, vecCol: String, model: PqModel,
-                            cents: DataFrame): DataFrame =
-    if (model.residual) encodeResidual(assigned, vecCol, model, cents)
-    else encode(assigned, vecCol, model)
-
   /** Query side of an ADC probe over a (query_id, __q) frame: per-query
     * m×k lookup table + EXACT query norm (the only approximation stays
     * in the corpus codes). */
@@ -219,22 +220,25 @@ object Pq {
     TopK.perQuery(scored, k)
   }
 
-  /** Read a stored model row back into a [[PqModel]]. Pre-r14 indexes
-    * have no `residual` column — they were built raw, so absence reads
-    * false (the versioning contract that lets one probe path serve
-    * both formats). */
-  private def readModel(spark: org.apache.spark.sql.SparkSession,
-                        path: String): PqModel = {
+  /** Read a stored model row back into a residual [[PqModel]]. A
+    * raw-codebook row (no `residual` column, as written before residual
+    * codes, or `residual = false`) is refused before anything reads or
+    * writes the lists; [[rebuildIvfPqIndex]] converts it. */
+  private def readModel(spark: org.apache.spark.sql.SparkSession, path: String,
+                        caller: String): PqModel = {
     val df = spark.read.parquet(s"$path/model")
     val mrow = df.collect()(0)
+    require(df.columns.contains("residual") && mrow.getAs[Boolean]("residual"),
+      s"$caller: the index at $path stores a raw-codebook model — only " +
+        "residual (IVFADC) indexes are served; rebuild it once with " +
+        "rebuildIvfPqIndex(corpus, idCol, vecCol, path), which keeps m and k")
     PqModel(mrow.getAs[Int]("m"), mrow.getAs[Int]("k"),
       mrow.getAs[Int]("sub_dim"), mrow.getAs[Seq[Double]]("codebook").toArray,
-      residual = df.schema.fieldNames.contains("residual") &&
-        mrow.getAs[Boolean]("residual"))
+      residual = true)
   }
 
-  /** One model row; `residual` is VERSIONED into it, so raw and residual
-    * indexes coexist and one probe path serves both. */
+  /** One model row; `residual` is versioned into it, so a raw-codebook
+    * row written by an older build is recognized and refused. */
   private[ml] def writeModel(spark: org.apache.spark.sql.SparkSession, model: PqModel,
                              path: String): Unit = {
     import spark.implicits._
@@ -243,27 +247,24 @@ object Pq {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** The IVF lifecycle's ADC scorer trainer: a residual codebook trains
-    * on the shared assignment (one bestCosine pass serves training AND
-    * the encode), a raw one on the corpus itself. */
-  private def adcFit(corpus: DataFrame, idCol: String, vecCol: String, m: Int,
-                     pqK: Int, iters: Int, seed: Long, residual: Boolean): Ivf.Fit =
-    Ivf.Fit(residual, (assigned, cents) => Ivf.Adc(
-      if (residual) trainResidualAssigned(assigned, idCol, vecCol, cents, m, pqK, iters, seed)
-      else train(corpus, idCol, vecCol, m, pqK, iters, seed)))
+  /** The IVF lifecycle's ADC scorer trainer: the residual codebook
+    * trains on the shared assignment (one bestCosine pass serves
+    * training AND the encode). */
+  private def adcFit(idCol: String, vecCol: String, m: Int, pqK: Int, iters: Int,
+                     seed: Long): Ivf.Fit =
+    Ivf.Fit(readsAssignment = true, (assigned, cents) => Ivf.Adc(
+      trainResidualAssigned(assigned, idCol, vecCol, cents, m, pqK, iters, seed)))
 
   /** Persist an IVF-PQ index: the model row (codebook + geometry, read
     * back at probe time so build and probe cannot desync), IVF
     * centroids, and the encoded corpus partitioned by list id — m-byte
-    * codes + norm per row, never vectors (exact re-rank joins back to
-    * the source-of-truth table). `residual = true` (default) stores
-    * IVFADC codes ([[trainResidual]]). */
+    * IVFADC codes ([[trainResidual]]) + norm per row, never vectors
+    * (exact re-rank joins back to the source-of-truth table). */
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                       path: String, m: Int = 16, pqK: Int = 256,
-                      nLists: Int = 0, iters: Int = 2,
-                      seed: Long = 42L, residual: Boolean = true): Unit =
-    Ivf.build(corpus, idCol, vecCol, path, nLists, refineIters = 1, seed, "kmeans++",
-      adcFit(corpus, idCol, vecCol, m, pqK, iters, seed, residual), "graft_ivfpq_build")
+                      nLists: Int = 0, iters: Int = 2, seed: Long = 42L): Unit =
+    Ivf.build(corpus, idCol, vecCol, path, nLists, refineIters = 1, seed,
+      adcFit(idCol, vecCol, m, pqK, iters, seed), "graft_ivfpq_build")
 
   /** Append a batch to a persisted [[buildIvfPqIndex]] index without
     * retraining: encoded under the FROZEN stored codebook and assigned
@@ -274,22 +275,25 @@ object Pq {
     * distribution), so the one statistic covers the whole index. */
   def appendToIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
                          path: String): graft.ml.IndexAppendStats =
-    Ivf.append(batch, idCol, vecCol, path, Ivf.Adc(readModel(batch.sparkSession, path)),
+    Ivf.append(batch, idCol, vecCol, path,
+      Ivf.Adc(readModel(batch.sparkSession, path, "appendToIvfPqIndex")),
       "graft_ivfpq_append", "appendToIvfPqIndex")
 
   /** Rebuild a persisted [[buildIvfPqIndex]] index — the action its
     * drift signal ([[graft.ml.IndexAppendStats.rebuildRecommended]])
     * points at. UNLIKE the IVF rebuild it needs the vector SOURCE OF
     * TRUTH handed back in (the index stores codes, never vectors).
-    * Geometry (m, pqK, residual) is read from the STORED model, so a
-    * rebuild cannot silently change the compression contract;
-    * `nLists <= 0` re-derives √N from the rebuild corpus. */
+    * Geometry (m, pqK) is read from the STORED model, so a rebuild
+    * cannot silently change the compression contract; `nLists <= 0`
+    * re-derives √N from the rebuild corpus. The rebuilt index is
+    * residual with a fresh drift series, so this is also the
+    * conversion for a raw-codebook or stats-less index. */
   def rebuildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                         path: String, nLists: Int = 0, iters: Int = 2,
                         seed: Long = 42L): Unit = {
-    val stored = readModel(corpus.sparkSession, path)
+    val stored = corpus.sparkSession.read.parquet(s"$path/model").select("m", "k").head()
     Ivf.rebuild(corpus.sparkSession, path)(tmp => buildIvfPqIndex(corpus, idCol,
-      vecCol, tmp, stored.m, stored.k, nLists, iters, seed, stored.residual))
+      vecCol, tmp, stored.getInt(0), stored.getInt(1), nLists, iters, seed))
   }
 
   /** Probe a persisted IVF-PQ index: rank lists against the tiny
@@ -310,7 +314,7 @@ object Pq {
         "rerankVecCol (the index stores codes, not vectors)")
     Ivf.indexed(spark, path, queries, qidCol, qvecCol, k, nProbe, rerank,
       rerankFrom.select(col(rerankIdCol).as("nn_id"), col(rerankVecCol).as("__v")),
-      Ivf.Adc(readModel(spark, path)), queryBudget, "ivfPqTopKIndexed")
+      Ivf.Adc(readModel(spark, path, "ivfPqTopKIndexed")), queryBudget, "ivfPqTopKIndexed")
   }
 
   /** IVF-PQ with optional exact re-rank: IVF centroids bound WHICH
@@ -319,20 +323,18 @@ object Pq {
     * top-`rerank` ADC survivors with exact cosine against the true
     * vectors (a queries×rerank-row join back). rerank ≥ k restores
     * bruteForce ordering whenever ADC's top-rerank holds the true top-k.
-    * `residual = true` (default) is IVFADC proper ([[trainResidual]]):
-    * same probe cost — one per-query table serves every list, plus one
-    * ⟨q, c⟩ offset per probe row. The residual assignment persist is
-    * LRU-released ([[Ivf.topK]]). */
+    * Codes are IVFADC residuals ([[trainResidual]]): one per-query table
+    * serves every list, plus one ⟨q, c⟩ offset per probe row. The
+    * residual assignment persist is LRU-released ([[Ivf.topK]]). */
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
                 queries: DataFrame, qidCol: String, qvecCol: String,
                 k: Int = 10, m: Int = 8, pqK: Int = 256,
                 nLists: Int = 0, nProbe: Int = 0,
-                iters: Int = 2, seed: Long = 42L,
-                rerank: Int = 0, residual: Boolean = true,
+                iters: Int = 2, seed: Long = 42L, rerank: Int = 0,
                 queryBudget: Long = Similarity.DefaultQueryBudget): DataFrame =
     Ivf.topK(corpus, idCol, vecCol, queries, qidCol, qvecCol, k, nLists, nProbe,
-      rerank, refineIters = 1, seed, "kmeans++",
-      adcFit(corpus, idCol, vecCol, m, pqK, iters, seed, residual), queryBudget, "ivfPqTopK")
+      rerank, refineIters = 1, seed, adcFit(idCol, vecCol, m, pqK, iters, seed),
+      queryBudget, "ivfPqTopK")
 
   /** IVF-PQ with RUNTIME recall calibration — the two-knob counterpart
     * of [[Similarity.ivfTopKCalibrated]]. PQ stacks TWO recall losses:
@@ -353,15 +355,13 @@ object Pq {
                           nLists: Int = 0, nProbe: Int = 0, rerank: Int = 0,
                           maxProbeFactor: Int = 16, maxRerankFactor: Int = 16,
                           iters: Int = 2, seed: Long = 42L,
-                          residual: Boolean = true,
                           queryBudget: Long = Similarity.DefaultQueryBudget): DataFrame = {
     require(maxRerankFactor >= 1, s"maxRerankFactor must be >= 1: $maxRerankFactor")
     val startRerank = if (rerank > 0) rerank else 4 * k
     Ivf.calibrated(corpus, idCol, vecCol, queries, qidCol, qvecCol, k,
       targetRecall, sampleQueries, nLists, nProbe, maxProbeFactor,
       Some((startRerank, (startRerank.toLong * maxRerankFactor).min(Int.MaxValue).toInt)),
-      refineIters = 1, seed, "kmeans++",
-      adcFit(corpus, idCol, vecCol, m, pqK, iters, seed, residual), queryBudget,
+      refineIters = 1, seed, adcFit(idCol, vecCol, m, pqK, iters, seed), queryBudget,
       "ivfPqTopKCalibrated")
   }
 }

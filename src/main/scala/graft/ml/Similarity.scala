@@ -98,33 +98,23 @@ object Similarity {
     * candidate) — the kmeans++ bias that spreads seeds across the
     * data's actual clusters, where a first-n-by-id seed can land every
     * centroid inside one dense cluster and strand the rest of the
-    * space on a single list (recall collapses at fixed nProbe; the
-    * adversarial spec pins the difference). The "random" draw is a
-    * per-(round, id) hash, so the sample is deterministic and
-    * content-stable — same corpus, same seeds, any partitioning.
+    * space on a single list (recall collapses at fixed nProbe; an
+    * adversarially id-ordered spec pins recall and list balance). The
+    * "random" draw is a per-(round, id) hash, so the sample is
+    * deterministic and content-stable — same corpus, same seeds, any
+    * partitioning.
     * Each round is map-only D² scoring vs broadcast candidates read by
     * two actions — a scalar D² total and a ≤~2·nLists-row draw — which
     * under AQE run as 7 Spark jobs (4 for the total, 3 for the draw);
     * no hash shuffle of the corpus anywhere in seeding. The candidate
     * set (≤ 1 + rounds·2·nLists rows) is then weighted by cluster
     * population and reduced to nLists seeds with a seeded driver-local
-    * weighted kmeans++ — the standard || recluster step.
-    *
-    * `initMethod`: "kmeans++" (default) or "firstN" (the legacy
-    * lowest-id seed — kept for comparison and for corpora known to be
-    * pre-shuffled, where it saves the seeding passes). */
+    * weighted kmeans++ — the standard || recluster step. This is the
+    * one seeding every IVF entry point uses. */
   def centroids(corpus: DataFrame, idCol: String, vecCol: String,
                 nLists: Int = 16, refineIters: Int = 1,
-                seed: Long = 42L, initMethod: String = "kmeans++"): DataFrame = {
-    var cents = initMethod match {
-      case "firstN" =>
-        corpus.orderBy(col(idCol)).limit(nLists)
-          .select(monotonically_increasing_id().as("list_id"),
-            col(vecCol).cast("array<double>").as("cvec"))
-      case "kmeans++" => kmeansParallelInit(corpus, idCol, vecCol, nLists, seed)
-      case other => throw new IllegalArgumentException(
-        s"initMethod must be kmeans++ or firstN, got $other")
-    }
+                seed: Long = 42L): DataFrame = {
+    var cents = kmeansParallelInit(corpus, idCol, vecCol, nLists, seed)
     for (_ <- 0 until refineIters) {
       val assigned = assignLists(
         corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
@@ -201,7 +191,7 @@ object Similarity {
           }
         }
         // pad a too-small pool (tiny corpus / zero distances) with the
-        // lowest-id rows so list count matches the legacy contract
+        // lowest-id rows so the list count is min(nLists, non-null rows)
         if (pool.size < nLists) add(v.orderBy(col("__cid")).limit(nLists + pool.size).collect())
         // population weights for the || recluster step
         val keyed = pool.toSeq.sortBy(_._1)
@@ -324,10 +314,9 @@ object Similarity {
               queries: DataFrame, qidCol: String, qvecCol: String,
               k: Int = 10, nLists: Int = 0, nProbe: Int = 0,
               refineIters: Int = 1, seed: Long = 42L,
-              initMethod: String = "kmeans++",
               queryBudget: Long = DefaultQueryBudget): DataFrame =
     Ivf.topK(corpus, idCol, vecCol, queries, qidCol, qvecCol, k, nLists, nProbe,
-      rerank = 0, refineIters, seed, initMethod, Ivf.ExactFit, queryBudget, "ivfTopK")
+      rerank = 0, refineIters, seed, Ivf.ExactFit, queryBudget, "ivfTopK")
 
   /** IVF top-k with RUNTIME recall calibration — the nProbe THIS corpus
     * needs, which the √nLists heuristic cannot give on hostile neighbor
@@ -347,11 +336,10 @@ object Similarity {
                         nLists: Int = 0, nProbe: Int = 0,
                         maxProbeFactor: Int = 16,
                         refineIters: Int = 1, seed: Long = 42L,
-                        initMethod: String = "kmeans++",
                         queryBudget: Long = DefaultQueryBudget): DataFrame =
     Ivf.calibrated(corpus, idCol, vecCol, queries, qidCol, qvecCol, k,
       targetRecall, sampleQueries, nLists, nProbe, maxProbeFactor, rerank = None,
-      refineIters, seed, initMethod, Ivf.ExactFit, queryBudget, "ivfTopKCalibrated")
+      refineIters, seed, Ivf.ExactFit, queryBudget, "ivfTopKCalibrated")
 
   /** Persist an IVF index: the assigned corpus written as parquet
     * PARTITIONED BY list_id (one directory per inverted list) plus the
@@ -361,9 +349,8 @@ object Similarity {
     * scan's PartitionFilters; asserted in PlanQualitySpec). */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     path: String, nLists: Int = 0,
-                    refineIters: Int = 1, seed: Long = 42L,
-                    initMethod: String = "kmeans++"): Unit =
-    Ivf.build(corpus, idCol, vecCol, path, nLists, refineIters, seed, initMethod,
+                    refineIters: Int = 1, seed: Long = 42L): Unit =
+    Ivf.build(corpus, idCol, vecCol, path, nLists, refineIters, seed,
       Ivf.ExactFit, "graft_ivf_build")
 
   /** Append a batch to a persisted [[buildIvfIndex]] index WITHOUT
@@ -381,14 +368,15 @@ object Similarity {
     * at. The index stores the vectors, so build + every append IS the
     * corpus of record: centroids retrain, every row re-assigns, the
     * drift series restarts ([[Ivf.rebuild]]). `nLists <= 0` re-derives
-    * √N from the CURRENT row count — an index that grew 4× gets 2×. */
+    * √N from the CURRENT row count — an index that grew 4× gets 2×.
+    * It is also the conversion for an index with no `stats` table,
+    * which [[appendToIvfIndex]] refuses. */
   def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      nLists: Int = 0, refineIters: Int = 1, seed: Long = 42L,
-                      initMethod: String = "kmeans++"): Unit = {
+                      nLists: Int = 0, refineIters: Int = 1, seed: Long = 42L): Unit = {
     val lists = spark.read.parquet(s"$path/lists")
     val (idCol, vecCol) = Ivf.storedCols(Ivf.Exact, lists)
     Ivf.rebuild(spark, path)(tmp => buildIvfIndex(lists.select(col(idCol), col(vecCol)),
-      idCol, vecCol, tmp, nLists, refineIters, seed, initMethod))
+      idCol, vecCol, tmp, nLists, refineIters, seed))
   }
 
   /** Query a persisted IVF index: rank lists per query against the

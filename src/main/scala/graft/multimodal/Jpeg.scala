@@ -25,8 +25,7 @@ object Jpeg {
     // NonFatal only: corrupt entropy data → null, but VM errors must
     // propagate (allocation is pre-guarded from header dims, so a
     // hostile header cannot reach an OOM in the first place)
-    try decode0(b) catch { case scala.util.control.NonFatal(e) =>
-      if (sys.env.contains("GRAFT_JPEG_DEBUG")) e.printStackTrace(); null }
+    try decode0(b) catch { case scala.util.control.NonFatal(_) => null }
 
   private final class Huff {
     // canonical decode tables per spec F.2.2.3

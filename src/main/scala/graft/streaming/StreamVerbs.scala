@@ -227,7 +227,7 @@ object StreamVerbs {
     *
     * What this verb does NOT do: dedup rows within one micro-batch
     * against each other (the probe is index-only — compose
-    * [[streamingContentDedup]] / [[streamingNearDedup]] upstream for
+    * [[streamingContentDedup]] / [[streamingSignatureDedup]] upstream for
     * intra-stream duplicates, the stream-composition convention), and
     * it does not compact — watch [[graft.ml.Dedup.NearDupAppendStats]]
     * from the appends or [[graft.operators.Audit.indexHealth]] and run

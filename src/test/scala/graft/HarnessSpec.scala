@@ -85,4 +85,19 @@ class HarnessSpec extends GraftSpec {
     assert(PlanDump.renumbered("M$$$Lambda$4179/0x00007f5e2524@dc72335 N$$$Lambda$12/0x0a@1f " +
       "M$$$Lambda$4179/0x00007f5e2524@dc72335") == "M$$$Lambda0 N$$$Lambda1 M$$$Lambda0")
   }
+
+  test("PlanDump: RDD ids, call-site lines and array hashes renumber like expression ids") {
+    // a frame built from an RDD prints the RDD's id and the source line
+    // that built it, an array literal its identity hash; none may leak
+    // into a plan file
+    def scan(rdd: Int, line: Int, hash: String) =
+      s"[a#12L], MapPartitionsRDD[$rdd] at createDataFrame at Dedup.scala:$line, ExistingRDD\n" +
+        s"[b#13L], MapPartitionsRDD[${rdd + 2}] at localCheckpoint at Dedup.scala:${line + 9}\n" +
+        s"pqtable(q#14, [D@$hash, 16, 64, 4)"
+    val later = PlanDump.renumbered(scan(1315, 864, "3b00a7b9"))
+    assert(later == PlanDump.renumbered(scan(7, 845, "64f514d2")))
+    assert(later == "[a#0L], MapPartitionsRDD[0] at createDataFrame at Dedup.scala:0, " +
+      "ExistingRDD\n[b#1L], MapPartitionsRDD[1] at localCheckpoint at Dedup.scala:1\n" +
+      "pqtable(q#2, [D@0, 16, 64, 4)", later)
+  }
 }

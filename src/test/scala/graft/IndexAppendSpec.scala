@@ -400,6 +400,28 @@ class IndexAppendSpec extends GraftSpec {
     assert(s2.drift < 1.5 && s2.generation == 1L, s2.toString)
   }
 
+  test("IVF append refuses an index without a stats table; rebuildIvfIndex converts it") {
+    val dir = tmp("ivfnostats")
+    Similarity.buildIvfIndex(clustered(200, 0L, seed = 5), "id", "vec", dir, nLists = 8)
+    // an index built before drift tracking has no stats/ table
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/stats"), true)
+    def listing() = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    val before = listing()
+    val batch = clustered(50, 1000L, seed = 5)
+    val e = intercept[IllegalArgumentException](
+      Similarity.appendToIvfIndex(batch, "id", "vec", dir))
+    assert(e.getMessage.contains("rebuildIvfIndex"), e.getMessage)
+    assert(listing() == before, "the refused append wrote into the index")
+    Similarity.rebuildIvfIndex(spark, dir, nLists = 8)
+    val stats = Similarity.appendToIvfIndex(batch, "id", "vec", dir)
+    assert(stats.generation == 1L && !stats.drift.isNaN && !stats.drift.isInfinite,
+      stats.toString)
+  }
+
   test("IVF-PQ rebuild: frozen compression geometry, fresh codebook, stats reset") {
     val dir = tmp("pqrebuild")
     val a = clustered(300, 0L, seed = 13)

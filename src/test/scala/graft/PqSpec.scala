@@ -114,8 +114,7 @@ class PqSpec extends GraftSpec {
     val corpus = (1L to 16L).map(i => (i, randVec(r, 8))).toDF("id", "v")
     val queries = corpus.filter(col("id") < 4)
     val pq = Pq.ivfPqTopK(corpus, "id", "v", queries, "id", "v",
-      k = 15, m = 4, pqK = 16, nLists = 2, nProbe = 2, iters = 0,
-      residual = true)
+      k = 15, m = 4, pqK = 16, nLists = 2, nProbe = 2, iters = 0)
       .select(col("query_id"), col("nn_id"), col("cos_sim"))
     val bf = Similarity.bruteForceTopK(corpus, "id", "v", queries, "id", "v",
       k = 15).select(col("query_id"), col("nn_id"),
@@ -152,35 +151,47 @@ class PqSpec extends GraftSpec {
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val exact = topSets(Similarity.bruteForceTopK(emb, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 10))
-    def recallOf(residual: Boolean) = {
-      val got = topSets(Pq.ivfPqTopK(emb, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 10, m = 16, pqK = 64,
-        nLists = 16, nProbe = 8, iters = 1, residual = residual))
-      exact.keys.toSeq.map(q =>
-        (exact(q) intersect got(q)).size.toDouble / exact(q).size).sum / exact.size
-    }
-    val (rRaw, rRes) = (recallOf(false), recallOf(true))
-    info(f"recall@10 same geometry: raw=$rRaw%.3f residual=$rRes%.3f")
-    // residual quantization error is a subset of raw error by
-    // construction; allow one-neighbor slack for ADC tie reshuffles
-    assert(rRes >= rRaw - 0.02, f"residual $rRes%.3f vs raw $rRaw%.3f")
+    val got = topSets(Pq.ivfPqTopK(emb, "vec_id", "embedding",
+      queries, "vec_id", "embedding", k = 10, m = 16, pqK = 64,
+      nLists = 16, nProbe = 8, iters = 1))
+    val rRes = exact.keys.toSeq.map(q =>
+      (exact(q) intersect got(q)).size.toDouble / exact(q).size).sum / exact.size
+    info(f"recall@10: residual=$rRes%.3f")
+    // raw codes read 0.500 at this geometry before the raw IVF-PQ mode
+    // was dropped; residual quantization error is a subset of raw error
+    // by construction, with one-neighbor slack for ADC tie reshuffles
+    val rRaw = 0.500
+    assert(rRes >= rRaw - 0.02, f"residual $rRes%.3f vs recorded raw $rRaw%.3f")
   }
 
-  test("pre-r14 index without a residual column reads as raw and still answers") {
+  test("a raw-model index is refused; rebuildIvfPqIndex converts it") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").limit(400)
-    val path = tmpPath("graft-test-ivfpq-prer14")
+    val path = tmpPath("graft-test-ivfpq-raw")
     Pq.buildIvfPqIndex(emb, "vec_id", "embedding", path,
-      m = 16, pqK = 32, nLists = 4, iters = 0, residual = false)
-    // strip the version column to simulate an r13-built index
-    val legacy = spark.read.parquet(s"$path/model").drop("residual").collect()
-    val schema = org.apache.spark.sql.types.StructType(
-      spark.read.parquet(s"$path/model").drop("residual").schema)
-    spark.createDataFrame(java.util.Arrays.asList(legacy: _*), schema)
+      m = 16, pqK = 32, nLists = 4, iters = 0)
+    // strip the version column: the model row of an index built before
+    // residual codes, which reads as a raw codebook
+    val model = spark.read.parquet(s"$path/model").drop("residual")
+    spark.createDataFrame(java.util.Arrays.asList(model.collect(): _*), model.schema)
       .write.mode("overwrite").parquet(s"$path/model")
+    def listing() = {
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$path/lists"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    val before = listing()
     val queries = emb.filter(col("vec_id") < 3)
+    val batch = queries.select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+    val e1 = intercept[IllegalArgumentException](Pq.ivfPqTopKIndexed(spark, path,
+      queries, "vec_id", "embedding", k = 5, nProbe = 2))
+    val e2 = intercept[IllegalArgumentException](
+      Pq.appendToIvfPqIndex(batch, "vec_id", "embedding", path))
+    Seq(e1, e2).foreach(e => assert(e.getMessage.contains("rebuildIvfPqIndex"), e.getMessage))
+    assert(listing() == before, "a refused call wrote into lists/")
+    Pq.rebuildIvfPqIndex(emb, "vec_id", "embedding", path, nLists = 4, iters = 0)
     val res = Pq.ivfPqTopKIndexed(spark, path, queries, "vec_id", "embedding",
       k = 5, nProbe = 2)
-    assert(res.count() == 15)
+    assert(res.groupBy("query_id").count().collect().map(_.getLong(1)).toSeq == Seq(5L, 5L, 5L))
   }
 
   test("persisted IVF-PQ index: prunes to probed lists, answers like the direct path, re-ranks from source vectors") {
